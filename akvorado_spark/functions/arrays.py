@@ -4,23 +4,40 @@
 ``arrayCompact``, used by the reference to derive Dst1st/2nd/3rdAS from
 the AS path (reference: orchestrator/clickhouse/migrations_helpers.go:380-384).
 Implemented with built-in higher-order functions (filter + lag via
-zip_with on a shifted copy) so it stays JVM-side.
+element_at on the same array) so it stays JVM-side.
+
+``sql_literal`` renders plan-time constants (codebooks, hyperplanes,
+corpus tokens) as Spark SQL literal text for the operators that build
+their folds as SQL.
 """
 
 from __future__ import annotations
+
+import numbers
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def array_compact(arr: Column) -> Column:
-    """Remove consecutive duplicate elements, keeping order.
-
-    filter(arr, (x, i) -> i == 0 OR x != arr[i-1]) — null-safe via
-    a not-distinct comparison.
-    """
-    return F.filter(
-        arr,
-        lambda x, i: (i == F.lit(0))
-        | ~x.eqNullSafe(F.element_at(arr, i)),  # element_at is 1-based → arr[i-1]
+def array_compact(arr: str) -> Column:
+    """Remove consecutive duplicate elements of the SQL operand ``arr``,
+    keeping order — null-safe via a not-distinct comparison
+    (``element_at`` is 1-based, so ``element_at(arr, i)`` is arr[i-1])."""
+    return F.expr(
+        f"filter({arr}, (x, i) -> i = 0 OR NOT (x <=> element_at({arr}, i)))"
     )
+
+
+def sql_literal(v) -> str:
+    """A Python int, float, str or (nested) list of them as Spark SQL
+    literal text.  Floats render exactly (shortest round-trip ``repr``
+    with the ``D`` suffix — a bare ``0.0`` would be DECIMAL); strings
+    render as UTF-8 hex cast to STRING, so no SQL quoting rule applies
+    to corpus-derived text."""
+    if isinstance(v, str):
+        return f"CAST(X'{v.encode('utf-8').hex()}' AS STRING)"
+    if isinstance(v, numbers.Integral):
+        return str(int(v))
+    if isinstance(v, numbers.Real):
+        return f"{float(v)!r}D"
+    return f"array({', '.join(sql_literal(x) for x in v)})"

@@ -21,84 +21,55 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from akvorado_spark.functions.memo import LruMemo
+from akvorado_spark.functions.arrays import sql_literal
+from akvorado_spark.operators.text import WORDS_SQL
 
 END = "</w>"  # end-of-word marker, merged like any other symbol
-
-# finished Column trees keyed by (kind, operand text[, merge pair]):
-# each higher-order-function construction costs ~50-350 ms of py4j
-# round trips (r13 measurement: 16 _merge_expr builds = 5.8 s of the
-# vocab_suite build), while the finished expression is immutable and
-# the deterministic trainer re-derives the same merges every
-# invocation, so the keys recur
-_EXPR_MEMO = LruMemo(maxsize=256)
 
 
 def word_counts(df: DataFrame, text_col: str) -> DataFrame:
     """(word, n) frequency table — the one corpus-sized aggregation."""
-    from akvorado_spark.operators.text import words
-
     return (
-        df.select(F.explode(words(F.col(text_col))).alias("word"))
+        df.select(F.expr(f"explode({WORDS_SQL.format(text_col)}) AS word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
     )
 
 
-def _char_symbols(word):
+def _char_symbols(word: str):
     """word → [c1, c2, ..., END] as array<string> (codegen, no UDF).
 
     The empty-word branch is explicit: Spark's ``sequence(1, 0)``
     DESCENDS to [1, 0] instead of returning [], which would fabricate
     two empty symbols for a zero-length word."""
-    def build():
-        chars = F.when(
-            F.length(word) > 0,
-            F.transform(
-                F.sequence(F.lit(1), F.length(word)),
-                lambda i: word.substr(i, F.lit(1)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        return F.concat(chars, F.array(F.lit(END)))
-
-    return _EXPR_MEMO.get_or_build(("chars", str(word)), build)
+    return F.expr(
+        f"concat(CASE WHEN length({word}) > 0"
+        f" THEN transform(sequence(1, length({word})), i -> substr({word}, i, 1))"
+        f" ELSE CAST(array() AS ARRAY<STRING>) END, array({sql_literal(END)}))"
+    )
 
 
-def _merge_expr(syms, a: str, b: str):
+def _merge_expr(syms: str, a: str, b: str):
     """Greedy left-to-right merge of adjacent (a, b) into a+b — an
     aggregate fold; ``get`` (not element_at) keeps the empty-accumulator
-    probe null-safe under ANSI."""
-    def build():
-        merged = F.lit(a + b)
-        return F.aggregate(
-            syms,
-            F.array().cast("array<string>"),
-            lambda acc, s: F.when(
-                (F.get(acc, F.size(acc) - 1) == a) & (s == F.lit(b)),
-                F.concat(
-                    F.slice(acc, 1, F.size(acc) - 1), F.array(merged)
-                ),
-            ).otherwise(F.concat(acc, F.array(s))),
-        )
-
-    return _EXPR_MEMO.get_or_build(("merge", str(syms), a, b), build)
+    probe null-safe under ANSI.  Symbols render as hex literals."""
+    la, lb, lab = sql_literal(a), sql_literal(b), sql_literal(a + b)
+    return F.expr(
+        f"aggregate({syms}, CAST(array() AS ARRAY<STRING>), (acc, s) ->"
+        f" CASE WHEN get(acc, size(acc) - 1) = {la} AND s = {lb}"
+        f" THEN concat(slice(acc, 1, size(acc) - 1), array({lab}))"
+        " ELSE concat(acc, array(s)) END)"
+    )
 
 
 def _pair_counts(vocab: DataFrame) -> DataFrame:
-    def build():
-        m = F.greatest(F.size(F.col("syms")) - 1, F.lit(1))
-        return F.when(
-            F.size(F.col("syms")) >= 2,
-            F.zip_with(
-                F.slice(F.col("syms"), 1, m),
-                F.slice(F.col("syms"), 2, m),
-                lambda x, y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
-
-    pairs = _EXPR_MEMO.get_or_build(("pairs", "syms"), build)
+    pairs = (
+        "CASE WHEN size(syms) >= 2 THEN zip_with(slice(syms, 1, greatest(size(syms) - 1, 1)),"
+        " slice(syms, 2, greatest(size(syms) - 1, 1)), (x, y) -> named_struct('a', x, 'b', y))"
+        " ELSE CAST(array() AS ARRAY<STRUCT<a: STRING, b: STRING>>) END"
+    )
     return (
-        vocab.select(F.col("n"), F.explode(pairs).alias("p"))
+        vocab.select(F.col("n"), F.expr(f"explode({pairs}) AS p"))
         .groupBy("p.a", "p.b")
         .agg(F.sum("n").alias("cnt"))
     )
@@ -120,7 +91,7 @@ def train_bpe(
     """
     wc = counts if counts is not None else word_counts(df, text_col)
     vocab = wc.select(
-        "n", _char_symbols(F.col("word")).alias("syms")
+        "n", _char_symbols("word").alias("syms")
     ).localCheckpoint()
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
@@ -135,7 +106,7 @@ def train_bpe(
         a, b = top[0]["a"], top[0]["b"]
         merges.append((a, b))
         vocab = vocab.select(
-            "n", _merge_expr(F.col("syms"), a, b).alias("syms")
+            "n", _merge_expr("syms", a, b).alias("syms")
         ).localCheckpoint()
     return merges
 
@@ -152,9 +123,9 @@ def segment_words(
     local checkpoints every ``chunk`` merges keep the expression tree
     bounded.  Run on DISTINCT words and broadcast-join the result back
     to the corpus — application cost is vocabulary-sized."""
-    out = words_df.withColumn(out_col, _char_symbols(F.col(word_col)))
+    out = words_df.withColumn(out_col, _char_symbols(word_col))
     for i, (a, b) in enumerate(merges):
-        out = out.withColumn(out_col, _merge_expr(F.col(out_col), a, b))
+        out = out.withColumn(out_col, _merge_expr(out_col, a, b))
         if (i + 1) % chunk == 0:
             out = out.localCheckpoint()
     return out
@@ -185,8 +156,6 @@ def bpe_token_counts(
     per-document sum (``Σ tf·tokens(word)``, exactly the per-occurrence
     sum) then derive from that aggregated table instead of re-exploding
     the corpus."""
-    from akvorado_spark.operators.text import words
-
     if tf is not None:
         seg = segment_words(
             tf.select(F.col("term").alias("word")).distinct(), merges
@@ -198,7 +167,7 @@ def bpe_token_counts(
             .groupBy(id_col)
             .agg(F.sum(F.col("tf") * F.col("__nt")).alias("n_bpe_tokens"))
         )
-    toks = df.select(F.col(id_col), F.explode(words(F.col(text_col))).alias("word"))
+    toks = df.select(F.col(id_col), F.expr(f"explode({WORDS_SQL.format(text_col)}) AS word"))
     seg = segment_words(toks.select("word").distinct(), merges).select(
         "word", F.size("tokens").alias("__nt")
     )

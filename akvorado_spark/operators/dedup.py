@@ -23,13 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from akvorado_spark.functions.memo import LruMemo
-
-# finished Column trees for the wide per-bit expression sets (simhash
-# votes/fingerprint): building 64 shift/when/sum nodes costs ~2-3 s of
-# py4j round trips per invocation (r13 measurement) while the result
-# is an immutable expression tree keyed only by (bits, column names)
-_EXPR_MEMO = LruMemo(maxsize=64)
+from akvorado_spark.operators.text import WORDS_SQL
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -58,21 +52,21 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def word_ngrams(text, n: int = 3):
-    """Distinct word n-grams of a text column (lower-cased, whitespace
-    tokenized) as an array<string> — pure higher-order functions."""
-    words = F.filter(F.split(F.lower(text), r"\s+"), lambda w: w != "")
+def word_ngrams(text: str, n: int = 3) -> str:
+    """Distinct word n-grams of the SQL operand ``text`` (lower-cased,
+    whitespace tokenized) as array<string> SQL text — pure
+    higher-order functions."""
+    words = WORDS_SQL.format(text)
     # fold zip_with over n shifted views: n-1 vectorized passes instead
     # of a per-index transform+slice that re-walks the array per gram
     # (measured 7× on the shingle stage; same strings, array_distinct'd)
-    m = F.greatest(F.size(words) - (n - 1), F.lit(1))
-    grams = F.slice(words, 1, m)
+    m = f"greatest(size({words}) - {n - 1}, 1)"
+    grams = f"slice({words}, 1, {m})"
     for j in range(1, n):
-        grams = F.zip_with(
-            grams, F.slice(words, j + 1, m), lambda a, b: F.concat_ws(" ", a, b)
-        )
-    return F.array_distinct(
-        F.when(F.size(words) >= n, grams).otherwise(F.array(F.concat_ws(" ", words)))
+        grams = f"zip_with({grams}, slice({words}, {j + 1}, {m}), (a, b) -> concat_ws(' ', a, b))"
+    return (
+        f"array_distinct(CASE WHEN size({words}) >= {n} THEN {grams}"
+        f" ELSE array(concat_ws(' ', {words})) END)"
     )
 
 
@@ -81,20 +75,22 @@ def word_ngrams(text, n: int = 3):
 # ---------------------------------------------------------------------------
 
 
-def seeded_xxhash64(col, seed: int):
+# Hash callables map SQL operand text to SQL text.
+
+
+def seeded_xxhash64(col: str, seed: int) -> str:
     """Production seeded hash: JVM-intrinsic xxhash64."""
-    return F.xxhash64(col, F.lit(seed))
+    return f"xxhash64({col}, {seed})"
 
 
-def portable_seeded_hash(col, seed: int):
+def portable_seeded_hash(col: str, seed: int) -> str:
     """Engine-portable seeded hash (56-bit md5 prefix of 'seed|value')
     DuckDB can reproduce bit-identically — used to oracle-certify the
     sketch pipelines; xxhash64 stays the production path."""
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"{seed}|"), col.cast("string")).cast("binary")), 1, 14),
-        16,
-        10,
-    ).cast("long")
+    return (
+        f"CAST(conv(substring(md5(CAST(concat('{int(seed)}|', CAST({col} AS STRING))"
+        " AS BINARY)), 1, 14), 16, 10) AS BIGINT)"
+    )
 
 
 # --- one-base-hash + affine-mix families ----------------------------------
@@ -118,25 +114,21 @@ def mix_constants(seed: int) -> tuple[int, int, int]:
     return a1, a2, b
 
 
-def affine_mix(h, seed: int):
-    """Seed-indexed permutation of a 56-bit base hash (Column in,
-    Column out); mirrored textually by the certified oracle SQL."""
+def affine_mix(h: str, seed: int) -> str:
+    """Seed-indexed permutation of a 56-bit base hash (SQL text in, SQL
+    text out); mirrored textually by the certified oracle SQL."""
     a1, a2, b = mix_constants(seed)
-    hi = F.shiftright(h, 28)
-    lo = h.bitwiseAND(F.lit(_MIX_MASK28))
-    return (hi * F.lit(a1) + lo * F.lit(a2) + F.lit(b)) % F.lit(MIX_MOD)
+    return f"((shiftright({h}, 28) * {a1} + ({h} & {_MIX_MASK28}) * {a2} + {b}) % {MIX_MOD})"
 
 
-def portable_base_hash(col):
+def portable_base_hash(col: str) -> str:
     """56-bit md5 prefix of the value — one evaluation per shingle."""
-    return F.conv(
-        F.substring(F.md5(col.cast("string").cast("binary")), 1, 14), 16, 10
-    ).cast("long")
+    return f"CAST(conv(substring(md5(CAST(CAST({col} AS STRING) AS BINARY)), 1, 14), 16, 10) AS BIGINT)"
 
 
-def xxhash64_base_hash(col):
+def xxhash64_base_hash(col: str) -> str:
     """Production base hash, masked into the 56-bit mix domain."""
-    return F.xxhash64(col).bitwiseAND(F.lit(MIX_MOD - 1))
+    return f"(xxhash64({col}) & {MIX_MOD - 1})"
 
 
 # hash_fn → (base, mix) upgrade map: pipelines passing one of the two
@@ -147,11 +139,11 @@ HASH_FAMILIES = {
 }
 
 
-def minhash_signature_expr(grams, n_hashes: int = 32, hash_fn=seeded_xxhash64):
-    """MinHash signature (array<long>) as a PURE EXPRESSION over a gram
-    ARRAY column — no explode, no shuffle.  Bit-identical to
-    :func:`minhash_signatures` (asserted in tests): the per-doc group-by
-    there becomes an ``array_min`` here.
+def minhash_signature_expr(grams: str, n_hashes: int = 32, hash_fn=seeded_xxhash64):
+    """MinHash signature (array<long>) as a PURE EXPRESSION over the
+    gram-array SQL operand ``grams`` — no explode, no shuffle.
+    Bit-identical to :func:`minhash_signatures` (asserted in tests):
+    the per-doc group-by there becomes an ``array_min`` here.
 
     This is the streaming-safe form: a stateless narrow projection that
     Structured Streaming can run in append mode with no aggregation
@@ -159,51 +151,30 @@ def minhash_signature_expr(grams, n_hashes: int = 32, hash_fn=seeded_xxhash64):
     Batch pipelines keep :func:`minhash_signatures` when they already
     materialize the exploded gram frame for the verify join.
     """
-    # seed binding must NOT add a lambda parameter: PySpark reads a
-    # 2-arg lambda as (element, array_index) and would pass the index
-    # as the seed
-    def _one_arg(fn, seed):
-        return lambda x: fn(x, seed)
-
     family = HASH_FAMILIES.get(hash_fn)
     if family is not None:
         base_fn, mix = family
-        bases = F.transform(grams, base_fn)
-        mins = [
-            F.array_min(F.transform(bases, _one_arg(mix, i)))
-            for i in range(n_hashes)
-        ]
+        bases = f"transform({grams}, g -> {base_fn('g')})"
+        mins = [f"array_min(transform({bases}, h -> {mix('h', i)}))" for i in range(n_hashes)]
     else:
-        mins = [
-            F.array_min(F.transform(grams, _one_arg(hash_fn, i)))
-            for i in range(n_hashes)
-        ]
-    return F.array(*mins)
+        mins = [f"array_min(transform({grams}, g -> {hash_fn('g', i)}))" for i in range(n_hashes)]
+    return F.expr(f"array({', '.join(mins)})")
 
 
-def band_buckets_expr(signature, bands: int, n_hashes: int, hash_fn=seeded_xxhash64):
-    """array<long> of per-band bucket keys for a signature column —
-    the same slice-hash :func:`lsh_candidate_pairs` uses, exposed as an
-    expression so streaming (and any caller holding signatures as a
-    column) buckets identically to the batch path."""
+def band_buckets_expr(signature: str, bands: int, n_hashes: int, hash_fn=seeded_xxhash64):
+    """array<long> of per-band bucket keys for the signature SQL
+    operand — the same slice-hash :func:`lsh_candidate_pairs` uses,
+    exposed as an expression so streaming (and any caller holding
+    signatures as a column) buckets identically to the batch path."""
     rows_per_band = max(n_hashes // bands, 1)
-    return F.array(
-        *[
-            hash_fn(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.element_at(signature, b * rows_per_band + r + 1).cast(
-                            "string"
-                        )
-                        for r in range(rows_per_band)
-                    ],
-                ),
-                b,
-            )
-            for b in range(bands)
-        ]
-    )
+    keys = []
+    for b in range(bands):
+        parts = ", ".join(
+            f"CAST(element_at({signature}, {b * rows_per_band + r + 1}) AS STRING)"
+            for r in range(rows_per_band)
+        )
+        keys.append(hash_fn(f"concat_ws(',', {parts})", b))
+    return F.expr(f"array({', '.join(keys)})")
 
 
 def corpus_grams(df: DataFrame, text_col: str, id_col: str, ngram: int = 3) -> DataFrame:
@@ -213,9 +184,7 @@ def corpus_grams(df: DataFrame, text_col: str, id_col: str, ngram: int = 3) -> D
     ``persist()`` it: shingling is the most expensive narrow stage
     (regex split + per-gram slice/concat), and without materialization
     every downstream branch replays it against the full corpus."""
-    return df.select(
-        F.col(id_col), F.explode(word_ngrams(F.col(text_col), ngram)).alias("__g")
-    )
+    return df.select(F.col(id_col), F.expr(f"explode({word_ngrams(text_col, ngram)}) AS __g"))
 
 
 def minhash_signatures(
@@ -243,28 +212,13 @@ def minhash_signatures(
         base_fn, mix = family
         # Project the base hash BEFORE the aggregate so it is computed
         # once per shingle row regardless of codegen CSE behavior.
-        grams = grams.withColumn("__b", base_fn(F.col("__g")))
-        # canonical families are module-level functions → a stable memo
-        # key; the n_hashes Column list is rebuilt every invocation
-        # otherwise (py4j round trips, r13)
-        mins = _EXPR_MEMO.get_or_build(
-            ("minhash_mins", hash_fn.__module__, hash_fn.__qualname__, n_hashes),
-            lambda: [
-                F.min(mix(F.col("__b"), i)).alias(f"__m{i}")
-                for i in range(n_hashes)
-            ],
-        )
+        grams = grams.withColumn("__b", F.expr(base_fn("__g")))
+        mins = [F.expr(f"min({mix('__b', i)}) AS __m{i}") for i in range(n_hashes)]
     else:
-        mins = [
-            F.min(hash_fn(F.col("__g"), i)).alias(f"__m{i}")
-            for i in range(n_hashes)
-        ]
+        mins = [F.expr(f"min({hash_fn('__g', i)}) AS __m{i}") for i in range(n_hashes)]
     sig = grams.groupBy(id_col).agg(*mins)
-    signature = _EXPR_MEMO.get_or_build(
-        ("minhash_sig_array", n_hashes),
-        lambda: F.array(*[F.col(f"__m{i}") for i in range(n_hashes)]),
-    )
-    return sig.select(id_col, signature.alias("signature"))
+    signature = ", ".join(f"__m{i}" for i in range(n_hashes))
+    return sig.select(id_col, F.expr(f"array({signature}) AS signature"))
 
 
 def lsh_candidate_pairs(
@@ -306,7 +260,7 @@ def lsh_candidate_pairs(
     banded = signatures.select(
         F.col(id_col),
         F.posexplode(
-            band_buckets_expr(F.col("signature"), bands, n, hash_fn)
+            band_buckets_expr("signature", bands, n, hash_fn)
         ).alias("band", "bucket"),
     )
     if max_bucket is None:
@@ -349,12 +303,7 @@ def lsh_candidate_pairs(
     if max_bucket >= 2:
         edges = F.when(
             F.col("__rn") <= max_bucket,
-            F.transform(
-                F.col("__prev"),
-                lambda p: F.struct(
-                    p.alias("id_a"), F.col("__id").alias("id_b")
-                ),
-            ),
+            F.expr("transform(__prev, p -> named_struct('id_a', p, 'id_b', __id))"),
         ).otherwise(star)
     else:  # k == 1: no clique, pure star from the bucket minimum
         # (no otherwise: explode drops the NULL on the rank-1 row)
@@ -379,16 +328,13 @@ def _bucket_pairs(buckets: DataFrame, max_bucket: int | None = None) -> DataFram
     which never materializes an uncapped id array."""
     if max_bucket is not None:  # pragma: no cover - guard for old callers
         raise ValueError("capped expansion moved into lsh_candidate_pairs")
-    ids = F.array_sort(F.col("__ids"))
-    pair_arrays = F.transform(
-        ids,
-        lambda x, i: F.transform(
-            F.slice(ids, i + 2, F.size(ids)),
-            lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-        ),
+    ids = "array_sort(__ids)"
+    pair_arrays = (
+        f"transform({ids}, (x, i) -> transform(slice({ids}, i + 2, size({ids})),"
+        " y -> named_struct('id_a', x, 'id_b', y)))"
     )
     return (
-        buckets.select(F.explode(F.flatten(pair_arrays)).alias("__p"))
+        buckets.select(F.expr(f"explode(flatten({pair_arrays})) AS __p"))
         .select("__p.id_a", "__p.id_b")
         .distinct()
     )
@@ -466,35 +412,21 @@ def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 64, hash_fn=N
     ``hash_fn`` swaps the word hash (default xxhash64; pass the portable
     md5-prefix hash with ``bits<=56`` for oracle certification).
     """
-    wh = hash_fn or F.xxhash64
+    wh = hash_fn or (lambda c: f"xxhash64({c})")
     words = df.select(
-        F.col(id_col),
-        F.explode(
-            F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: w != "")
-        ).alias("__w"),
-    ).withColumn("__h", wh(F.col("__w")))
-    vote_cols = _EXPR_MEMO.get_or_build(
-        ("simhash_votes", bits),
-        lambda: [
-            F.sum(
-                F.when(F.shiftright(F.col("__h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"__v{i}")
-            for i in range(bits)
-        ],
-    )
+        F.col(id_col), F.expr(f"explode({WORDS_SQL.format(text_col)}) AS __w")
+    ).withColumn("__h", F.expr(wh("__w")))
+    vote_cols = [
+        F.expr(f"sum(CASE WHEN (shiftright(__h, {i}) & 1) = 1 THEN 1 ELSE -1 END) AS __v{i}")
+        for i in range(bits)
+    ]
     votes = words.groupBy(id_col).agg(*vote_cols)
-
-    def build_fp():
-        fp = None
-        for i in range(bits):
-            bit = F.when(F.col(f"__v{i}") > 0, F.lit(1).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-            term = F.shiftleft(bit, i)
-            fp = term if fp is None else fp.bitwiseOR(term)
-        return fp
-
-    fp = _EXPR_MEMO.get_or_build(("simhash_fp", bits), build_fp)
+    fp = F.expr(
+        " | ".join(
+            f"shiftleft(CASE WHEN __v{i} > 0 THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END, {i})"
+            for i in range(bits)
+        )
+    )
     return votes.select(F.col(id_col), fp.alias("simhash"))
 
 
@@ -722,79 +654,50 @@ def _ascii_code_array(text_col: str):
     """Per-row array of ascii codepoints, one per char.  Materialized
     before the hash array so each 4-gram hash is four element_at
     lookups instead of four substr(·,·,1) string slices — measured 2×
-    on the end-to-end occurrence scan.  Memoized on the column name
-    (r14): the tree is a pure function of it, and each lambda-API
-    construction costs ~45 ms of py4j round trips per build."""
-    return _EXPR_MEMO.get_or_build(
-        ("ascii_codes", text_col),
-        lambda: F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(F.col(text_col)), F.lit(1))),
-            lambda p: F.ascii(F.col(text_col).substr(p, F.lit(1))),
-        ),
+    on the end-to-end occurrence scan."""
+    return F.expr(
+        f"transform(sequence(1, greatest(length({text_col}), 1)),"
+        f" p -> ascii(substr({text_col}, p, 1)))"
     )
 
 
-def _winnow_hash_array(text_col: str, window: int, cs):
+def _winnow_hash_array(text_col: str, window: int, cs: str):
     """Per-row array of 4-gram hashes over the materialized codepoint
     array ``cs``, one per candidate start 0..len-window (empty when the
     doc is shorter than ``window``).  Materialized as its OWN column
     before the selection filter: if the array expression were inlined,
     every element_at in the winnowing predicate would recompute the
     whole array — O(n²·stride) per doc."""
-
-    def h4(i):
-        # 4-gram hash of chars at 0-based i..i+3 (element_at 1-based)
-        return sum(
-            F.element_at(cs, i + F.lit(off)) * F.lit(mul)
-            for off, mul in ((1, 3), (2, 5), (3, 7), (4, 11))
-        )
-
-    def build():
-        n = F.length(F.col(text_col)) - window + 1
-        return F.when(
-            F.length(F.col(text_col)) >= window,
-            F.transform(F.sequence(F.lit(0), n - 1), h4),
-        ).otherwise(F.array().cast("array<int>"))
-
-    return _EXPR_MEMO.get_or_build(
-        ("winnow_hash", text_col, window, str(cs)), build
+    # 4-gram hash of chars at 0-based i..i+3 (element_at 1-based)
+    h4 = " + ".join(
+        f"element_at({cs}, i + {off}) * {mul}" for off, mul in ((1, 3), (2, 5), (3, 7), (4, 11))
+    )
+    return F.expr(
+        f"CASE WHEN length({text_col}) >= {window}"
+        f" THEN transform(sequence(0, length({text_col}) - {window}), i -> {h4})"
+        " ELSE CAST(array() AS ARRAY<INT>) END"
     )
 
 
-def _winnow_select(hs, stride: int):
-    """Anchor starts from a MATERIALIZED hash-array column ``hs``:
-    0-based position ``i`` is selected iff b + f ≥ stride-1, where b/f
-    are the "offset of first failure" folds described above.  Cost is
-    O(n·stride) element_at lookups per doc."""
+def _winnow_select(hs: str, stride: int) -> str:
+    """Anchor starts (SQL text) from a MATERIALIZED hash-array column
+    ``hs``: 0-based position ``i`` is selected iff b + f ≥ stride-1,
+    where b/f are the "offset of first failure" folds described above.
+    Cost is O(n·stride) element_at lookups per doc."""
 
-    def pred(i):
-        hi = F.element_at(hs, i + 1)
-        offs = F.sequence(F.lit(1), F.lit(stride - 1))
-        # element_at index clamped into [1, n]; the in-bounds guard
-        # decides pass/fail, the clamp only keeps it evaluable
-        def look(j):
-            return F.element_at(
-                hs, F.greatest(F.lit(1), F.least(F.size(hs), j + 1))
-            )
+    # element_at index clamped into [1, n]; the in-bounds guard
+    # decides pass/fail, the clamp only keeps it evaluable
+    def look(j):
+        return f"element_at({hs}, greatest(1, least(size({hs}), {j} + 1)))"
 
-        bf = F.array_min(
-            F.filter(offs, lambda o: (i - o >= 0) & (look(i - o) < hi))
-        )
-        ff = F.array_min(
-            F.filter(
-                offs, lambda o: (i + o <= F.size(hs) - 1) & (look(i + o) <= hi)
-            )
-        )
-        b = F.coalesce(bf - 1, F.lit(stride - 1))
-        f = F.coalesce(ff - 1, F.lit(stride - 1))
-        return (b + f) >= stride - 1
-
-    return _EXPR_MEMO.get_or_build(
-        ("winnow_select", str(hs), stride),
-        lambda: F.when(
-            F.size(hs) > 0,
-            F.filter(F.sequence(F.lit(0), F.size(hs) - 1), pred),
-        ).otherwise(F.array().cast("array<int>")),
+    hi = f"element_at({hs}, i + 1)"
+    offs = f"sequence(1, {stride - 1})"
+    bf = f"array_min(filter({offs}, o -> i - o >= 0 AND {look('i - o')} < {hi}))"
+    ff = f"array_min(filter({offs}, o -> i + o <= size({hs}) - 1 AND {look('i + o')} <= {hi}))"
+    pred = f"coalesce({bf} - 1, {stride - 1}) + coalesce({ff} - 1, {stride - 1}) >= {stride - 1}"
+    return (
+        f"CASE WHEN size({hs}) > 0 THEN filter(sequence(0, size({hs}) - 1), i -> {pred})"
+        " ELSE CAST(array() AS ARRAY<INT>) END"
     )
 
 
@@ -838,29 +741,20 @@ def substring_window_occurrences(
         base = (
             df.select(F.col(id_col), F.col(text_col))
             .withColumn("__cs", _ascii_code_array(text_col))
-            .withColumn("__hs", _winnow_hash_array(text_col, window, F.col("__cs")))
+            .withColumn("__hs", _winnow_hash_array(text_col, window, "__cs"))
         )
-        starts = _winnow_select(F.col("__hs"), stride)
+        starts = _winnow_select("__hs", stride)
     else:
-        starts = F.when(
-            F.length(F.col(text_col)) >= window,
-            F.sequence(
-                F.lit(0),
-                F.length(F.col(text_col)) - window,
-                F.lit(stride),
-            ),
-        ).otherwise(F.array().cast("array<int>"))
-    wins = _EXPR_MEMO.get_or_build(
-        ("win_structs", text_col, window, stride, anchored, str(starts)),
-        lambda: F.transform(
-            starts,
-            lambda s: F.struct(
-                s.cast("long").alias("s"),
-                F.col(text_col).substr(s + 1, F.lit(window)).alias("w"),
-            ),
-        ),
+        starts = (
+            f"CASE WHEN length({text_col}) >= {window}"
+            f" THEN sequence(0, length({text_col}) - {window}, {stride})"
+            " ELSE CAST(array() AS ARRAY<INT>) END"
+        )
+    wins = (
+        f"transform({starts}, s -> named_struct('s', CAST(s AS BIGINT),"
+        f" 'w', substr({text_col}, s + 1, {window})))"
     )
-    return base.select(F.col(id_col), F.explode(wins).alias("x")).select(
+    return base.select(F.col(id_col), F.expr(f"explode({wins}) AS x")).select(
         id_col, F.col("x.s").alias("s"), F.col("x.w").alias("w")
     )
 
@@ -896,7 +790,7 @@ def duplicate_window_spans(
     occ = substring_window_occurrences(
         df, text_col, id_col, window, stride, anchored
     )
-    occ = occ.select(id_col, "s", key(F.col("w")).alias("k"))
+    occ = occ.select(id_col, "s", F.expr(f"{key('w')} AS k"))
     # duplicated ⟺ ≥2 distinct docs ⟺ min(id) ≠ max(id) over the
     # content key; a single window pass over one shuffle replaces the
     # aggregate + join-back (same semantics, half the exchange traffic)
@@ -932,52 +826,25 @@ def excise_spans(
     """
     joined = spans.join(docs.select(id_col, text_col), id_col)
 
-    # the four expression trees are pure functions of (text_col,
-    # window) + fixed internal names — memoized as a unit (r14): five
-    # lambda-API constructions ≈ 0.25 s of py4j per build otherwise
-    def build():
-        ss = F.col("starts")
-        w = F.lit(window).cast("long")
-        # filter-lambda indices are 0-based, element_at is 1-based; the
-        # greatest/least clamps keep the (eagerly evaluated) lookups in
-        # bounds at both edges where the other disjunct already decides
-        lo = F.filter(
-            ss,
-            lambda x, i: (i == 0)
-            | ((x - F.element_at(ss, F.greatest(i, F.lit(1)))) > w),
-        )
-        hi = F.transform(
-            F.filter(
-                ss,
-                lambda x, i: (i == F.size(ss) - 1)
-                | ((F.element_at(ss, F.least(i + 2, F.size(ss))) - x) > w),
-            ),
-            lambda x: x + w,
-        )
-        kept_lo = F.concat(F.array(F.lit(0).cast("long")), F.col("__hi"))
-        kept_hi = F.concat(
-            F.col("__lo"), F.array(F.length(F.col(text_col)).cast("long"))
-        )
-        cleaned = F.concat_ws(
-            "",
-            F.zip_with(
-                kept_lo,
-                kept_hi,
-                lambda a, b: F.col(text_col).substr(
-                    a.cast("int") + 1,
-                    F.greatest(b - a, F.lit(0).cast("long")).cast("int"),
-                ),
-            ),
-        )
-        removed = F.aggregate(
-            F.zip_with(F.col("__lo"), F.col("__hi"), lambda a, b: b - a),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        return lo, hi, removed, cleaned
-
-    lo, hi, removed, cleaned = _EXPR_MEMO.get_or_build(
-        ("excise", text_col, window), build
+    w = f"CAST({window} AS BIGINT)"
+    # filter-lambda indices are 0-based, element_at is 1-based; the
+    # greatest/least clamps keep the (eagerly evaluated) lookups in
+    # bounds at both edges where the other disjunct already decides
+    lo = F.expr(
+        f"filter(starts, (x, i) -> i = 0 OR x - element_at(starts, greatest(i, 1)) > {w})"
+    )
+    hi = F.expr(
+        "transform(filter(starts, (x, i) -> i = size(starts) - 1"
+        f" OR element_at(starts, least(i + 2, size(starts))) - x > {w}), x -> x + {w})"
+    )
+    removed = F.expr(
+        "aggregate(zip_with(__lo, __hi, (a, b) -> b - a), CAST(0 AS BIGINT), (acc, v) -> acc + v)"
+    )
+    cleaned = F.expr(
+        "concat_ws('', zip_with(concat(array(CAST(0 AS BIGINT)), __hi),"
+        f" concat(__lo, array(CAST(length({text_col}) AS BIGINT))),"
+        f" (a, b) -> substr({text_col}, CAST(a AS INT) + 1,"
+        " CAST(greatest(b - a, CAST(0 AS BIGINT)) AS INT))))"
     )
     return (
         joined.withColumn("__lo", lo)
@@ -1055,7 +922,7 @@ def line_dedup(
     lines = df.select(
         F.col(id_col),
         F.posexplode(F.split(F.col(text_col), "\n", -1)).alias("__i", "__ln"),
-    ).withColumn("__k", key(F.col("__ln")))
+    ).withColumn("__k", F.expr(key("__ln")))
     wk = Window.partitionBy("__k")
     if min_docs == 2:
         # one window pass: ≥2 distinct docs ⟺ min(id) ≠ max(id)
@@ -1083,26 +950,9 @@ def line_dedup(
         if keep_owner:
             drop = drop & (F.col(id_col) != F.col("__own"))
         marked = joined.withColumn("__drop", drop)
-    # reassembly expression over fixed internal names — memoized (r14):
-    # two lambda-API calls ≈ 0.1 s of py4j per build otherwise
-    cleaned = _EXPR_MEMO.get_or_build(
-        ("line_clean",),
-        lambda: F.concat_ws(
-            "\n",
-            F.transform(
-                F.filter(
-                    F.sort_array(
-                        F.collect_list(
-                            F.struct(
-                                F.col("__i"), F.col("__drop"), F.col("__ln")
-                            )
-                        )
-                    ),
-                    lambda x: ~x["__drop"],
-                ),
-                lambda x: x["__ln"],
-            ),
-        ).alias("cleaned"),
+    cleaned = F.expr(
+        "concat_ws('\\n', transform(filter(sort_array(collect_list(struct(__i, __drop, __ln))),"
+        " x -> NOT x.__drop), x -> x.__ln)) AS cleaned"
     )
     return (
         marked.groupBy(id_col)

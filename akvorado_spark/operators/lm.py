@@ -26,14 +26,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from akvorado_spark.functions.memo import LruMemo
-from akvorado_spark.operators.text import words
+from akvorado_spark.operators.text import WORDS_SQL
 
-# finished bigram-expression trees keyed on (text_col, key_fn): the
-# key_fn is keyed by OBJECT identity (module-level functions like
-# portable_word_hash are stable), so a different callable can never
-# receive another's tree
-_GRAMS_MEMO = LruMemo(maxsize=64)
+
+def _bigram_structs(text_col: str, key_fn=None):
+    """``explode`` of the (w1, w2) struct array of ``text_col``, as ``b``."""
+    ws = WORDS_SQL.format(text_col)
+    if key_fn is not None:
+        ws = f"transform({ws}, w -> {key_fn('w')})"
+    m = f"greatest(size({ws}) - 1, 1)"
+    pairs = f"zip_with(slice({ws}, 1, {m}), slice({ws}, 2, {m}), (a, b) -> named_struct('w1', a, 'w2', b))"
+    grams = f"CASE WHEN size({ws}) >= 2 THEN {pairs} ELSE filter({pairs}, p -> false) END"
+    return F.expr(f"explode({grams}) AS b")
 
 
 def doc_bigrams(
@@ -44,7 +48,7 @@ def doc_bigrams(
     zip_with over two shifted slices — no element_at, no per-index
     rewalk, safe for 0/1-token documents (they produce no rows).
 
-    ``key_fn`` (word Column → key Column) hashes each token ONCE in
+    ``key_fn`` (word SQL text → key SQL text) hashes each token ONCE in
     the projected array before pairing, so everything downstream —
     count-table groupBys, scoring joins — shuffles 8-byte keys instead
     of word strings.  At corpus scale the bigram stream is the whole
@@ -56,28 +60,8 @@ def doc_bigrams(
     bigrams in BOTH engines, so the replay stays exact).  ``key_fn``
     may return any orderable type — the 0/1-token empty branch derives
     its element type from the paired array itself (filter-false), so
-    the when/otherwise branches can never type-mismatch.
-
-    The grams expression is memoized on (text_col, key_fn identity) —
-    a pure function of both; its four lambda-API constructions cost
-    ~0.2 s of py4j per build otherwise (r14)."""
-
-    def build():
-        ws = words(F.col(text_col))
-        if key_fn is not None:
-            ws = F.transform(ws, key_fn)
-        m = F.greatest(F.size(ws) - 1, F.lit(1))
-        pairs = F.zip_with(
-            F.slice(ws, 1, m),
-            F.slice(ws, 2, m),
-            lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-        )
-        return F.when(F.size(ws) >= 2, pairs).otherwise(
-            F.filter(pairs, lambda _: F.lit(False))
-        )
-
-    grams = _GRAMS_MEMO.get_or_build(("doc_bigrams", text_col, key_fn), build)
-    return df.select(F.col(id_col), F.explode(grams).alias("b")).select(
+    the when/otherwise branches can never type-mismatch."""
+    return df.select(F.col(id_col), _bigram_structs(text_col, key_fn)).select(
         id_col, F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2")
     )
 

@@ -43,14 +43,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from akvorado_spark.functions.memo import LruMemo
-
-# finished Column lists for the per-(byte-width, column-set) expansion
-# and resolution expressions: building them costs ~1.5 s of py4j round
-# trips per lpm_rib invocation (r13 profile) while every piece is a
-# pure function of (B, column names) — immutable and reusable
-_EXPR_MEMO = LruMemo(maxsize=128)
-
 
 def _expand_to_bytes(
     pfx: DataFrame, B: int, prefix_lo: str, prefix_len: str, keep: list[str]
@@ -59,30 +51,14 @@ def _expand_to_bytes(
     keys of width B (dimension-side; hex string ops are fine here).
     ``keep`` are column *names* carried through unchanged."""
     p = pfx.filter(F.ceil(F.col(prefix_len) / 8) == B).filter(F.col(prefix_len) > 0)
-
-    def build_exp_cols():
-        nexp = F.pow(F.lit(2), B * 8 - F.col(prefix_len)).cast("long")
-        base_hex = F.substring(F.lower(F.hex(F.col(prefix_lo))), 1, (B - 1) * 2)
-        last_byte = F.conv(
-            F.substring(F.hex(F.col(prefix_lo)), (B - 1) * 2 + 1, 2), 16, 10
-        ).cast("int")
-        return [
-            F.col(prefix_len).alias("__plen"),
-            base_hex.alias("__bh"),
-            last_byte.alias("__lb"),
-            F.explode(F.sequence(F.lit(0), nexp - 1)).alias("__i"),
-        ]
-
-    exp_cols = _EXPR_MEMO.get_or_build(
-        ("expand", B, prefix_lo, prefix_len), build_exp_cols
+    exp = p.select(
+        *keep,
+        F.expr(f"{prefix_len} AS __plen"),
+        F.expr(f"substring(lower(hex({prefix_lo})), 1, {(B - 1) * 2}) AS __bh"),
+        F.expr(f"CAST(conv(substring(hex({prefix_lo}), {(B - 1) * 2 + 1}, 2), 16, 10) AS INT) AS __lb"),
+        F.expr(f"explode(sequence(0, CAST(pow(2, {B * 8} - {prefix_len}) AS BIGINT) - 1)) AS __i"),
     )
-    exp = p.select(*keep, *exp_cols)
-    key_col = _EXPR_MEMO.get_or_build(
-        ("expand_key",),
-        lambda: F.unhex(
-            F.concat(F.col("__bh"), F.lpad(F.hex(F.col("__lb") + F.col("__i")), 2, "0"))
-        ).alias("__key"),
-    )
+    key_col = F.expr("unhex(concat(__bh, lpad(hex(__lb + __i), 2, '0'))) AS __key")
     return exp.select(*keep, "__plen", key_col)
 
 
@@ -94,10 +70,7 @@ def _resolve_blocks(exp: DataFrame, attrs: list[str], group_keys: list[str]) -> 
     the reference's "last configured database wins" trie-insert
     semantics (outlet/geoip/iter.go: databases walked in configuration
     order, later inserts replace)."""
-    has_prio = "__prio" in exp.columns
-    ranks = [F.col("__plen").alias("p")] + (
-        [F.col("__prio").alias("pr")] if has_prio else []
-    )
+    ranks = "'p', __plen" + (", 'pr', __prio" if "__prio" in exp.columns else "")
     # max_by instead of max(struct(rank, value))[v]: the rank NULLs out
     # where the attribute is unset (those rows are skipped), and the
     # value never has to be orderable — maps/structs ride through
@@ -105,17 +78,13 @@ def _resolve_blocks(exp: DataFrame, attrs: list[str], group_keys: list[str]) -> 
     # value itself is the final tiebreaker so duplicate equal-length
     # (and equal-priority) prefixes setting the same attribute resolve
     # deterministically instead of by partition arrival order.
-    rank = lambda a: F.when(  # noqa: E731
-        F.col(a).isNotNull(),
-        F.struct(
-            *ranks,
-            F.xxhash64(F.to_json(F.struct(F.col(a).alias("v")))).alias("tb"),
-        ),
-    )
-    aggs = _EXPR_MEMO.get_or_build(
-        ("resolve_aggs", tuple(attrs), has_prio),
-        lambda: [F.max_by(F.col(a), rank(a)).alias(a) for a in attrs],
-    )
+    aggs = [
+        F.expr(
+            f"max_by(`{a}`, CASE WHEN `{a}` IS NOT NULL THEN named_struct({ranks},"
+            f" 'tb', xxhash64(to_json(named_struct('v', `{a}`)))) END) AS `{a}`"
+        )
+        for a in attrs
+    ]
     return exp.groupBy(*group_keys).agg(*aggs)
 
 
@@ -234,6 +203,15 @@ def lpm_prepare(
     return PreparedLPM(passes, list(attrs))
 
 
+def _probe_cond(ip_col: str, B: int, tag: int, exporter_col: str | None = None):
+    """Join condition of one block pass: the ``B``-byte address prefix
+    equals the block key (and the exporter matches, for keyed passes)."""
+    cond = f"substring({ip_col}, 1, {B}) = __k{tag}"
+    if exporter_col is not None:
+        cond += f" AND {exporter_col} = __e{tag}"
+    return F.expr(cond)
+
+
 def lpm_probe(
     flows: DataFrame,
     prepared: PreparedLPM,
@@ -251,26 +229,13 @@ def lpm_probe(
     for tag, (blocks, keyed, B) in enumerate(prepared.passes):
         if keyed and exporter_col is None:
             raise ValueError("prepared passes are exporter-keyed; pass exporter_col=")
-        sel = _EXPR_MEMO.get_or_build(
-            ("probe_sel", tag, bool(B), keyed, tuple(attrs)),
-            lambda: (
-                ([F.col("__key").alias(f"__k{tag}")] if B else [])
-                + ([F.col("__e").alias(f"__e{tag}")] if keyed else [])
-                + [F.col(a).alias(f"__{a}_{tag}") for a in attrs]
-            ),
+        b = blocks.select(
+            *([F.expr(f"__key AS __k{tag}")] if B else []),
+            *([F.expr(f"__e AS __e{tag}")] if keyed else []),
+            *[F.expr(f"`{a}` AS `__{a}_{tag}`") for a in attrs],
         )
-        b = blocks.select(*sel)
         if B:
-            cond = _EXPR_MEMO.get_or_build(
-                ("probe_cond", tag, B, ip_col, keyed, exporter_col),
-                lambda: (
-                    (F.expr(f"substring({ip_col}, 1, {B})") == F.col(f"__k{tag}"))
-                    & (F.col(exporter_col) == F.col(f"__e{tag}"))
-                    if keyed
-                    else F.expr(f"substring({ip_col}, 1, {B})")
-                    == F.col(f"__k{tag}")
-                ),
-            )
+            cond = _probe_cond(ip_col, B, tag, exporter_col if keyed else None)
             out = out.join(F.broadcast(b), cond, "left")
         elif keyed:
             out = out.join(
@@ -280,23 +245,17 @@ def lpm_probe(
             out = out.join(F.broadcast(b))
         out = out.drop(f"__k{tag}", *([f"__e{tag}"] if keyed else []))
         for a in attrs:
-            matched[a].append(F.col(f"__{a}_{tag}"))
+            matched[a].append(f"`__{a}_{tag}`")
 
     npasses = len(prepared.passes)
-    out_cols = _EXPR_MEMO.get_or_build(
-        ("probe_out", tuple(attrs), npasses, out_prefix),
-        lambda: {
-            a: (
-                F.coalesce(*matched[a]).alias(out_prefix + a)
-                if matched[a]
-                else F.lit(None).alias(out_prefix + a)
-            )
-            for a in attrs
-        },
-    )
     # empty prefix table (nothing configured yet): an LPM miss for
     # every row — NULL attrs, not a zero-arg coalesce crash
-    out = out.withColumns({out_prefix + a: out_cols[a] for a in attrs})
+    out = out.withColumns(
+        {
+            out_prefix + a: F.expr(f"coalesce({', '.join(matched[a])})" if matched[a] else "NULL")
+            for a in attrs
+        }
+    )
     out = out.drop(
         *[f"__{a}_{t}" for a in attrs for t in range(npasses)]
     )

@@ -30,17 +30,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from akvorado_spark.functions.arrays import sql_literal
+
 
 def global_scale(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """1-row frame: the corpus-wide max |element| (the shared int8
     quantization denominator).  Broadcast-joined, never collected, so
     quantization stays one distributed plan."""
-    amax = F.aggregate(
-        F.col(vec_col),
-        F.lit(0.0),
-        lambda acc, x: F.greatest(acc, F.abs(x.cast("double"))),
+    return df.agg(
+        F.expr(
+            f"max(aggregate({vec_col}, 0D,"
+            " (acc, x) -> greatest(acc, abs(CAST(x AS DOUBLE))))) AS gmax"
+        )
     )
-    return df.agg(F.max(amax).alias("gmax"))
 
 
 def quantize_global(
@@ -56,17 +58,15 @@ def quantize_global(
     for storage), a shared scale keeps integer distances comparable
     ACROSS vectors — the property PQ assignment and ADC ranking need.
     """
-    q = F.transform(
-        F.col(vec_col),
-        lambda x: F.when(F.col("gmax") == 0.0, F.lit(0))
-        .otherwise(F.round(x.cast("double") * F.lit(127.0) / F.col("gmax"), 0))
-        .cast("int"),
+    q = F.expr(
+        f"transform({vec_col}, x -> CAST(CASE WHEN gmax = 0D THEN 0"
+        " ELSE round(CAST(x AS DOUBLE) * 127D / gmax, 0) END AS INT))"
     )
     return df.crossJoin(F.broadcast(scale)).withColumn(out_col, q).drop("gmax")
 
 
-def _subslice(col, j: int, sub: int):
-    return F.slice(col, j * sub + 1, sub)
+def _subslice(col: str, j: int, sub: int) -> str:
+    return f"slice({col}, {j * sub + 1}, {sub})"
 
 
 def pq_codebooks_from_seeds(
@@ -114,15 +114,15 @@ def pq_train_codebooks(
     sub = dim // m
     books = []
     for j in range(m):
-        sl = quantized.select(_subslice(F.col(q_col), j, sub).alias("sv"))
+        sl = quantized.select(F.expr(f"{_subslice(q_col, j, sub)} AS sv"))
         cents = [
             list(r["sv"])
             for r in quantized.orderBy(id_col).limit(ks).select(
-                _subslice(F.col(q_col), j, sub).alias("sv")
+                F.expr(f"{_subslice(q_col, j, sub)} AS sv")
             ).collect()
         ]
         for _ in range(iters):
-            assigned = sl.withColumn("c", _assign_expr(F.col("sv"), cents))
+            assigned = sl.withColumn("c", _assign_expr("sv", cents))
             means = (
                 assigned.groupBy("c")
                 .agg(
@@ -141,106 +141,38 @@ def pq_train_codebooks(
     return books
 
 
-from akvorado_spark.functions.memo import LruMemo, cacheable_operands
-
-_CB_LIT_CACHE = LruMemo(maxsize=32)
-# finished integer-fold Columns keyed by operand expression text.
-# CONTRACT (same as similarity._FOLD_MEMO): only trees built from
-# unresolved columns are stored; frame-bound operands build fresh,
-# uncached (cacheable_operands).
-_INT_FOLD_MEMO = LruMemo(maxsize=256)
-
-
-def _book_key(book: list[list[int]]) -> tuple:
-    """Hashable identity of a codebook's VALUES — the memo key piece
-    that lets expression trees parameterized by a book (assignment
-    argmins, ADC tables) be cached under stable keys.  The lambda
-    variables inside those trees print a fresh name every invocation,
-    so keying on the rendered expression alone never repeats (the r13
-    fold memos silently missed on every such site — measured 1.2 s of
-    rebuilt transforms per lmdata build)."""
-    return tuple(tuple(int(v) for v in code) for code in book)
+_INT_SQDIST = (
+    "aggregate(zip_with({a}, {b}, (x, y) -> CAST((x - y) * (x - y) AS BIGINT)),"
+    " CAST(0 AS BIGINT), (acc, v) -> acc + v)"
+)
+_INT_DOT = (
+    "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x * y AS BIGINT)),"
+    " CAST(0 AS BIGINT), (acc, v) -> acc + v)"
+)
 
 
-def _codebook_literal(book: list[list[int]]):
-    """Literal Column for a codebook, memoized on the values: building
-    hundreds of F.lit() nodes costs real driver time (py4j round trips)
-    and the same books recur across encode/probe/table expressions and
-    bench repeats.  Literal columns carry no expression ids, so one
-    Column tree is safely reusable anywhere in the session.  The memo
-    is a bounded LRU so a long-lived service retraining codebooks
-    doesn't accumulate expression trees forever."""
-    return _CB_LIT_CACHE.get_or_build(
-        _book_key(book),
-        lambda: F.array(
-            *[F.array(*[F.lit(int(v)) for v in code]) for code in book]
-        ),
-    )
+def _int_dot(a: str, b: str):
+    return F.expr(_INT_DOT.format(a=a, b=b))
 
 
-def _int_sqdist(a, b):
-    # memoized on operand text: lambda-API fold construction costs
-    # ~50 ms of py4j round trips per call (see similarity.dot, r13)
-    key = ("int_sqdist", str(a), str(b))
-    return _INT_FOLD_MEMO.get_or_build(
-        key,
-        lambda: F.aggregate(
-            F.zip_with(a, b, lambda x, y: ((x - y) * (x - y)).cast("long")),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ),
-        cache_if=lambda: cacheable_operands(a, b),
-    )
+def _scored_codes(subvec: str, book) -> str:
+    """SQL array of (d, c) structs: the integer L2 distance of
+    ``subvec`` to every codeword of the literal ``book``."""
+    d = _INT_SQDIST.format(a=subvec, b="cb")
+    return f"transform({sql_literal(book)}, (cb, c) -> named_struct('d', {d}, 'c', c))"
 
 
-def _int_dot(a, b):
-    key = ("int_dot", str(a), str(b))
-    return _INT_FOLD_MEMO.get_or_build(
-        key,
-        lambda: F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x * y).cast("long")),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ),
-        cache_if=lambda: cacheable_operands(a, b),
-    )
-
-
-def _assign_expr(subvec, book):
+def _assign_expr(subvec: str, book):
     """argmin over the codebook literal; (dist, idx) struct min ties to
-    the lowest code index.  Pure codegen — no shuffle, no UDF.
-
-    Takes the PYTHON book (not its literal Column) so the finished
-    argmin tree can be memoized on (operand text, book values): the
-    transform lambda's variable prints a fresh name per invocation, so
-    the inner fold memo can never hit — memoizing the whole expression
-    here is what makes repeat builds free."""
-    key = ("assign", str(subvec), _book_key(book))
-    return _INT_FOLD_MEMO.get_or_build(
-        key,
-        lambda: F.array_min(
-            F.transform(
-                _codebook_literal(book),
-                lambda cb, c: F.struct(
-                    _int_sqdist(subvec, cb).alias("d"), c.alias("c")
-                ),
-            )
-        )["c"],
-        cache_if=lambda: cacheable_operands(subvec),
-    )
+    the lowest code index.  Pure codegen — no shuffle, no UDF."""
+    return F.expr(f"array_min({_scored_codes(subvec, book)}).c")
 
 
-def _adc_table_expr(qvec, book):
-    """One query-side ADC table: ⟨q_sub, codeword⟩ per code — the
-    transform over the codebook literal, memoized like
-    :func:`_assign_expr` (same lambda-variable key problem)."""
-    key = ("adc_table", str(qvec), _book_key(book))
-    return _INT_FOLD_MEMO.get_or_build(
-        key,
-        lambda: F.transform(
-            _codebook_literal(book), lambda cb: _int_dot(qvec, cb)
-        ),
-        cache_if=lambda: cacheable_operands(qvec),
+def _adc_table_expr(qvec: str, book):
+    """One query-side ADC table: ⟨q_sub, codeword⟩ per code — a
+    transform over the codebook literal."""
+    return F.expr(
+        f"transform({sql_literal(book)}, cb -> {_INT_DOT.format(a=qvec, b='cb')})"
     )
 
 
@@ -257,7 +189,7 @@ def pq_encode(
     sub = len(codebooks[0][0])
     codes = F.array(
         *[
-            _assign_expr(_subslice(F.col(q_col), j, sub), codebooks[j])
+            _assign_expr(_subslice(q_col, j, sub), codebooks[j])
             for j in range(m)
         ]
     )
@@ -288,9 +220,7 @@ def pq_adc_topk(
     qt = queries.select(
         q_id_col,
         *[
-            _adc_table_expr(
-                _subslice(F.col(q_col), j, sub), codebooks[j]
-            ).alias(f"__t{j}")
+            _adc_table_expr(_subslice(q_col, j, sub), codebooks[j]).alias(f"__t{j}")
             for j in range(m)
         ],
     )
@@ -344,12 +274,10 @@ def ivfpq_encode(
     bucketed by ``cell`` so a probe is a partition-pruned scan.
     Residuals live in [-254, 254] — still exact 32-bit ints.
     """
-    cell_lit = _codebook_literal(cells)
-    enc = quantized.withColumn(cell_col, _assign_expr(F.col(q_col), cells))
-    resid = F.zip_with(
-        F.col(q_col),
-        F.element_at(cell_lit, F.col(cell_col) + 1),
-        lambda a, b: a - b,
+    enc = quantized.withColumn(cell_col, _assign_expr(q_col, cells))
+    resid = F.expr(
+        f"zip_with({q_col}, element_at({sql_literal(cells)}, {cell_col} + 1),"
+        " (a, b) -> a - b)"
     )
     enc = enc.withColumn("__rv", resid)
     return pq_encode(enc, codebooks, q_col="__rv", code_col=code_col).drop(q_col)
@@ -387,32 +315,21 @@ def ivfpq_topk(
     sub = len(codebooks[0][0])
     from pyspark.sql import Window
 
-    cell_lit = _codebook_literal(cells)
-    scored_cells = F.transform(
-        cell_lit,
-        lambda cb, c: F.struct(
-            _int_sqdist(F.col(q_col), cb).alias("d"), c.alias("c")
-        ),
-    )
     # nprobe nearest cells per query: array_sort on (d, c) structs IS
     # the L2-then-lowest-cell tie rule — no window, no exchange
-    probed = F.slice(F.array_sort(scored_cells), 1, nprobe)
+    probed = F.expr(f"slice(array_sort({_scored_codes(q_col, cells)}), 1, {nprobe})")
     probes = queries.select(
         q_id_col, q_col, F.explode(probed).alias("x")
     ).select(q_id_col, q_col, F.col("x.c").alias(cell_col))
     # ⟨q, c⟩ correction term per (query, cell) — without it, scores
     # from different probed cells are not comparable (ADVICE r7)
-    q_cell_dot = _int_dot(
-        F.col(q_col), F.element_at(cell_lit, F.col(cell_col) + 1)
-    )
+    q_cell_dot = _int_dot(q_col, f"element_at({sql_literal(cells)}, {cell_col} + 1)")
     probes = probes.select(
         q_id_col,
         cell_col,
         q_cell_dot.alias("__qc"),
         *[
-            _adc_table_expr(
-                _subslice(F.col(q_col), j, sub), codebooks[j]
-            ).alias(f"__t{j}")
+            _adc_table_expr(_subslice(q_col, j, sub), codebooks[j]).alias(f"__t{j}")
             for j in range(m)
         ],
     )
@@ -505,10 +422,7 @@ def quantize_int4(
     comparable across vectors; the deliberate precision loss is the
     trade for the 8× smaller packed footprint (see
     :func:`pack_int4_words`)."""
-    q4 = F.transform(
-        F.col(q_col),
-        lambda x: ((x - F.pmod(x, F.lit(16))) / 16).cast("int"),
-    )
+    q4 = F.expr(f"transform({q_col}, x -> CAST((x - pmod(x, 16)) / 16 AS INT))")
     return df.withColumn(out_col, q4)
 
 
@@ -525,25 +439,15 @@ def pack_int4_words(
     multiple of 8 — enforced in the expression itself (``raise_error``
     branch), so a 12-dim vector fails the job loudly instead of
     silently dropping its last 4 nibbles."""
-    words = F.transform(
-        F.sequence(F.lit(0), (F.size(F.col(col)) / 8).cast("int") - 1),
-        lambda j: sum(
-            (
-                F.element_at(F.col(col), (j * 8 + t + 1).cast("int")) + 8
-            ).cast("long")
-            * F.lit(16**t)
-            for t in range(8)
-        ),
+    word = " + ".join(
+        f"CAST(element_at({col}, CAST(j * 8 + {t} + 1 AS INT)) + 8 AS BIGINT) * {16**t}"
+        for t in range(8)
     )
-    guarded = F.when(
-        F.size(F.col(col)) % 8 != 0,
-        F.raise_error(
-            F.concat(
-                F.lit("pack_int4_words: dim must be a multiple of 8, got "),
-                F.size(F.col(col)).cast("string"),
-            )
-        ),
-    ).otherwise(words)
+    guarded = F.expr(
+        f"CASE WHEN size({col}) % 8 != 0 THEN raise_error(concat("
+        f"'pack_int4_words: dim must be a multiple of 8, got ', CAST(size({col}) AS STRING)))"
+        f" ELSE transform(sequence(0, CAST(size({col}) / 8 AS INT) - 1), j -> {word}) END"
+    )
     return df.withColumn(out_col, guarded)
 
 
@@ -557,31 +461,13 @@ def unpack_int4_words(
     loud-failure guard: a word outside [0, 16^8) is corrupt input
     (not something this packer produced) and raises instead of
     decoding garbage nibbles."""
-    nib = F.flatten(
-        F.transform(
-            F.col(col),
-            lambda w: F.when(
-                (w < 0) | (w >= F.lit(16**8)),
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            "unpack_int4_words: word out of [0, 16^8): "
-                        ),
-                        w.cast("string"),
-                    )
-                ),
-            ).otherwise(
-                F.array(
-                *[
-                    (
-                        ((w % F.lit(16 ** (t + 1))) / F.lit(16**t)).cast("int")
-                        - 8
-                    )
-                    for t in range(8)
-                ]
-                )
-            ),
-        )
+    nibs = ", ".join(
+        f"CAST((w % {16 ** (t + 1)}) / {16**t} AS INT) - 8" for t in range(8)
+    )
+    nib = F.expr(
+        f"flatten(transform({col}, w -> CASE WHEN w < 0 OR w >= {16**8} THEN raise_error("
+        "concat('unpack_int4_words: word out of [0, 16^8): ', CAST(w AS STRING)))"
+        f" ELSE array({nibs}) END))"
     )
     return df.withColumn(out_col, nib)
 
@@ -630,7 +516,7 @@ def exact_rerank_topk(
     scored = cand.select(
         q_id_col,
         id_col,
-        _int_dot(F.col(base_q_col), F.col(q_col)).alias("exact_score"),
+        _int_dot(base_q_col, q_col).alias("exact_score"),
     )
     w = Window.partitionBy(q_id_col).orderBy(
         F.col("exact_score").desc(), F.col(id_col)

@@ -263,14 +263,8 @@ def mix_sources(
     out = out.withColumn(
         epoch_col, F.explode(F.sequence(F.lit(0), F.col("__mx_copies")))
     )
-    h = F.pmod(
-        portable_word_hash(
-            F.concat(
-                F.col(id_col).cast("string"), F.lit("#"), F.col(epoch_col).cast("string")
-            )
-        ),
-        F.lit(buckets),
-    )
+    key = f"concat(CAST({id_col} AS STRING), '#', CAST({epoch_col} AS STRING))"
+    h = F.expr(f"pmod({portable_word_hash(key)}, {buckets})")
     return out.filter(
         (F.col(epoch_col) < F.col("__mx_copies")) | (h < F.col("__mx_thr"))
     ).drop("__mx_copies", "__mx_thr")

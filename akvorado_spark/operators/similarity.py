@@ -19,60 +19,33 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from akvorado_spark.functions.memo import LruMemo, cacheable_operands
+from akvorado_spark.functions.arrays import sql_literal
 
-# finished fold Columns (dot/norm) keyed by operand expression text —
-# see the dot() docstring for the measured py4j construction cost.
-# CONTRACT: keys are the operands' printed names, so only trees built
-# from UNRESOLVED columns (F.col/F.expr) are stored; a frame-bound
-# operand (df["x"] — prints identically) builds fresh and is never
-# cached (cacheable_operands), so it cannot poison later callers.
-_FOLD_MEMO = LruMemo(maxsize=256)
+_DOT = (
+    "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
+    " 0D, (acc, v) -> acc + v)"
+)
+_NORM = "sqrt(aggregate({a}, 0D, (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
 
 
-def dot(a, b):
-    """Dot product of two array<float/double> columns (JVM-side fold).
-
-    Memoized on the operands' expression text: constructing the fold
-    through the Python lambda API costs ~50 ms of py4j round trips per
-    call (measured r13), repeated dozens of times per ML query build —
-    while the finished Column is an immutable expression tree that can
-    be reused verbatim wherever the same operands recur.  Pass
-    unresolved columns (``F.col``); frame-bound operands work but skip
-    the memo (see ``_FOLD_MEMO``)."""
-    key = ("dot", str(a), str(b))
-    return _FOLD_MEMO.get_or_build(
-        key,
-        lambda: F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        cache_if=lambda: cacheable_operands(a, b),
-    )
+def dot(a: str, b: str):
+    """Dot product of two array<float/double> SQL operands (JVM-side
+    fold), e.g. ``dot("a.embedding", "b.embedding")``."""
+    return F.expr(_DOT.format(a=a, b=b))
 
 
-def norm(a):
-    """L2 norm of an array column (JVM-side fold; memoized like
-    :func:`dot`)."""
-    key = ("norm", str(a))
-    return _FOLD_MEMO.get_or_build(
-        key,
-        lambda: F.sqrt(
-            F.aggregate(
-                a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-            )
-        ),
-        cache_if=lambda: cacheable_operands(a),
-    )
+def norm(a: str):
+    """L2 norm of an array SQL operand (JVM-side fold)."""
+    return F.expr(_NORM.format(a=a))
 
 
-def cosine(a, b):
-    """Cosine similarity of two array<float/double> columns (JVM-side).
+def cosine(a: str, b: str):
+    """Cosine similarity of two array<float/double> SQL operands.
 
     For O(n²) pair scans, precompute ``norm`` per vector instead — the
     fold is identical so the doubles are bit-identical."""
-    return dot(a, b) / F.nullif(norm(a) * norm(b), F.lit(0.0))
+    na, nb = _NORM.format(a=a), _NORM.format(a=b)
+    return F.expr(f"{_DOT.format(a=a, b=b)} / nullif({na} * {nb}, 0D)")
 
 
 def brute_force_topk(
@@ -94,7 +67,7 @@ def brute_force_topk(
     scored = vectors.crossJoin(F.broadcast(queries)).select(
         F.col(q_id_col),
         F.col(id_col),
-        F.round(cosine(F.col(vec_col), F.col(q_vec_col)), 6).alias("sim"),
+        F.round(cosine(vec_col, q_vec_col), 6).alias("sim"),
     )
     w = Window.partitionBy(q_id_col).orderBy(F.desc("sim"), F.asc(id_col))
     return (
@@ -107,14 +80,6 @@ def brute_force_topk(
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_planes, dim))
-
-
-# literal plane Columns memoized on (kind, dim, out, seed[, micro]):
-# building hundreds of F.lit() nodes costs real driver time (py4j
-# round trips), the planes are deterministic, and literal columns are
-# reusable expression trees.  Bounded LRU: a long-lived service that
-# keeps re-deriving plane sets must not accumulate them forever.
-_PLANE_LIT_CACHE = LruMemo(maxsize=32)
 
 
 def suggest_planes(n_vectors: int, target_bucket: int = 64) -> int:
@@ -135,34 +100,15 @@ def suggest_planes(n_vectors: int, target_bucket: int = 64) -> int:
     return max(4, math.ceil(math.log2(n_vectors / target_bucket)))
 
 
-def lsh_sketch(vec_col, planes: np.ndarray):
-    """Sign-bit sketch (one long) of a vector column against fixed
-    hyperplanes — pure SQL fold per plane.
-
-    The returned Column is memoized on (column, planes): building it
-    costs n_planes × dim ``F.lit`` py4j round trips plus the fold
-    lambdas (~1.2 s per call at 12×64 planes — the dominant cost of
-    every LSH query's *build* phase, measured r13), while the finished
-    expression tree is immutable and reusable across invocations."""
-
-    def build():
-        bits = []
-        for plane in planes:
-            arr = F.array(*[F.lit(float(x)) for x in plane])
-            dot = F.aggregate(
-                F.zip_with(vec_col, arr, lambda x, y: x.cast("double") * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            bits.append(F.when(dot > 0, F.lit(1).cast("long")).otherwise(F.lit(0)))
-        out = None
-        for i, b in enumerate(bits):
-            term = F.shiftleft(b, i)
-            out = term if out is None else out.bitwiseOR(term)
-        return out
-
-    key = ("sketch", str(vec_col), planes.shape, planes.tobytes())
-    return _PLANE_LIT_CACHE.get_or_build(key, build)
+def lsh_sketch(vec_col: str, planes: np.ndarray):
+    """Sign-bit sketch (one long) of a vector SQL operand against fixed
+    hyperplanes — one SQL fold per plane, planes as literals."""
+    bits = [
+        f"shiftleft(CASE WHEN {_DOT.format(a=vec_col, b=sql_literal(p))} > 0"
+        f" THEN CAST(1 AS BIGINT) ELSE 0 END, {i})"
+        for i, p in enumerate(planes)
+    ]
+    return F.expr(" | ".join(bits))
 
 
 def lsh_topk(
@@ -194,8 +140,8 @@ def lsh_topk(
     from pyspark.sql import Window
 
     planes = _hyperplanes(dim, n_planes, seed)
-    v = vectors.withColumn("__sketch", lsh_sketch(F.col(vec_col), planes))
-    q = queries.withColumn("__qsketch", lsh_sketch(F.col(q_vec_col), planes))
+    v = vectors.withColumn("__sketch", lsh_sketch(vec_col, planes))
+    q = queries.withColumn("__qsketch", lsh_sketch(q_vec_col, planes))
     if multiprobe:
         if multiprobe != 1:
             raise ValueError("multiprobe supports 0 (off) or 1 (1-bit flips)")
@@ -211,7 +157,7 @@ def lsh_topk(
     scored = cand.select(
         F.col(q_id_col),
         F.col(id_col),
-        F.round(cosine(F.col(vec_col), F.col(q_vec_col)), 6).alias("sim"),
+        F.round(cosine(vec_col, q_vec_col), 6).alias("sim"),
     )
     w = Window.partitionBy(q_id_col).orderBy(F.desc("sim"), F.asc(id_col))
     return (
@@ -240,7 +186,7 @@ def ivf_assign(
     one shuffle of (row, cell) pairs, standard IVF build cost.
     """
     scored = vectors.crossJoin(F.broadcast(centroids)).withColumn(
-        "__dot", dot(F.col(vec_col), F.col(c_vec_col))
+        "__dot", dot(vec_col, c_vec_col)
     )
     keys = [c for c in vectors.columns]
     return (
@@ -273,7 +219,7 @@ def ivf_topk(
     v = ivf_assign(vectors, centroids, vec_col)
     # query → its nprobe nearest cells
     qs = queries.crossJoin(F.broadcast(centroids)).withColumn(
-        "__dot", dot(F.col(q_vec_col), F.col("c_vec"))
+        "__dot", dot(q_vec_col, "c_vec")
     )
     wq = Window.partitionBy(q_id_col).orderBy(F.desc("__dot"), F.asc("c_id"))
     probes = (
@@ -285,7 +231,7 @@ def ivf_topk(
     scored = cand.select(
         F.col(q_id_col),
         F.col(id_col),
-        F.round(cosine(F.col(vec_col), F.col(q_vec_col)), 6).alias("sim"),
+        F.round(cosine(vec_col, q_vec_col), 6).alias("sim"),
     )
     w = Window.partitionBy(q_id_col).orderBy(F.desc("sim"), F.asc(id_col))
     return (
@@ -329,7 +275,7 @@ def neardup_pairs(
     LSH-bucketed self-join, exact cosine verification inside buckets."""
     planes = _hyperplanes(dim, n_planes, seed)
     v = vectors.select(
-        F.col(id_col), F.col(vec_col), lsh_sketch(F.col(vec_col), planes).alias("__sketch")
+        F.col(id_col), F.col(vec_col), lsh_sketch(vec_col, planes).alias("__sketch")
     )
     a, b = v.alias("a"), v.alias("b")
     pairs = a.join(
@@ -339,7 +285,7 @@ def neardup_pairs(
     ).select(
         F.col(f"a.{id_col}").alias("id_a"),
         F.col(f"b.{id_col}").alias("id_b"),
-        F.round(cosine(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}")), 6).alias("sim"),
+        F.round(cosine(f"a.{vec_col}", f"b.{vec_col}"), 6).alias("sim"),
     )
     return pairs.filter(F.col("sim") >= threshold)
 
@@ -396,7 +342,7 @@ def kmeans_centroids(
             .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
             .select(
                 F.col("__cell").alias("c_id"),
-                F.transform("pm", lambda s: s["m"]).alias("c_vec"),
+                F.expr("transform(pm, s -> s.m) AS c_vec"),
             )
         )
         new = {r["c_id"]: list(r["c_vec"]) for r in means.collect()}
@@ -425,36 +371,28 @@ def quantize_embeddings(
     scale/2 per element.  Pure JVM fold+transform — no Python, no
     shuffle, whole-stage codegen.
     """
-    amax = F.aggregate(
-        F.col(vec_col),
-        F.lit(0.0),
-        lambda acc, x: F.greatest(acc, F.abs(x.cast("double"))),
-    )
-    d = df.withColumn(scale_col, amax / F.lit(127.0))
-    codes = F.transform(
-        F.col(vec_col),
-        lambda x: F.when(F.col(scale_col) == 0.0, F.lit(0))
-        .otherwise(F.round(x.cast("double") / F.col(scale_col), 0))
-        .cast("int"),
+    amax = f"aggregate({vec_col}, 0D, (acc, x) -> greatest(acc, abs(CAST(x AS DOUBLE))))"
+    d = df.withColumn(scale_col, F.expr(f"{amax} / 127D"))
+    codes = F.expr(
+        f"transform({vec_col}, x -> CAST(CASE WHEN {scale_col} = 0D THEN 0"
+        f" ELSE round(CAST(x AS DOUBLE) / {scale_col}, 0) END AS INT))"
     )
     return d.withColumn(code_col, codes)
 
 
-def dequantize_embeddings(codes_col, scale_col):
+def dequantize_embeddings(codes_col: str, scale_col: str):
     """codes + scale → array<double> reconstruction."""
-    return F.transform(F.col(codes_col), lambda c: c.cast("double") * F.col(scale_col))
+    return F.expr(f"transform({codes_col}, c -> CAST(c AS DOUBLE) * {scale_col})")
 
 
-def quantized_dot(a_codes, b_codes, a_scale, b_scale):
+def quantized_dot(a_codes: str, b_codes: str, a_scale: str, b_scale: str):
     """Dot product in code space: one INTEGER fold (cheap, exact) per
     pair, one float multiply at the end — the pair-scoring kernel for
-    quantized ANN re-ranking."""
-    int_dot = F.aggregate(
-        F.zip_with(a_codes, b_codes, lambda x, y: (x * y).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
+    quantized ANN re-ranking.  Operands are SQL text."""
+    return F.expr(
+        f"CAST(aggregate(zip_with({a_codes}, {b_codes}, (x, y) -> CAST(x * y AS BIGINT)),"
+        f" CAST(0 AS BIGINT), (acc, v) -> acc + v) AS DOUBLE) * {a_scale} * {b_scale}"
     )
-    return int_dot.cast("double") * a_scale * b_scale
 
 
 def kmeans_centroids_hierarchical(
@@ -499,7 +437,7 @@ def kmeans_centroids_hierarchical(
     )
     # one-time assignment of every vector to its super (√k broadcast)
     scored = vectors.select(id_col, vec_col).crossJoin(F.broadcast(supers))
-    scored = scored.withColumn("__dot", dot(F.col(vec_col), F.col("s_vec")))
+    scored = scored.withColumn("__dot", dot(vec_col, "s_vec"))
     members = scored.groupBy(id_col, vec_col).agg(
         F.expr("max_by(s_id, struct(__dot, -s_id))").alias("__super")
     ).localCheckpoint(eager=False)
@@ -522,7 +460,7 @@ def kmeans_centroids_hierarchical(
         # vectors join ONLY their super's children (k rows total, ~√k
         # per super) — never a full N×k crossJoin
         cand = members.join(cents, "__super").withColumn(
-            "__dot", dot(F.col(vec_col), F.col("c_vec"))
+            "__dot", dot(vec_col, "c_vec")
         )
         assigned = cand.groupBy(id_col, vec_col, "__super").agg(
             F.expr("max_by(__child, struct(__dot, -__child))").alias("__child")
@@ -536,7 +474,7 @@ def kmeans_centroids_hierarchical(
             .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
             .select(
                 "__super", "__child",
-                F.transform("pm", lambda s: s["m"]).alias("c_vec"),
+                F.expr("transform(pm, s -> s.m) AS c_vec"),
             )
         )
         # empty children keep their previous centroid (Lloyd's fallback)
@@ -588,7 +526,7 @@ def split_centroids(
         centroids, n_super, id_col=c_id_col, vec_col=c_vec_col
     ).select(F.col("c_id").alias("s_id"), F.col("c_vec").alias("s_vec"))
     scored = centroids.crossJoin(F.broadcast(supers)).withColumn(
-        "__ssim", F.round(cosine(F.col(c_vec_col), F.col("s_vec")), 6)
+        "__ssim", F.round(cosine(c_vec_col, "s_vec"), 6)
     )
     children = scored.groupBy(*centroids.columns).agg(
         F.expr("max_by(s_id, struct(__ssim, -s_id))").alias("__super")
@@ -624,7 +562,7 @@ def assign_cells_two_level(
     """
     keys = list(vectors.columns)
     s1 = vectors.crossJoin(F.broadcast(supers)).withColumn(
-        "__ssim", F.round(cosine(F.col(vec_col), F.col("s_vec")), 6)
+        "__ssim", F.round(cosine(vec_col, "s_vec"), 6)
     )
     probed = s1.groupBy(*keys).agg(
         F.expr("max_by(s_id, struct(__ssim, -s_id))").alias("__probe")
@@ -632,7 +570,7 @@ def assign_cells_two_level(
     cand = probed.join(
         children.withColumnRenamed("__super", "__probe"), "__probe"
     ).withColumn(
-        "__sim", F.round(cosine(F.col(vec_col), F.col(c_vec_col)), 6)
+        "__sim", F.round(cosine(vec_col, c_vec_col), 6)
     )
     return cand.groupBy(*keys).agg(
         F.expr(f"max_by({c_id_col}, struct(__sim, -{c_id_col}))").alias(out_col),
@@ -665,7 +603,7 @@ def assign_cells(
     to it).  The two-level variant is :func:`assign_cells_two_level`."""
     keys = list(vectors.columns)
     scored = vectors.crossJoin(F.broadcast(centroids)).withColumn(
-        "__sim", F.round(cosine(F.col(vec_col), F.col("c_vec")), 6)
+        "__sim", F.round(cosine(vec_col, "c_vec"), 6)
     )
     return scored.groupBy(*keys).agg(
         F.expr("max_by(c_id, struct(__sim, -c_id))").alias(out_col),
@@ -711,7 +649,7 @@ def semdedup(
     semdedup variants over one materialized corpus can fold the norms
     once and share them — each variant then copies a double instead of
     re-folding the array).  The column must hold exactly
-    ``norm(F.col(vec_col))`` and ``vectors`` should already be
+    ``norm(vec_col)`` and ``vectors`` should already be
     materialized (e.g. localCheckpoint) — on a lazy source, projection
     collapse can push the caller's fold INTO the N×k assignment
     crossJoin, making the "shared" fold more expensive than the
@@ -742,7 +680,7 @@ def semdedup(
     # crossJoin 26× with zero ReusedExchange).  Materializing N rows
     # once replaces three full assignment passes at any corpus size.
     if norm_col is None:
-        withn = assigned.withColumn("__n", norm(F.col(vec_col)))
+        withn = assigned.withColumn("__n", norm(vec_col))
     else:
         withn = assigned.withColumnRenamed(norm_col, "__n")
     withn = withn.localCheckpoint(eager=False)
@@ -758,7 +696,7 @@ def semdedup(
         (F.col("__bcsim") == F.col("__csim")) & (F.col("__bid") < F.col(id_col))
     )
     pair_cos = F.round(
-        dot(F.col(vec_col), F.col("__bvec"))
+        dot(vec_col, "__bvec")
         / F.nullif(F.col("__n") * F.col("__bn"), F.lit(0.0)),
         6,
     )
@@ -798,17 +736,9 @@ def project_embeddings(
     retries, other engines), so projections are reproducible.
     """
     planes = _hyperplanes(dim, out_dim, seed=seed)  # (out_dim, dim)
-    inv = 1.0 / float(np.sqrt(out_dim))
-    comps = []
-    for plane in planes:
-        arr = F.array(*[F.lit(float(x)) for x in plane])
-        d = F.aggregate(
-            F.zip_with(F.col(vec_col), arr, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        comps.append(d * F.lit(inv))
-    return df.withColumn(out_col, F.array(*comps))
+    inv = sql_literal(1.0 / float(np.sqrt(out_dim)))
+    comps = [f"{_DOT.format(a=vec_col, b=sql_literal(p))} * {inv}" for p in planes]
+    return df.withColumn(out_col, F.expr(f"array({', '.join(comps)})"))
 
 
 def project_embeddings_fixedpoint(
@@ -831,33 +761,11 @@ def project_embeddings_fixedpoint(
     scale plus per-element quantization error, so ordering/JL geometry
     carries over; the float variant stays the production path."""
     planes = _hyperplanes(dim, out_dim, seed=seed)
-    key = ("fixedpoint", dim, out_dim, seed, micro)
-    arrs = _PLANE_LIT_CACHE.get_or_build(
-        key,
-        lambda: [
-            F.array(
-                *[
-                    F.lit(int(round(float(x) * micro))).cast("long")
-                    for x in plane
-                ]
-            )
-            for plane in planes
-        ],
-    )
-    # the finished per-plane fold array is itself memoized (keyed on
-    # the plane identity + operand name): the out_dim lambda-API folds
-    # cost ~45 ms each to construct and recur identically on every
-    # build (r14; same class as the pq assignment/ADC-table memos)
-    def _build():
-        comps = []
-        for arr in arrs:
-            d = F.aggregate(
-                F.zip_with(F.col(vec_col), arr, lambda x, y: x.cast("long") * y),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            )
-            comps.append(d)
-        return F.array(*comps)
-
-    proj = _FOLD_MEMO.get_or_build((*key, vec_col), _build)
+    comps = [
+        f"aggregate(zip_with({vec_col},"
+        f" CAST({sql_literal([round(float(x) * micro) for x in p])} AS ARRAY<BIGINT>),"
+        " (x, y) -> CAST(x AS BIGINT) * y), CAST(0 AS BIGINT), (acc, v) -> acc + v)"
+        for p in planes
+    ]
+    proj = F.expr(f"array({', '.join(comps)})")
     return df.withColumn(out_col, proj)

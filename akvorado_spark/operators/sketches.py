@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from akvorado_spark.operators.text import WORDS_SQL
+
 
 def corpus_sketch_stats(
     df: DataFrame,
@@ -51,12 +53,7 @@ def corpus_sketch_stats(
         *group_cols,
         F.col(id_col),
         F.length(text_col).alias("__chars"),
-        F.posexplode_outer(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), r"\s+"),
-                lambda w: w != "",
-            )
-        ).alias("__pos", "__tok"),
+        F.posexplode_outer(F.expr(WORDS_SQL.format(text_col))).alias("__pos", "__tok"),
     )
     first_row = F.col("__pos").isNull() | (F.col("__pos") == 0)
     return toks.groupBy(*group_cols).agg(

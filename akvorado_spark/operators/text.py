@@ -2,7 +2,9 @@
 identification, document fingerprinting.
 
 All pure Spark SQL expressions over built-ins — these run per-document
-in the 100 TB hot path, so no Python UDFs.
+in the 100 TB hot path, so no Python UDFs.  The token-array operators
+take their ``text`` operand as SQL text (a column name such as
+``"text"``) and build one ``F.expr`` each.
 """
 
 from __future__ import annotations
@@ -10,12 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from akvorado_spark.functions.memo import LruMemo, cacheable_operands
-
-# finished text-metric expression trees keyed on operand text +
-# constants (same contract as the similarity/pq fold memos: unresolved
-# operands only — cacheable_operands gates the build path)
-_TEXT_EXPR_MEMO = LruMemo(maxsize=64)
+from akvorado_spark.functions.arrays import sql_literal
 
 # Tiny embedded stopword lists (public, common knowledge) for the
 # n-gram/stopword language heuristic.
@@ -29,13 +26,17 @@ STOPWORDS = {
 PUNCT_CLASS = "[.,!?;:]"
 
 
-def words(text: Column) -> Column:
-    return F.filter(F.split(F.lower(text), r"\s+"), lambda w: w != "")
+# lower-cased whitespace tokens of a SQL operand, as SQL text
+WORDS_SQL = "filter(split(lower({}), '\\\\s+'), w -> w != '')"
 
 
-def token_count(text: Column) -> Column:
+def words(text: str) -> Column:
+    return F.expr(WORDS_SQL.format(text))
+
+
+def token_count(text: str) -> Column:
     """Whitespace token count."""
-    return F.size(words(text))
+    return F.expr(f"size({WORDS_SQL.format(text)})")
 
 
 def bpe_ish_token_count(text: Column) -> Column:
@@ -57,121 +58,113 @@ def digit_ratio(text: Column) -> Column:
     return n / F.greatest(F.length(text), F.lit(1))
 
 
-def stopword_hits(text: Column, lang: str) -> Column:
-    w = words(text)
-    return F.size(
-        F.filter(w, lambda x: x.isin(*STOPWORDS[lang]))
-    )
+def _stopword_hits(text: str, lang: str) -> str:
+    listed = ", ".join(f"'{w}'" for w in STOPWORDS[lang])
+    return f"size(filter({WORDS_SQL.format(text)}, x -> x IN ({listed})))"
 
 
-def quality_score(text: Column) -> Column:
+def stopword_hits(text: str, lang: str) -> Column:
+    return F.expr(_stopword_hits(text, lang))
+
+
+def quality_score(text: str) -> Column:
     """Composite quality heuristic in [0, 1]: long-enough docs with a
     healthy word length, some stopwords, and restrained punctuation /
     digits score high (the usual pretraining-filter shape)."""
-    w = words(text)
-    n_words = F.size(w)
-    mean_wlen = F.when(
-        n_words > 0,
-        F.aggregate(w, F.lit(0).cast("double"), lambda acc, x: acc + F.length(x)) / n_words,
-    ).otherwise(F.lit(0.0))
-    stop_ratio = F.when(
-        n_words > 0, stopword_hits(text, "en") / n_words
-    ).otherwise(F.lit(0.0))
-    score = (
-        F.least(n_words / F.lit(100.0), F.lit(1.0)) * 0.3
-        + F.when((mean_wlen >= 3) & (mean_wlen <= 10), 0.3).otherwise(0.0)
-        + F.least(stop_ratio * F.lit(5.0), F.lit(1.0)) * 0.2
-        + F.when(punct_ratio(text) < 0.1, 0.1).otherwise(0.0)
-        + F.when(digit_ratio(text) < 0.2, 0.1).otherwise(0.0)
+    w = WORDS_SQL.format(text)
+    mean_wlen = (
+        f"CASE WHEN size({w}) > 0 THEN aggregate({w}, CAST(0 AS DOUBLE),"
+        f" (acc, x) -> acc + length(x)) / size({w}) ELSE 0D END"
     )
-    return score.cast("double")
+    stop_ratio = f"CASE WHEN size({w}) > 0 THEN {_stopword_hits(text, 'en')} / size({w}) ELSE 0D END"
+    chars = f"greatest(length({text}), 1)"
+    punct = f"length(regexp_replace({text}, '[^{PUNCT_CLASS[1:-1]}]', '')) / {chars}"
+    digit = f"length(regexp_replace({text}, '[^0-9]', '')) / {chars}"
+    return F.expr(
+        f"CAST(least(size({w}) / 100D, 1D) * 0.3D"
+        f" + CASE WHEN ({mean_wlen}) >= 3 AND ({mean_wlen}) <= 10 THEN 0.3D ELSE 0D END"
+        f" + least(({stop_ratio}) * 5D, 1D) * 0.2D"
+        f" + CASE WHEN {punct} < 0.1D THEN 0.1D ELSE 0D END"
+        f" + CASE WHEN {digit} < 0.2D THEN 0.1D ELSE 0D END AS DOUBLE)"
+    )
 
 
-def doc_lines(text: Column) -> Column:
+_DOC_LINES_SQL = "filter(split({}, '\\\\n'), l -> trim(l) != '')"
+
+
+def doc_lines(text: str) -> Column:
     """Non-blank lines of a document."""
-    return F.filter(F.split(text, "\\n"), lambda l: F.trim(l) != "")
+    return F.expr(_DOC_LINES_SQL.format(text))
 
 
 def quality_metric_fractions(
-    text: Column, w: Column | None = None, ls: Column | None = None
-) -> dict[str, tuple[Column, Column]]:
-    """(numerator, denominator) INTEGER column pairs for each Gopher
+    text: str, w: str | None = None, ls: str | None = None
+) -> dict[str, tuple[str, str]]:
+    """(numerator, denominator) INTEGER SQL-text pairs for each Gopher
     repetition/shape metric.  Integer pairs are the exactness contract:
     ratios derive as num/den, and micro-precision gates use exact
     integer division (num·10⁶ div den) so no cross-engine double-ROUND
     boundary can flip a digit.
 
-    ``w``/``ls``: optionally pass pre-materialized token / line array
+    ``w``/``ls``: optionally name pre-materialized token / line array
     columns — callers evaluating several metrics over the same text
     should split once into real columns instead of letting every
     metric's expression tree re-split (codegen CSE doesn't reliably
     merge the big higher-order trees; measured ~3× on the metric
     suite)."""
-    if w is None:
-        w = words(text)
-    if ls is None:
-        ls = doc_lines(text)
-    nw = F.size(w)
-    nl = F.size(ls)
+    w = w or WORDS_SQL.format(text)
+    ls = ls or _DOC_LINES_SQL.format(text)
+    nw, nl = f"size({w})", f"size({ls})"
     return {
-        "repline": (nl - F.size(F.array_distinct(ls)), nl),
-        "symratio": (
-            F.size(F.regexp_extract_all(text, F.lit(r"#|\.\.\.|…"), F.lit(0))),
-            nw,
-        ),
-        "bullet": (F.size(F.filter(ls, lambda l: F.trim(l).rlike(r"^[-*\u2022]"))), nl),
-        "ellipsis": (
-            F.size(F.filter(ls, lambda l: F.trim(l).rlike(r"(\.\.\.|…)$"))),
-            nl,
-        ),
-        "meanwlen": (
-            F.aggregate(w, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)),
-            nw,
-        ),
-        "alpha": (F.size(F.filter(w, lambda x: x.rlike("[a-z]"))), nw),
+        "repline": (f"{nl} - size(array_distinct({ls}))", nl),
+        "symratio": (f"size(regexp_extract_all({text}, '#|\\\\.\\\\.\\\\.|…', 0))", nw),
+        "bullet": (f"size(filter({ls}, l -> trim(l) RLIKE '^[-*\\\\u2022]'))", nl),
+        "ellipsis": (f"size(filter({ls}, l -> trim(l) RLIKE '(\\\\.\\\\.\\\\.|…)$'))", nl),
+        "meanwlen": (f"aggregate({w}, CAST(0 AS BIGINT), (acc, x) -> acc + length(x))", nw),
+        "alpha": (f"size(filter({w}, x -> x RLIKE '[a-z]'))", nw),
     }
 
 
-def _frac(pair: tuple[Column, Column]) -> Column:
+def _frac(pair: tuple[str, str]) -> str:
     num, den = pair
-    return num / F.greatest(den, F.lit(1))
+    return f"({num}) / greatest({den}, 1)"
 
 
-def repeated_line_fraction(text: Column) -> Column:
+def repeated_line_fraction(text: str) -> Column:
     """Fraction of lines that are duplicates of an earlier line — the
     Gopher repetition rule (boilerplate/listing pages repeat headers
     and nav lines; prose almost never repeats a full line)."""
-    return _frac(quality_metric_fractions(text)["repline"])
+    return F.expr(_frac(quality_metric_fractions(text)["repline"]))
 
 
-def symbol_word_ratio(text: Column) -> Column:
+def symbol_word_ratio(text: str) -> Column:
     """Gopher's symbol screen: '#', ellipses per word."""
-    return _frac(quality_metric_fractions(text)["symratio"])
+    return F.expr(_frac(quality_metric_fractions(text)["symratio"]))
 
 
-def bullet_line_fraction(text: Column) -> Column:
-    return _frac(quality_metric_fractions(text)["bullet"])
+def bullet_line_fraction(text: str) -> Column:
+    return F.expr(_frac(quality_metric_fractions(text)["bullet"]))
 
 
-def ellipsis_line_fraction(text: Column) -> Column:
-    return _frac(quality_metric_fractions(text)["ellipsis"])
+def ellipsis_line_fraction(text: str) -> Column:
+    return F.expr(_frac(quality_metric_fractions(text)["ellipsis"]))
 
 
-def mean_word_length(text: Column) -> Column:
-    return _frac(quality_metric_fractions(text)["meanwlen"])
+def mean_word_length(text: str) -> Column:
+    return F.expr(_frac(quality_metric_fractions(text)["meanwlen"]))
 
 
-def alpha_word_fraction(text: Column) -> Column:
+def alpha_word_fraction(text: str) -> Column:
     """Fraction of words containing at least one alphabetic character
     (Gopher requires >= 80 %)."""
-    return _frac(quality_metric_fractions(text)["alpha"])
+    return F.expr(_frac(quality_metric_fractions(text)["alpha"]))
 
 
 def gopher_quality_pass(
-    text: Column,
+    text: str,
     min_words: int = 50,
     max_words: int = 100_000,
-    fractions: dict[str, tuple[Column, Column]] | None = None,
+    fractions: dict[str, tuple[str, str]] | None = None,
 ) -> Column:
     """The Gopher quality-filter conjunction (Rae et al. 2021, table A1,
     public paper) over pure built-in expressions: word-count window,
@@ -182,66 +175,47 @@ def gopher_quality_pass(
 
     ``fractions``: pass :func:`quality_metric_fractions` output built on
     pre-materialized token/line columns to avoid re-splitting the text
-    per rule.
-
-    The self-built-fractions form is memoized on (operand text,
-    thresholds) — a pure function of them; its four lambda-API
-    constructions cost ~0.2 s of py4j per build otherwise (r14)."""
-
-    def build():
-        fr = fractions if fractions is not None else quality_metric_fractions(text)
-        n = fr["meanwlen"][1]  # the word count every per-word metric divides by
-        return (
-            (n >= min_words)
-            & (n <= max_words)
-            & (_frac(fr["meanwlen"]) >= 3)
-            & (_frac(fr["meanwlen"]) <= 10)
-            & (_frac(fr["symratio"]) < 0.1)
-            & (_frac(fr["bullet"]) < 0.9)
-            & (_frac(fr["ellipsis"]) < 0.3)
-            & (_frac(fr["alpha"]) >= 0.8)
-            & (_frac(fr["repline"]) < 0.3)
-        )
-
-    if fractions is not None:  # caller-built columns: never cache
-        return build()
-    return _TEXT_EXPR_MEMO.get_or_build(
-        ("gopher", str(text), min_words, max_words),
-        build,
-        cache_if=lambda: cacheable_operands(text),
+    per rule."""
+    fr = fractions if fractions is not None else quality_metric_fractions(text)
+    n = fr["meanwlen"][1]  # the word count every per-word metric divides by
+    return F.expr(
+        f"{n} >= {min_words} AND {n} <= {max_words}"
+        f" AND {_frac(fr['meanwlen'])} >= 3 AND {_frac(fr['meanwlen'])} <= 10"
+        f" AND {_frac(fr['symratio'])} < 0.1D AND {_frac(fr['bullet'])} < 0.9D"
+        f" AND {_frac(fr['ellipsis'])} < 0.3D AND {_frac(fr['alpha'])} >= 0.8D"
+        f" AND {_frac(fr['repline'])} < 0.3D"
     )
 
 
-def lang_id(text: Column) -> Column:
+def lang_id(text: str) -> Column:
     """Stopword-vote language guess over the embedded lists; 'und' when
-    no list scores a hit."""
-    scores = [(lang, stopword_hits(text, lang)) for lang in STOPWORDS]
-    best_score = F.greatest(*[s for _, s in scores])
-    out = F.lit("und")
-    for lang, s in reversed(scores):  # earlier langs win ties
-        out = F.when((best_score > 0) & (s == best_score), F.lit(lang)).otherwise(out)
-    return out
+    no list scores a hit (earlier langs win ties)."""
+    scores = {lang: _stopword_hits(text, lang) for lang in STOPWORDS}
+    best = f"greatest({', '.join(scores.values())})"
+    arms = " ".join(f"WHEN {best} > 0 AND {s} = {best} THEN '{lang}'" for lang, s in scores.items())
+    return F.expr(f"CASE {arms} ELSE 'und' END")
 
 
 FP_MOD = 100_000_000_000_000_003  # prime < 2^57: 31*acc + h stays < 2^63 (ANSI-safe)
 
 
-def portable_word_hash(w: Column) -> Column:
-    """56-bit word hash both Spark and DuckDB can compute bit-identically:
-    first 14 hex digits of md5.  Used to oracle-certify the rolling fold;
-    the production path keeps xxhash64 (JVM intrinsic, no hex round-trip)."""
-    return F.conv(F.substring(F.md5(w.cast("binary")), 1, 14), 16, 10).cast("long")
+def portable_word_hash(w: str) -> str:
+    """56-bit word hash (SQL text) both Spark and DuckDB can compute
+    bit-identically: first 14 hex digits of md5.  Used to oracle-certify
+    the rolling fold; the production path keeps xxhash64 (JVM
+    intrinsic, no hex round-trip)."""
+    return f"CAST(conv(substring(md5(CAST({w} AS BINARY)), 1, 14), 16, 10) AS BIGINT)"
 
 
-def fingerprint(text: Column, word_hash=None) -> Column:
+def fingerprint(text: str, word_hash=None) -> Column:
     """Order-sensitive rolling fingerprint: fold word hashes with
     acc = (31*acc + h) mod P.  Modular (not wrapping) arithmetic —
-    Spark's ANSI mode rejects long overflow."""
-    wh = word_hash or F.xxhash64
-    return F.aggregate(
-        F.transform(words(text), lambda w: F.pmod(wh(w), F.lit(FP_MOD))),
-        F.lit(0).cast("long"),
-        lambda acc, h: F.pmod(acc * F.lit(31).cast("long") + h, F.lit(FP_MOD)),
+    Spark's ANSI mode rejects long overflow.  ``word_hash`` maps SQL
+    operand text to SQL text (default xxhash64)."""
+    wh = word_hash or (lambda c: f"xxhash64({c})")
+    return F.expr(
+        f"aggregate(transform({WORDS_SQL.format(text)}, w -> pmod({wh('w')}, {FP_MOD})),"
+        f" CAST(0 AS BIGINT), (acc, h) -> pmod(acc * CAST(31 AS BIGINT) + h, {FP_MOD}))"
     )
 
 
@@ -262,19 +236,15 @@ def chunk_documents(
     one narrow projection + explode, no shuffle at all; at 100 TB this
     pipelines straight from scan to sink.
     """
-    w = words(F.col(text_col))
-    n = F.size(w)
-    n_chunks = F.greatest(F.ceil((n - window) / F.lit(stride)) + 1, F.lit(1)).cast("int")
-    idx = F.sequence(F.lit(0), n_chunks - 1)
-    chunks = F.transform(
-        idx,
-        lambda i: F.struct(
-            i.cast("int").alias("chunk_ix"),
-            F.concat_ws(" ", F.slice(w, i * stride + 1, window)).alias("chunk"),
-            F.least(n - i * stride, F.lit(window)).cast("int").alias("n_tokens"),
-        ),
+    w = WORDS_SQL.format(text_col)
+    n_chunks = f"CAST(greatest(ceil((size({w}) - {window}) / {stride}) + 1, 1) AS INT)"
+    chunks = (
+        f"transform(sequence(0, {n_chunks} - 1), i -> named_struct("
+        "'chunk_ix', CAST(i AS INT),"
+        f" 'chunk', concat_ws(' ', slice({w}, i * {stride} + 1, {window})),"
+        f" 'n_tokens', CAST(least(size({w}) - i * {stride}, {window}) AS INT)))"
     )
-    return df.select(F.col(id_col), F.explode(chunks).alias("__c")).select(
+    return df.select(F.col(id_col), F.expr(f"explode({chunks}) AS __c")).select(
         id_col, "__c.chunk_ix", "__c.chunk", "__c.n_tokens"
     )
 
@@ -283,13 +253,13 @@ def analyze(df: DataFrame, text_col: str) -> DataFrame:
     """Attach the full analysis column set."""
     t = F.col(text_col)
     return (
-        df.withColumn("n_tokens", token_count(t))
+        df.withColumn("n_tokens", token_count(text_col))
         .withColumn("n_bpe_tokens", bpe_ish_token_count(t))
         .withColumn("punct_ratio", punct_ratio(t))
         .withColumn("digit_ratio", digit_ratio(t))
-        .withColumn("quality", quality_score(t))
-        .withColumn("lang_guess", lang_id(t))
-        .withColumn("fingerprint", fingerprint(t))
+        .withColumn("quality", quality_score(text_col))
+        .withColumn("lang_guess", lang_id(text_col))
+        .withColumn("fingerprint", fingerprint(text_col))
     )
 
 
@@ -327,7 +297,7 @@ def term_stats(
     else:
         toks = df.select(
             F.col(id_col),
-            F.explode(F.array_distinct(words(F.col(text_col)))).alias("term"),
+            F.expr(f"explode(array_distinct({WORDS_SQL.format(text_col)})) AS term"),
         )
         docfreq = toks.groupBy("term").agg(F.count(F.lit(1)).alias("doc_freq"))
     return docfreq.join(F.broadcast(total)).select(
@@ -369,7 +339,7 @@ def tfidf_topk_terms(
     if stats is None:
         stats = term_stats(df, text_col, id_col)
     tf = (
-        df.select(F.col(id_col), F.explode(words(F.col(text_col))).alias("term"))
+        df.select(F.col(id_col), F.expr(f"explode({WORDS_SQL.format(text_col)}) AS term"))
         .groupBy(id_col, "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
@@ -441,23 +411,21 @@ def bm25_scores(
             .select(F.col(id_col).alias("__id"), "__dl", "term", "tf")
         )
     else:
-        ws = words(F.col(text_col))
+        ws = WORDS_SQL.format(text_col)
         toks = df.select(
-            F.col(id_col).alias("__id"), ws.alias("__ws"), F.size(ws).alias("__dl")
+            F.col(id_col).alias("__id"), F.expr(f"{ws} AS __ws"), F.expr(f"size({ws}) AS __dl")
         )
         # corpus scalars: document count + total token count (avgdl = tot/N)
         totals = toks.agg(
             F.count(F.lit(1)).alias("__n_docs"),
             F.sum("__dl").alias("__tot_toks"),
         )
-        qarr = F.array(*[F.lit(t) for t in query_terms])
+        qarr = sql_literal(list(query_terms))
         hits = (
             toks.select(
                 "__id",
                 "__dl",
-                F.explode(
-                    F.filter(F.col("__ws"), lambda w: F.array_contains(qarr, w))
-                ).alias("term"),
+                F.expr(f"explode(filter(__ws, w -> array_contains({qarr}, w))) AS term"),
             )
             .groupBy("__id", "__dl", "term")
             .agg(F.count(F.lit(1)).alias("tf"))
@@ -635,22 +603,18 @@ def duplicate_ngram_char_stats(
     gram-expansion in ONE task (measured 6× on the docs corpus).
     """
     df = df.select(id_col, text_col).repartition(F.col(id_col))
-    w = words(F.col(text_col))
+    w = WORDS_SQL.format(text_col)
     # n-grams as a fold of zip_with over n shifted views of the token
     # array: 2 (n-1 zips) vectorized passes total.  The per-index
     # transform(sequence, i -> slice/element_at) alternatives re-walk
     # the array per gram — measured 7× slower on the docs corpus.
-    m = F.greatest(F.size(w) - (n - 1), F.lit(1))
-    grams = F.slice(w, 1, m)
+    m = f"greatest(size({w}) - {n - 1}, 1)"
+    grams = f"slice({w}, 1, {m})"
     for j in range(1, n):
-        grams = F.zip_with(
-            grams, F.slice(w, j + 1, m), lambda a, b: F.concat_ws(" ", a, b)
-        )
+        grams = f"zip_with({grams}, slice({w}, {j + 1}, {m}), (a, b) -> concat_ws(' ', a, b))"
     # docs shorter than n words contribute their whole text as one gram
-    grams = F.when(F.size(w) >= n, grams).otherwise(
-        F.array(F.array_join(w, " "))
-    )
-    g = df.select(F.col(id_col), F.explode(grams).alias("__g"))
+    grams = f"CASE WHEN size({w}) >= {n} THEN {grams} ELSE array(array_join({w}, ' ')) END"
+    g = df.select(F.col(id_col), F.expr(f"explode({grams}) AS __g"))
     per_gram = g.groupBy(id_col, "__g").agg(
         F.count(F.lit(1)).alias("__c"), F.length(F.first("__g")).alias("__l")
     )
@@ -688,19 +652,13 @@ def remove_duplicate_spans(
     """
     from pyspark.sql import Window
 
-    ws = words(F.col(text_col))
-    toks = df.select(F.col(id_col), ws.alias("__ws"))
-    n = F.size("__ws")
-    k = F.ceil(n / F.lit(span_words)).cast("int")
-    spans = F.when(
-        n > 0,
-        F.transform(
-            F.sequence(F.lit(0), k - 1),
-            lambda i: F.array_join(
-                F.slice("__ws", i * span_words + 1, span_words), " "
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    toks = df.select(F.col(id_col), F.expr(f"{WORDS_SQL.format(text_col)} AS __ws"))
+    spans = F.expr(
+        "CASE WHEN size(__ws) > 0 THEN transform("
+        f"sequence(0, CAST(ceil(size(__ws) / {span_words}) AS INT) - 1),"
+        f" i -> array_join(slice(__ws, i * {span_words} + 1, {span_words}), ' '))"
+        " ELSE CAST(array() AS ARRAY<STRING>) END"
+    )
     wins = toks.select(
         id_col, F.posexplode_outer(spans).alias("__widx", "__w")
     )
@@ -716,20 +674,11 @@ def remove_duplicate_spans(
         marked.withColumn("__keep", kept_flag)
         .groupBy(id_col)
         .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                F.col("__keep"),
-                                F.struct(F.col("__widx").alias("x"), F.col("__w").alias("w")),
-                            )
-                        )
-                    ),
-                    lambda s: s["w"],
-                ),
-                " ",
-            ).alias(f"{text_col}_dedup"),
+            F.expr(
+                "array_join(transform(array_sort(collect_list(CASE WHEN __keep THEN"
+                " named_struct('x', __widx, 'w', __w) END)), s -> s.w), ' ')"
+                f" AS `{text_col}_dedup`"
+            ),
             F.sum(F.when(F.col("__w").isNotNull(), 1).otherwise(0))
             .cast("int")
             .alias("n_spans"),

@@ -11,6 +11,10 @@ engines).  Weights are integer "bytes" so sums are exact.
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+import weakref
+
 # Valid in both Spark SQL and DuckDB.
 FLOWS_VIEW_SQL = """
 SELECT
@@ -55,7 +59,8 @@ FROM lineitem
 """
 
 
-_MATERIALIZED: dict[tuple[int, str, str], str] = {}
+# session → {(sf_dir, view name): finalizer that removes the parquet dir}
+_MATERIALIZED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def register_spark_view(spark, sf_dir: str, name: str = "flows_v") -> None:
@@ -73,24 +78,24 @@ def register_spark_view(spark, sf_dir: str, name: str = "flows_v") -> None:
 
     The parquet is written fresh per (session, sf) under a tempdir —
     nothing is keyed on the input path across processes, so every run
-    still computes from the source parquet.
+    still computes from the source parquet.  The tempdir is removed when
+    another sf supersedes it, when the session is collected, or at
+    interpreter exit.
     """
-    key = (id(spark), sf_dir, name)
-    if key in _MATERIALIZED:
+    per = _MATERIALIZED.setdefault(spark, {})
+    if (sf_dir, name) in per:
         return
-    import shutil
-    import tempfile
-
     from akvorado_spark.sources.tables import load_table
 
     load_table(spark, "lineitem", sf_dir).createOrReplaceTempView("lineitem")
     root = tempfile.mkdtemp(prefix="akvorado_flows_")
+    cleanup = weakref.finalize(spark, shutil.rmtree, root, True)
     spark.sql(FLOWS_VIEW_SQL).write.mode("overwrite").parquet(root)
     spark.read.parquet(root).createOrReplaceTempView(name)
     # drop stale materializations of other scale factors for this session
-    for k in [k for k in _MATERIALIZED if k[0] == id(spark) and k[2] == name and k != key]:
-        shutil.rmtree(_MATERIALIZED.pop(k), ignore_errors=True)
-    _MATERIALIZED[key] = root
+    for k in [k for k in per if k[1] == name]:
+        per.pop(k)()
+    per[(sf_dir, name)] = cleanup
 
 
 def oracle_view_sql() -> str:

@@ -376,7 +376,7 @@ def _spark_hash_sample(spark, sf_dir):
     from akvorado_spark.operators.text import portable_word_hash
 
     docs = load_table(spark, "documents", sf_dir)
-    bucket = F.pmod(portable_word_hash(F.col("doc_id").cast("string")), F.lit(100))
+    bucket = F.expr(f"pmod({portable_word_hash('CAST(doc_id AS STRING)')}, 100)")
     uniform = (
         docs.filter(bucket < 10)
         .groupBy("lang")
@@ -504,7 +504,7 @@ def _docs_pack_bins(spark, sf_dir):
     from akvorado_spark.operators.text import token_count
 
     docs = load_table(spark, "documents", sf_dir, spread=True).select(
-        "lang", "doc_id", token_count(F.col("text")).cast("long").alias("n_tokens")
+        "lang", "doc_id", token_count("text").cast("long").alias("n_tokens")
     )
     out = pack_documents(
         docs, "n_tokens", _PACK_BUDGET, key_cols=("lang",), id_col="doc_id"

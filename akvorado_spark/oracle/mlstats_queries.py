@@ -69,6 +69,7 @@ def _classifier_sketch_suite(spark, sf_dir):
         margin_micro,
     )
     from akvorado_spark.operators.sketches import corpus_sketch_stats
+    from akvorado_spark.operators.text import WORDS_SQL
 
     docs = load_table(spark, "documents", sf_dir, spread=True).select(
         "doc_id", "lang", "source", "text"
@@ -78,9 +79,7 @@ def _classifier_sketch_suite(spark, sf_dir):
     feats = docs.select(
         "lang",
         "source",
-        F.size(
-            F.filter(F.split(F.lower(t), r"\s+"), lambda w: w != "")
-        ).cast("long").alias("ntok"),
+        F.expr(f"CAST(size({WORDS_SQL.format('text')}) AS BIGINT) AS ntok"),
         F.length(t).cast("long").alias("nch"),
         (F.length(t) - F.length(F.replace(t, F.lit("e"), F.lit("")))).cast(
             "long"

@@ -153,26 +153,16 @@ def _dedup_pipeline_suite(spark, sf_dir, sample=_DP_SAMPLE, thr=_DP_THR,
     # a 3-branch union would triple the mapper partition count (3 × the
     # spread width) and every downstream stage pays the task-scheduling
     # bill; the explode keeps one narrow pass over the spread partitions
-    is_seed = F.expr("doc_id % 30 = 0")
-    variants = F.array(
-        F.struct(F.col("doc_id").alias("doc_id"), F.col("text").alias("text")),
-        F.when(
-            is_seed,
-            F.struct(
-                (F.col("doc_id") + 40_000_000).alias("doc_id"),
-                F.concat("text", F.lit(" alpha near duplicate tail")).alias("text"),
-            ),
-        ),
-        F.when(
-            is_seed,
-            F.struct(
-                (F.col("doc_id") + 50_000_000).alias("doc_id"),
-                F.concat("text", F.lit(" beta near duplicate tail")).alias("text"),
-            ),
-        ),
+    variants = ", ".join(
+        ["named_struct('doc_id', doc_id, 'text', text)"]
+        + [
+            f"CASE WHEN doc_id % 30 = 0 THEN named_struct('doc_id', doc_id + {off},"
+            f" 'text', concat(text, ' {tag} near duplicate tail')) END"
+            for off, tag in ((40_000_000, "alpha"), (50_000_000, "beta"))
+        ]
     )
     corpus = base.select(
-        F.explode(F.filter(variants, lambda x: x.isNotNull())).alias("__v")
+        F.expr(f"explode(filter(array({variants}), x -> x IS NOT NULL)) AS __v")
     ).select("__v.doc_id", "__v.text")
     # one shingle pass feeds pair scoring AND the decontamination probe
     grams = corpus_grams(corpus, "text", "doc_id").persist()
@@ -419,12 +409,12 @@ def _text_stats(spark, sf_dir):
     from akvorado_spark.operators.text import doc_lines, words
 
     corpus = (
-        corpus.withColumn("__ws", words(t))
-        .withColumn("__ls", doc_lines(t))
+        corpus.withColumn("__ws", words("text"))
+        .withColumn("__ls", doc_lines("text"))
         .withColumn("__norm", normalize_text(t))
     )
 
-    fr = quality_metric_fractions(t, w=F.col("__ws"), ls=F.col("__ls"))
+    fr = quality_metric_fractions("text", w="__ws", ls="__ls")
     _pii = redact_pii_stages(t)
 
     def _punct_micro_sum(t):
@@ -438,7 +428,7 @@ def _text_stats(spark, sf_dir):
     def micro(key):
         # exact integer micro-units: num·10⁶ div den (no double ROUND,
         # so no cross-engine half-ulp boundary)
-        num, den = fr[key]
+        num, den = (F.expr(x) for x in fr[key])
         num6 = num.cast("long") * F.lit(1000000).cast("long")
         d = F.greatest(den.cast("long"), F.lit(1).cast("long"))
         return F.sum(((num6 - num6 % d) / d).cast("long"))
@@ -467,7 +457,7 @@ def _text_stats(spark, sf_dir):
             F.sum(bpe_ish_token_count(t)).alias("n_bpe_tokens"),
             F.sum(F.length(t)).alias("n_chars_sum"),
             _punct_micro_sum(t).alias("punct_micro"),
-            F.sum(gopher_quality_pass(t, fractions=fr).cast("long")).alias(
+            F.sum(gopher_quality_pass("text", fractions=fr).cast("long")).alias(
                 "n_gopher_pass"
             ),
             micro("repline").alias("repline_micro"),
@@ -615,7 +605,7 @@ def _lang_id(spark, sf_dir):
 
     docs = load_table(spark, "documents", sf_dir, spread=True)
     return (
-        docs.select("lang", lang_id(F.col("text")).alias("guess"))
+        docs.select("lang", lang_id("text").alias("guess"))
         .groupBy("lang", "guess")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy("lang", "guess")
@@ -671,7 +661,7 @@ def _text_fingerprint(spark, sf_dir):
 
     docs = load_table(spark, "documents", sf_dir, spread=True).filter(_FP_SAMPLE)
     return docs.select(
-        "doc_id", fingerprint(F.col("text"), portable_word_hash).alias("fp")
+        "doc_id", fingerprint("text", portable_word_hash).alias("fp")
     )
 
 
@@ -805,7 +795,7 @@ def _embed_neardup(spark, sf_dir):
         load_table(spark, "embeddings", sf_dir, spread=True)
         .filter("vec_id % 5 = 0")
         .select(
-            "vec_id", "embedding", norm(F.col("embedding")).alias("__n")
+            "vec_id", "embedding", norm("embedding").alias("__n")
         )
         .localCheckpoint(eager=False)
     )
@@ -829,7 +819,7 @@ def _embed_neardup(spark, sf_dir):
             F.col("a.vec_id").alias("id_a"),
             F.col("b.vec_id").alias("id_b"),
             F.round(
-                dot(F.col("a.embedding"), F.col("b.embedding"))
+                dot("a.embedding", "b.embedding")
                 / F.nullif(F.col("a.__n") * F.col("b.__n"), F.lit(0.0)),
                 6,
             ).alias("sim"),
@@ -888,9 +878,7 @@ def _embed_neardup(spark, sf_dir):
         quantize_embeddings(vecs)
         .select(
             "vec_id",
-            F.aggregate(
-                "q_code", F.lit(0).cast("long"), lambda a, c: a + c.cast("long")
-            ).alias("__cs"),
+            F.expr("aggregate(q_code, CAST(0 AS BIGINT), (a, c) -> a + CAST(c AS BIGINT)) AS __cs"),
         )
         .agg(
             F.lit("quant_codes").alias("variant"),
@@ -1466,7 +1454,7 @@ def _doc_chunks(spark, sf_dir):
         F.lit("chunk").alias("variant"),
         "doc_id",
         "chunk_ix",
-        portable_word_hash(F.col("chunk")).alias("chunk_hash"),
+        F.expr(f"{portable_word_hash('chunk')} AS chunk_hash"),
         "n_tokens",
     )
     # C4 duplicated-span removal variant: one row per doc — chunk_ix
@@ -1479,7 +1467,7 @@ def _doc_chunks(spark, sf_dir):
         F.lit("span").alias("variant"),
         "doc_id",
         F.col("n_spans").alias("chunk_ix"),
-        portable_word_hash(F.col("text_dedup")).alias("chunk_hash"),
+        F.expr(f"{portable_word_hash('text_dedup')} AS chunk_hash"),
         F.col("n_spans_kept").alias("n_tokens"),
     )
     return chunks.unionByName(spans).orderBy("variant", "doc_id", "chunk_ix")

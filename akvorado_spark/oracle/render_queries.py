@@ -156,12 +156,12 @@ def _spark_flags_mac_path(spark, sf_dir):
         df.groupBy(
             render_tcp_flags(F.col("TCPFlags")).alias("flags"),
             render_mac(F.col("SrcMAC")).alias("src_mac"),
-            render_as_path(compact_path(F.col("DstASPath"))).alias("as_path"),
-            render_communities(F.col("SrcCommunities")).alias("communities"),
-            render_large_communities(F.col("SrcLargeCommunities")).alias("large_communities"),
-            render_communities_dim(
-                F.col("SrcCommunities"), F.col("SrcLargeCommunities")
-            ).alias("communities_dim"),
+            render_as_path(compact_path("DstASPath")).alias("as_path"),
+            render_communities("SrcCommunities").alias("communities"),
+            render_large_communities("SrcLargeCommunities").alias("large_communities"),
+            render_communities_dim("SrcCommunities", "SrcLargeCommunities").alias(
+                "communities_dim"
+            ),
             icmp_render(F.col("Proto"), F.col("IcmpType"), F.lit(0)).alias("icmp_name"),
         )
         .agg(F.count(F.lit(1)).alias("flows"))

@@ -29,7 +29,9 @@ a 1-hour rollup (~1/3600 of raw) and the full fact table.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
+import weakref
 from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import functions as F
@@ -89,22 +91,24 @@ def routed_schema():
 
 # One store per (session, sf_dir): building it is ingest-time work (the
 # reference's orchestrator creates these tables once, not per query) —
-# same materialize-once policy as the flows_v fact view.
-_STORES: dict[tuple[int, str], FlowStore] = {}
+# same materialize-once policy as the flows_v fact view, and its tempdir
+# is removed when the session is collected or at interpreter exit.
+_STORES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def get_store(spark, sf_dir: str) -> FlowStore:
-    key = (id(spark), sf_dir)
-    store = _STORES.get(key)
+    per = _STORES.setdefault(spark, {})
+    store = per.get(sf_dir)
     if store is not None:
         return store
     root = tempfile.mkdtemp(prefix="akvorado_rollups_")
+    weakref.finalize(spark, shutil.rmtree, root, True)
     store = FlowStore(spark, root, schema=routed_schema())
     # private view name: never collide with driver-registered views
     load_table(spark, "events", sf_dir).createOrReplaceTempView("__rollup_src_events")
     store.write_main(spark.sql(_FLOW_SQL.format(src="__rollup_src_events")))
     store.build_rollups()
-    _STORES[key] = store
+    per[sf_dir] = store
     return store
 
 

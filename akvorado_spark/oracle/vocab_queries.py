@@ -78,7 +78,7 @@ def _shared_tf(docs):
     from akvorado_spark.operators.text import words
 
     return (
-        docs.select("doc_id", F.explode(words(F.col("text"))).alias("term"))
+        docs.select("doc_id", F.explode(words("text")).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )

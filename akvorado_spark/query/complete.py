@@ -319,7 +319,7 @@ def complete_communities(
             .groupBy("__c")
             .agg(F.count(F.lit(1)).alias("__n"))
             .select(
-                render(F.col("__c")).alias("label"),
+                F.expr(f"{render('__c')} AS label"),
                 F.lit(detail).alias("detail"),
                 "__n",
             )

@@ -37,16 +37,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from akvorado_spark.functions.memo import LruMemo
-
 OTHER = "Other"
-
-# finished Column trees keyed by the request constants that determine
-# them (time column, step, weight SQL, dims, value type): every Column
-# operation is 1-3 py4j round trips and an axis build issues ~900 of
-# them (~0.5 s, r13 profile) while the expressions are pure functions
-# of names + literals, identical across invocations and axes
-_EXPR_MEMO = LruMemo(maxsize=256)
 
 
 @dataclass(frozen=True)
@@ -76,50 +67,31 @@ class LineRequest:
     end_us: int | None = None
 
 
-def _agg_col(req: LineRequest) -> Column:
-    return _EXPR_MEMO.get_or_build(
-        ("agg", req.agg_sql, req.value_type),
-        lambda: (F.expr(req.agg_sql) if req.agg_sql else F.sum("__w")).cast(
-            req.value_type
-        ),
-    )
+def _agg_col(req: LineRequest, name: str = "sum_w") -> Column:
+    return F.expr(f"CAST(({req.agg_sql or 'sum(__w)'}) AS {req.value_type}) AS {name}")
+
+
+def _weight_col(req: LineRequest) -> Column:
+    return F.expr(f"CAST(({req.weight_sql}) AS BIGINT) AS __w")
 
 
 def _bucket_col(time_col: str, step_us: int) -> Column:
-    """The aligned-bucket expression (memoized on its two inputs)."""
-    return _EXPR_MEMO.get_or_build(
-        ("bucket", time_col, step_us),
-        lambda: (
-            F.col("__start_us")
-            + F.floor(
-                (F.unix_micros(F.col(time_col).cast("timestamp")) - F.col("__start_us"))
-                / step_us
-            )
-            * step_us
-        ).cast("long"),
+    """The aligned-bucket expression, named ``__bucket``."""
+    return F.expr(
+        f"CAST(__start_us + floor((unix_micros(CAST({time_col} AS TIMESTAMP)) - __start_us)"
+        f" / {step_us}) * {step_us} AS BIGINT) AS __bucket"
     )
 
 
 def _bucket_spine(bounds: DataFrame, step_us: int) -> DataFrame:
-    """The WITH-FILL bucket spine off the 1-row bounds frame (O1);
-    expression pieces memoized on the step."""
-    icol, bcol = _EXPR_MEMO.get_or_build(
-        ("spine", step_us),
-        lambda: (
-            F.explode(
-                F.sequence(
-                    F.lit(0).cast("long"),
-                    F.floor(
-                        (F.col("__max_us") - F.col("__start_us")) / step_us
-                    ).cast("long"),
-                )
-            ).alias("__i"),
-            (F.col("__start_us") + F.col("__i") * step_us)
-            .cast("long")
-            .alias("__bucket"),
+    """The WITH-FILL bucket spine off the 1-row bounds frame (O1)."""
+    return bounds.select(
+        F.expr(
+            "explode(sequence(CAST(0 AS BIGINT),"
+            f" CAST(floor((__max_us - __start_us) / {step_us}) AS BIGINT))) AS __i"
         ),
-    )
-    return bounds.select(icol, "__start_us").select(bcol)
+        "__start_us",
+    ).select(F.expr(f"CAST(__start_us + __i * {step_us} AS BIGINT) AS __bucket"))
 
 
 def _top_rows(base: DataFrame, req: LineRequest, bounds: DataFrame) -> DataFrame:
@@ -135,7 +107,7 @@ def _top_rows(base: DataFrame, req: LineRequest, bounds: DataFrame) -> DataFrame
     dims = list(req.dimensions)
     step_us = req.interval_s * 1_000_000
     if req.limit_type == "max":
-        per_bucket = base.groupBy("__bucket", *dims).agg(_agg_col(req).alias("__bw"))
+        per_bucket = base.groupBy("__bucket", *dims).agg(_agg_col(req, "__bw"))
         ranked = per_bucket.groupBy(*dims).agg(F.max("__bw").alias("__tw"))
     elif req.limit_type == "last":
         # the final bucket is arithmetic over the 1-row bounds frame —
@@ -151,10 +123,10 @@ def _top_rows(base: DataFrame, req: LineRequest, bounds: DataFrame) -> DataFrame
         ranked = (
             base.join(F.broadcast(last_bucket), F.col("__bucket") == F.col("__lb"))
             .groupBy(*dims)
-            .agg(_agg_col(req).alias("__tw"))
+            .agg(_agg_col(req, "__tw"))
         )
     else:
-        ranked = base.groupBy(*dims).agg(_agg_col(req).alias("__tw"))
+        ranked = base.groupBy(*dims).agg(_agg_col(req, "__tw"))
     order = [F.col("__tw").desc()] + [F.col(d).asc() for d in dims]
     return ranked.orderBy(*order).limit(req.limit).drop("__tw")
 
@@ -188,16 +160,12 @@ def top_rows_frame(df: DataFrame, req: LineRequest) -> DataFrame:
     dims = list(req.dimensions)
     step_us = req.interval_s * 1_000_000
     bounds = _bounds_frame(df, req)
-    bucket_col = _bucket_col(req.time_col, step_us).alias("__bucket")
+    bucket_col = _bucket_col(req.time_col, step_us)
     joined = df.join(F.broadcast(bounds))
     if req.agg_sql:
         base = joined.select(bucket_col, *req.base_cols, *dims)
     else:
-        wcol = _EXPR_MEMO.get_or_build(
-            ("w", req.weight_sql),
-            lambda: F.expr(req.weight_sql).cast("long").alias("__w"),
-        )
-        base = joined.select(bucket_col, wcol, *dims)
+        base = joined.select(bucket_col, _weight_col(req), *dims)
     return _top_rows(base, req, bounds)
 
 
@@ -231,22 +199,18 @@ def compile_line(
     # single select off the bounds join (one projection node instead of
     # a withColumn chain — each chained op costs an analysis round and
     # py4j round trips; ~870 calls per axis before r13)
-    bucket_col = _bucket_col(req.time_col, step_us).alias("__bucket")
+    bucket_col = _bucket_col(req.time_col, step_us)
     joined = df.join(F.broadcast(bounds))  # 1-row scalar frame (J9 shape)
     if req.agg_sql:
         base = joined.select(bucket_col, *req.base_cols, *dims)
     else:
-        wcol = _EXPR_MEMO.get_or_build(
-            ("w", req.weight_sql),
-            lambda: F.expr(req.weight_sql).cast("long").alias("__w"),
-        )
-        base = joined.select(bucket_col, wcol, *dims)
+        base = joined.select(bucket_col, _weight_col(req), *dims)
 
     if not dims:
         # dimensionless request (total-traffic graph; also the
         # previous-period axes, whose dimensions the reference strips —
         # console/line.go:81-86): no ranking, no fold, one series
-        agg = base.groupBy("__bucket").agg(_agg_col(req).alias("sum_w"))
+        agg = base.groupBy("__bucket").agg(_agg_col(req))
         if not req.fill:
             out = agg.select(
                 F.col("__bucket").alias("bucket"),
@@ -279,23 +243,18 @@ def compile_line(
     # cheaper than analyzing the derived `base` plan
     dtypes = dict(df.dtypes)
     passthrough = tuple(dtypes[d] in ("string", "binary") for d in dims)
-    fold_cols = _EXPR_MEMO.get_or_build(
-        ("fold", tuple(dims), passthrough),
-        lambda: [
-            F.when(
-                F.col("__top").isNotNull(),
-                F.col(d) if p else F.col(d).cast("string"),
-            )
-            .otherwise(F.lit(OTHER))
-            .alias(d)
-            for d, p in zip(dims, passthrough)
-        ],
-    )
+    fold_cols = [
+        F.expr(
+            f"CASE WHEN __top IS NOT NULL THEN {f'`{d}`' if p else f'CAST(`{d}` AS STRING)'}"
+            f" ELSE '{OTHER}' END AS `{d}`"
+        )
+        for d, p in zip(dims, passthrough)
+    ]
     value_cols = list(req.base_cols) if req.agg_sql else ["__w"]
     agg = (
         folded.select("__bucket", *value_cols, *fold_cols)
         .groupBy("__bucket", *dims)
-        .agg(_agg_col(req).alias("sum_w"))
+        .agg(_agg_col(req))
     )
 
     if not req.fill:

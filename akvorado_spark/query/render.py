@@ -104,58 +104,52 @@ def render_as_path(path: Column) -> Column:
     return F.array_join(path.cast("array<string>"), " ")
 
 
-def compact_path(path: Column) -> Column:
-    """``arrayCompact``: drop *consecutive* duplicates (reference
-    raw→main MV, orchestrator/clickhouse/migrations_helpers.go:380-384).
-    Pure SQL: keep element i when i=0 or path[i] != path[i-1]."""
-    idx = F.sequence(F.lit(1), F.size(path))
-    kept = F.filter(idx, lambda i: (i == 1) | (F.element_at(path, i) != F.element_at(path, i - 1)))
-    return F.transform(kept, lambda i: F.element_at(path, i))
-
-
-def render_community_value(c: Column) -> Column:
-    """One community → 'asn:value' (reference CommunityToString,
-    console/query/column.go:216-223)."""
-    return F.concat(
-        F.shiftright(c, 16).cast("string"),
-        F.lit(":"),
-        c.bitwiseAND(F.lit(0xFFFF)).cast("string"),
+def compact_path(path: str) -> Column:
+    """``arrayCompact`` over the SQL operand ``path``: drop *consecutive*
+    duplicates (reference raw→main MV,
+    orchestrator/clickhouse/migrations_helpers.go:380-384).  Pure SQL:
+    keep element i when i=1 or path[i] != path[i-1]."""
+    kept = (
+        f"filter(sequence(1, size({path})),"
+        f" i -> i = 1 OR element_at({path}, i) != element_at({path}, i - 1))"
     )
+    return F.expr(f"transform({kept}, i -> element_at({path}, i))")
 
 
-def render_large_community_value(c: Column) -> Column:
+def render_community_value(c: str) -> str:
+    """One community → 'asn:value' SQL text (reference
+    CommunityToString, console/query/column.go:216-223)."""
+    return f"concat(CAST(shiftright({c}, 16) AS STRING), ':', CAST({c} & 65535 AS STRING))"
+
+
+def render_large_community_value(c: str) -> str:
     """One large community struct(asn, local1, local2) → 'asn:l1:l2'
-    (reference LargeCommunityToString, column.go:234-248; SURVEY §1.3
-    recommends the struct form over UInt128)."""
-    return F.concat_ws(
-        ":",
-        c["asn"].cast("string"),
-        c["local1"].cast("string"),
-        c["local2"].cast("string"),
+    SQL text (reference LargeCommunityToString, column.go:234-248;
+    SURVEY §1.3 recommends the struct form over UInt128)."""
+    return (
+        f"concat_ws(':', CAST({c}.asn AS STRING), CAST({c}.local1 AS STRING),"
+        f" CAST({c}.local2 AS STRING))"
     )
 
 
-def render_communities(comm: Column) -> Column:
+def render_communities(comm: str) -> Column:
     """``arrayMap(c -> concat(toString(shiftright(c,16)), ':',
     toString(bitAnd(c, 0xffff))), comm)`` → space-joined."""
-    return F.array_join(F.transform(comm, render_community_value), " ")
+    return F.expr(f"array_join(transform({comm}, c -> {render_community_value('c')}), ' ')")
 
 
-def render_large_communities(comm: Column) -> Column:
+def render_large_communities(comm: str) -> Column:
     """Large communities → space-joined 'asn:l1:l2' strings."""
-    return F.array_join(F.transform(comm, render_large_community_value), " ")
+    return F.expr(f"array_join(transform({comm}, c -> {render_large_community_value('c')}), ' ')")
 
 
-def render_communities_dim(comm: Column, large: Column) -> Column:
+def render_communities_dim(comm: str, large: str) -> Column:
     """The ``Communities`` DIMENSION renders regular and large
     communities as ONE space-joined string — ``arrayStringConcat(
     arrayConcat(arrayMap(...,Communities), arrayMap(...,
     LargeCommunities)), ' ')`` (console/query/column_test.go:90-96) —
     so a flow's full community set groups as a single value."""
-    return F.array_join(
-        F.concat(
-            F.transform(comm, render_community_value),
-            F.transform(large, render_large_community_value),
-        ),
-        " ",
+    return F.expr(
+        f"array_join(concat(transform({comm}, c -> {render_community_value('c')}),"
+        f" transform({large}, c -> {render_large_community_value('c')})), ' ')"
     )

@@ -333,7 +333,7 @@ class FlowSchema:
         reference's `_raw_consumer` MV (migrations_helpers.go:368-406):
         Dst1st/2nd/3rdAS from the consecutive-dedup'd AS path — plus
         any Materialized alias columns (root.go:38-52)."""
-        df = df.withColumn("__compacted_path__", array_compact(F.col("DstASPath")))
+        df = df.withColumn("__compacted_path__", array_compact("DstASPath"))
         for c in self.enabled():
             if c.generated:
                 df = df.withColumn(c.name, F.expr(c.generated).cast(c.dtype))

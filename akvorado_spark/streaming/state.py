@@ -356,12 +356,12 @@ def streaming_minhash_candidates(
         word_ngrams,
     )
 
-    sig = minhash_signature_expr(word_ngrams(F.col(text_col), ngram), n_hashes)
     banded = df.select(
         F.col(id_col).cast("long").alias("__id"),
-        F.posexplode(band_buckets_expr(sig, bands, n_hashes)).alias(
-            "band", "bucket"
-        ),
+        minhash_signature_expr(word_ngrams(text_col, ngram), n_hashes).alias("__sig"),
+    ).select(
+        "__id",
+        F.posexplode(band_buckets_expr("__sig", bands, n_hashes)).alias("band", "bucket"),
     )
 
     out_schema = "id_a long, id_b long"

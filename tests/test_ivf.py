@@ -216,7 +216,7 @@ def test_semdedup_precomputed_norm_identical(spark):
     )
     cents = seed_centroids(vecs, 6)
     withn = vecs.select(
-        "vec_id", "embedding", norm(F.col("embedding")).alias("__n")
+        "vec_id", "embedding", norm("embedding").alias("__n")
     )
     for kw in ({}, {"two_level": True}):
         base = semdedup(vecs, cents, 0.4, **kw)
@@ -270,7 +270,7 @@ def test_two_level_assign_exact_when_supers_equal_centroids(spark):
     two = assign_cells_two_level(vecs, supers, children)
 
     scored = vecs.crossJoin(F.broadcast(cents)).withColumn(
-        "__sim", F.round(cosine(F.col("embedding"), F.col("c_vec")), 6)
+        "__sim", F.round(cosine("embedding", "c_vec"), 6)
     )
     one = scored.groupBy("vec_id").agg(
         F.expr("max_by(c_id, struct(__sim, -c_id))").alias("__cell"),
@@ -319,7 +319,7 @@ def test_kmeans_hierarchical_trains_usable_centroids(spark):
 
     def mean_best(cdf):
         scored = vecs.crossJoin(F.broadcast(cdf)).withColumn(
-            "__s", cosine(F.col("embedding"), F.col("c_vec"))
+            "__s", cosine("embedding", "c_vec")
         )
         best = scored.groupBy("vec_id").agg(F.max("__s").alias("b"))
         return best.agg(F.avg("b")).collect()[0][0]
@@ -373,11 +373,8 @@ def test_quantize_embeddings_roundtrip_bound(spark):
     a = q.alias("a").filter("vec_id % 7 = 0")
     b = q.alias("b").filter("vec_id % 7 = 1")
     pairs = a.crossJoin(b).limit(300).select(
-        dot(F.col("a.embedding"), F.col("b.embedding")).alias("exact"),
-        quantized_dot(
-            F.col("a.q_code"), F.col("b.q_code"),
-            F.col("a.q_scale"), F.col("b.q_scale"),
-        ).alias("approx"),
+        dot("a.embedding", "b.embedding").alias("exact"),
+        quantized_dot("a.q_code", "b.q_code", "a.q_scale", "b.q_scale").alias("approx"),
     )
     worst = pairs.select(
         F.max(F.abs(F.col("exact") - F.col("approx"))).alias("w"),

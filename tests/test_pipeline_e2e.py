@@ -35,7 +35,7 @@ def test_training_pipeline_composes_end_to_end(spark):
         docs, {"src0": 2.0, "src1": 1.0, "src2": 0.5}, default_rate=0.25
     )
     # 2. quality gate (narrow; relaxed word floor for the short corpus)
-    kept = mixed.filter(gopher_quality_pass(F.col("text"), min_words=10))
+    kept = mixed.filter(gopher_quality_pass("text", min_words=10))
     # 3. exact dedup on content hash — epochs of the same doc collapse,
     # so up-sampling survives only through distinct (doc, epoch) pairs
     # carried to packing, not duplicate text rows
@@ -46,7 +46,7 @@ def test_training_pipeline_composes_end_to_end(spark):
         "source",
         "epoch",
         redact_pii(F.col("text")).alias("text"),
-        token_count(F.col("text")).alias("n_tokens"),
+        token_count("text").alias("n_tokens"),
     )
     # 5. pack into 2048-token bins
     packed = pack_documents(ready, "n_tokens", budget=2048).persist()

@@ -382,9 +382,7 @@ def test_minhash_signature_expr_matches_grouped(spark):
         r["doc_id"]: r["signature"]
         for r in docs.select(
             "doc_id",
-            minhash_signature_expr(
-                word_ngrams(F.col("text")), n_hashes=16
-            ).alias("signature"),
+            minhash_signature_expr(word_ngrams("text"), n_hashes=16).alias("signature"),
         ).collect()
     }
     assert a == b and len(a) > 20

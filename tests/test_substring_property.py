@@ -104,12 +104,11 @@ def _random_corpus(rng: random.Random, n_docs: int):
     return docs
 
 
-@pytest.mark.slow
-def test_exact_substring_dedup_random_corpora(spark):
+def _substring_dedup_trials(spark, trials: int):
     from akvorado_spark.operators.dedup import exact_substring_dedup
 
     rng = random.Random(1234)
-    for trial in range(4):
+    for trial in range(trials):
         docs = _random_corpus(rng, n_docs=rng.randint(4, 10))
         df = spark.createDataFrame(list(docs.items()), ["doc_id", "text"])
         got = {
@@ -125,6 +124,15 @@ def test_exact_substring_dedup_random_corpora(spark):
         }
         want = _py_substring_dedup(docs)
         assert got == want, f"trial {trial}"
+
+
+def test_exact_substring_dedup_one_random_corpus(spark):
+    _substring_dedup_trials(spark, 1)
+
+
+@pytest.mark.slow
+def test_exact_substring_dedup_random_corpora(spark):
+    _substring_dedup_trials(spark, 4)
 
 
 def test_winnow_anchors_spark_vs_duckdb_random(spark):
@@ -194,14 +202,17 @@ ORDER BY doc_id, i
         assert sorted(got[i]) == duck[i], (i, t[:40])
 
 
-@pytest.mark.slow
-def test_bpe_random_corpora_match_reference(spark):
+# words carrying SQL quoting hazards (quotes, backslash, backtick) and
+# a non-ASCII letter: merge symbols reach the SQL text as literals
+_QUOTING_VOCAB = ["it's", 'a"b', "c\\d", "`e", "café", "é'", "a'\\"]
+
+
+def _bpe_trials(spark, trials: int, vocab: list[str], seed: int = 77):
     from akvorado_spark.operators.bpe import train_bpe
     from tests.test_pipeline_ops import _py_bpe
 
-    rng = random.Random(77)
-    for trial in range(3):
-        vocab = ["ab", "abc", "bca", "aabb", "cab", "bb", "a"]
+    rng = random.Random(seed)
+    for trial in range(trials):
         rows = []
         words = {}
         for d in range(rng.randint(2, 5)):
@@ -212,6 +223,22 @@ def test_bpe_random_corpora_match_reference(spark):
         df = spark.createDataFrame(rows, ["doc_id", "text"])
         n = rng.randint(2, 8)
         assert train_bpe(df, "text", n) == _py_bpe(words, n)[0], f"trial {trial}"
+
+
+_BPE_VOCAB = ["ab", "abc", "bca", "aabb", "cab", "bb", "a"]
+
+
+def test_bpe_one_random_corpus_matches_reference(spark):
+    _bpe_trials(spark, 1, _BPE_VOCAB)
+
+
+def test_bpe_quoting_hazard_words_match_reference(spark):
+    _bpe_trials(spark, 1, _QUOTING_VOCAB, seed=5)
+
+
+@pytest.mark.slow
+def test_bpe_random_corpora_match_reference(spark):
+    _bpe_trials(spark, 3, _BPE_VOCAB)
 
 
 def _py_line_dedup(docs: dict[int, str], min_docs: int, min_len: int, keep_owner: bool):
@@ -238,8 +265,7 @@ def _py_line_dedup(docs: dict[int, str], min_docs: int, min_len: int, keep_owner
     return out
 
 
-@pytest.mark.slow
-def test_line_dedup_random_corpora(spark):
+def _line_dedup_trials(spark, trials: int):
     from akvorado_spark.operators.dedup import line_dedup
 
     rng = random.Random(4242)
@@ -251,7 +277,7 @@ def test_line_dedup_random_corpora(spark):
         "some unique-ish filler {}",
         "another body line {}",
     ]
-    for trial in range(3):
+    for trial in range(trials):
         docs = {}
         for d in range(rng.randint(3, 8)):
             n = rng.randint(1, 8)
@@ -273,8 +299,16 @@ def test_line_dedup_random_corpora(spark):
             assert got == want, (trial, min_docs, keep_owner)
 
 
+def test_line_dedup_one_random_corpus(spark):
+    _line_dedup_trials(spark, 1)
+
+
 @pytest.mark.slow
-def test_bigram_lm_random_corpora_match_python(spark):
+def test_line_dedup_random_corpora(spark):
+    _line_dedup_trials(spark, 3)
+
+
+def _bigram_lm_trials(spark, trials: int, vocab: list[str], seed: int = 909):
     """Randomized corpora through the distributed LM: per-doc micro-nat
     scores equal a plain-python reference bit-for-bit (add-one
     smoothing, self-trained)."""
@@ -282,9 +316,8 @@ def test_bigram_lm_random_corpora_match_python(spark):
 
     from akvorado_spark.operators.lm import bigram_lm_scores
 
-    rng = random.Random(909)
-    vocab = ["alpha", "beta", "gamma", "delta", "x1", "Y2", "z...", ""]
-    for trial in range(3):
+    rng = random.Random(seed)
+    for trial in range(trials):
         rows = []
         for d in range(rng.randint(3, 7)):
             rows.append(
@@ -315,3 +348,19 @@ def test_bigram_lm_random_corpora_match_python(spark):
                 for bg in bgs
             )
             assert got[d] == (len(bgs), lp), (trial, d)
+
+
+_LM_VOCAB = ["alpha", "beta", "gamma", "delta", "x1", "Y2", "z...", ""]
+
+
+def test_bigram_lm_one_random_corpus_matches_python(spark):
+    _bigram_lm_trials(spark, 1, _LM_VOCAB)
+
+
+def test_bigram_lm_quoting_hazard_words_match_python(spark):
+    _bigram_lm_trials(spark, 1, _QUOTING_VOCAB + ["Ñu", ""], seed=11)
+
+
+@pytest.mark.slow
+def test_bigram_lm_random_corpora_match_python(spark):
+    _bigram_lm_trials(spark, 3, _LM_VOCAB)

@@ -70,11 +70,11 @@ def test_quality_metrics_match_python_reference(spark):
     rng = random.Random(20260814)
     docs = [(i, _gen_doc(rng)) for i in range(300)]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    fr = quality_metric_fractions(F.col("text"))
+    fr = quality_metric_fractions("text")
     cols = [F.col("doc_id")]
     for k, (num, den) in fr.items():
-        cols += [num.alias(f"{k}_n"), den.alias(f"{k}_d")]
-    cols.append(gopher_quality_pass(F.col("text"), fractions=fr).alias("pass"))
+        cols += [F.expr(num).alias(f"{k}_n"), F.expr(den).alias(f"{k}_d")]
+    cols.append(gopher_quality_pass("text", fractions=fr).alias("pass"))
     got = {r["doc_id"]: r for r in df.select(*cols).collect()}
     n_checked = 0
     for i, text in docs:

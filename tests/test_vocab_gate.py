@@ -63,7 +63,7 @@ def test_frozen_merges_segment_real_vocab_identically(spark):
 
     docs = load_table(spark, "documents", SF_DIR)
     vocab = (
-        docs.select(F.explode(words_fn(F.col("text"))).alias("word"))
+        docs.select(F.explode(words_fn("text")).alias("word"))
         .distinct()
         .collect()
     )

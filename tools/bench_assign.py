@@ -71,7 +71,7 @@ def run(sf_dirs: list[str]) -> None:
 
         def single():
             scored = vecs.crossJoin(F.broadcast(cents)).withColumn(
-                "__sim", F.round(cosine(F.col("embedding"), F.col("c_vec")), 6)
+                "__sim", F.round(cosine("embedding", "c_vec"), 6)
             )
             return scored.groupBy("vec_id", "embedding").agg(
                 F.expr("max_by(c_id, struct(__sim, -c_id))").alias("__cell"),

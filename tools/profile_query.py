@@ -4,7 +4,10 @@ For each query (or the $SPARK_GRAFT_BENCH_QUERIES subset) this measures,
 after the same warmup bench.py performs:
 
   build_s   — constructing the DataFrame (Python query-builder time:
-              driver-side collects, codebook derivation, memo probes)
+              driver-side collects, codebook derivation)
+  build_py4j — py4j commands sent by that first build, and
+  rebuild_py4j — by a warm rebuild (the first rerun's fn() call);
+              counted by wrapping the gateway client's send_command
   first_s   — first .count() on that frame (analysis + optimization +
               execution, AQE replanning included)
   rerun_s   — a fresh fn() + .count(), min over N (exactly what
@@ -43,6 +46,20 @@ def _counts(spark):
         return -1
 
 
+def _py4j_counter(spark) -> list[int]:
+    """Count every py4j command from here on; read ``n[0]``."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    n = [0]
+
+    def counting_send(*args, **kwargs):
+        n[0] += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counting_send
+    return n
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import __spark_entry__ as entrymod
@@ -77,15 +94,16 @@ def main() -> None:
     get_store(spark, sf_dir)
 
     repeat = int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "3"))
+    py4j = _py4j_counter(spark)
     rows = []
     for name, fn in entrymod.queries().items():
         if only and name not in only:
             continue
         spark.sparkContext.setJobDescription(f"profile:{name}")
         try:
-            t0 = time.time()
+            t0, c0 = time.time(), py4j[0]
             df = fn(spark, sf_dir)
-            build_s = time.time() - t0
+            build_s, build_py4j = time.time() - t0, py4j[0] - c0
             t0 = time.time()
             df.count()
             first_s = time.time() - t0
@@ -97,9 +115,13 @@ def main() -> None:
                 cached = dt if cached is None else min(cached, dt)
             rerun = None
             st0 = _counts(spark)
+            rebuild_py4j = None
             for _ in range(repeat):
-                t0 = time.time()
-                fn(spark, sf_dir).count()
+                t0, c0 = time.time(), py4j[0]
+                rdf = fn(spark, sf_dir)
+                if rebuild_py4j is None:
+                    rebuild_py4j = py4j[0] - c0
+                rdf.count()
                 dt = time.time() - t0
                 rerun = dt if rerun is None else min(rerun, dt)
             stages = (_counts(spark) - st0) // repeat if st0 >= 0 else -1
@@ -117,6 +139,8 @@ def main() -> None:
             {
                 "name": name,
                 "build": round(build_s, 3),
+                "build_py4j": build_py4j,
+                "rebuild_py4j": rebuild_py4j,
                 "first": round(first_s, 3),
                 "cached": round(cached, 3),
                 "rerun": round(rerun, 3),
@@ -135,6 +159,7 @@ def main() -> None:
         print(
             f"{r['name']:28s} rerun={r['rerun']:7.3f} cached={r['cached']:7.3f} "
             f"overhead={r['overhead']:7.3f} build={r['build']:6.3f} stages={r['stages_per_run']}"
+            f" py4j={r['build_py4j']}/{r['rebuild_py4j']}"
         )
     print(f"{'TOTAL':28s} rerun={tot_r:7.3f} cached={tot_c:7.3f} overhead={tot_o:7.3f}")
 
