@@ -531,9 +531,10 @@ class FlowIngest:
             # overwrite the accumulated history with one batch's rows
             if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
                 raise
+        # the merge reads the table it overwrites: checkpoint the merged
+        # rows first, so the write no longer depends on the old files
         latest = latest_exporters(fresh, ttl=None)
-        latest.coalesce(1).write.mode("overwrite").parquet(self.exporters_path + "_tmp")
-        spark.read.parquet(self.exporters_path + "_tmp").write.mode("overwrite").parquet(
+        latest.coalesce(1).localCheckpoint().write.mode("overwrite").parquet(
             self.exporters_path
         )
 

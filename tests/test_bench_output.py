@@ -4,9 +4,9 @@ Round 9's BENCH json was recorded as ``parsed: null`` because the plan
 fingerprints inlined into the single stdout line pushed
 ``metric/value/queries`` past the driver's 2000-char tail capture.
 These tests pin the fix: the final line stays compact at the full
-50-query registry, fingerprints live in a sidecar that bench_diff can
-still resolve, and a py4j reflection change in the stage-snapshot path
-degrades to "no fingerprint" instead of a bench crash.
+50-query registry and fingerprints live in a sidecar that bench_diff
+can still resolve.  The stage-snapshot and plan-structure reads are
+tested with their module in tests/test_telemetry.py.
 """
 
 from __future__ import annotations
@@ -77,20 +77,6 @@ def test_all_queries_erroring_still_fits_tail():
     assert parsed["error_count"] == 50
     assert parsed["value"] == 60.0 * 50
     assert len(line) < 1900
-
-
-def test_stage_snapshot_degrades_to_none_on_reflection_drift():
-    """A Spark upgrade that changes the Scala default-arg mangling must
-    yield None (no fingerprint), never an exception into the loop."""
-
-    class _Boom:
-        def __getattr__(self, name):  # statusStore(), $default$N, anything
-            raise RuntimeError("py4j signature changed")
-
-    class _FakeSpark:
-        sparkContext = _Boom()
-
-    assert bench._stage_snapshot(_FakeSpark()) is None
 
 
 def test_plan_sidecar_roundtrips_through_bench_diff(tmp_path):
@@ -312,30 +298,6 @@ def test_bench_diff_consumes_real_driver_artifacts():
     assert "no-fingerprint: 0" in got
     assert "PLAN CHANGED  dedup_minhash_lsh" in got
     assert "PLAN CHANGED  multimodal_decode_meta" in got
-
-
-def test_canonical_plan_structure_strips_ids_keeps_structure():
-    """Same operator tree with different exprIds / codegen ids / stats
-    canonicalizes identically; a structural change (join strategy,
-    added exchange) does not."""
-    a = """AdaptiveSparkPlan isFinalPlan=false
-+- HashAggregate(keys=[k#12L], functions=[sum(v#34L)])
-   +- Exchange hashpartitioning(k#12L, 32), ENSURE_REQUIREMENTS, [plan_id=61]
-      +- *(2) BroadcastHashJoin [k#12L], [id#7L], Inner, BuildRight, false
-         :- *(1) Range (0, 1000, step=1, splits=4)
-         +- BroadcastExchange HashedRelationBroadcastMode
-            +- *(1) Range (0, 50, step=1, splits=4)"""
-    b = a.replace("#12L", "#99L").replace("*(2)", "*(7)").replace(
-        "plan_id=61", "plan_id=8"
-    ).replace("splits=4", "splits=16")
-    assert bench.canonical_plan_structure(a) == bench.canonical_plan_structure(b)
-    c = a.replace("BroadcastHashJoin", "SortMergeJoin").replace(
-        "BuildRight", "BuildLeft"
-    )
-    assert bench.canonical_plan_structure(a) != bench.canonical_plan_structure(c)
-    # depth (tree shape) matters, not just the operator multiset
-    assert "0|AdaptiveSparkPlan" in bench.canonical_plan_structure(a)
-    assert "Inner,BuildRight" in bench.canonical_plan_structure(a)
 
 
 def _run_diff(tmp_path, old_plan, new_plan, walls=(1.0, 1.0)):

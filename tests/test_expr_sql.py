@@ -5,45 +5,24 @@ against whichever frame it is applied to.
 
 Values are pinned against independent Python results, and the build
 cost of each SQL-text builder is pinned by counting the py4j commands
-it sends (fresh operands every time, so nothing built earlier can be
-reused).
+it sends, proxy deletes excepted (fresh operands every time, so nothing
+built earlier can be reused).
 """
 
 from __future__ import annotations
 
 import itertools
-from contextlib import contextmanager
 
 import numpy as np
 import pytest
+
+from akvorado_spark.telemetry import py4j_commands
 
 _FRESH = itertools.count()
 
 
 def _fresh(prefix: str) -> str:
     return f"{prefix}_{next(_FRESH)}"
-
-
-@contextmanager
-def _py4j_commands(spark):
-    """Count the py4j commands sent while the block runs, proxy
-    deletes excepted."""
-    client = spark.sparkContext._gateway._gateway_client
-    send = client.send_command
-    n = [0]
-
-    def counting_send(command, *args, **kwargs):
-        # proxy deletes ("m", "d") release garbage of earlier work
-        # whenever the collector runs; they are not construction
-        if not command.startswith("m\nd\n"):
-            n[0] += 1
-        return send(command, *args, **kwargs)
-
-    client.send_command = counting_send
-    try:
-        yield n
-    finally:
-        client.send_command = send
 
 
 def test_dot_norm_values_resolve_by_name_on_any_frame(spark):
@@ -158,6 +137,6 @@ def _builds():
 @pytest.mark.parametrize("name", list(_builds()))
 def test_sql_text_build_is_a_few_py4j_commands(spark, name):
     build = _builds()[name]
-    with _py4j_commands(spark) as n:
+    with py4j_commands(spark) as n:
         build()
     assert n[0] <= 5, (name, n[0])

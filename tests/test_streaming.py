@@ -85,6 +85,8 @@ def test_stream_exporters_table_refreshed(ingested):
     assert exporters.agg(F.max("TimeReceived")).collect()[0][0] == flows.agg(
         F.max("TimeReceived")
     ).collect()[0][0]
+    # the merge is written in place: no staging copy is left beside it
+    assert not os.path.exists(ingest.exporters_path + "_tmp")
 
 
 def test_serialize_flows_kafka_shape(spark):

@@ -19,7 +19,7 @@ warmup SF) and the wall time, then buckets:
 - PLAN CHANGED    the plan genuinely differs → the wall delta is (at
                   least partly) a real plan change; look at the code.
                   With ``plan_hash`` (round 13+: a canonicalized
-                  operator-tree hash — see bench.canonical_plan_
+                  operator-tree hash — see telemetry.canonical_plan_
                   structure) present on both sides this is authoritative;
                   for older sidecars the SHUFFLE BYTES decide (sharp
                   signal: <0.1% drift on an unchanged tree).

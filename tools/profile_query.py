@@ -7,7 +7,8 @@ after the same warmup bench.py performs:
               driver-side collects, codebook derivation)
   build_py4j — py4j commands sent by that first build, and
   rebuild_py4j — by a warm rebuild (the first rerun's fn() call);
-              counted by wrapping the gateway client's send_command
+              counted by ``telemetry.py4j_commands`` (proxy deletes
+              excepted)
   first_s   — first .count() on that frame (analysis + optimization +
               execution, AQE replanning included)
   rerun_s   — a fresh fn() + .count(), min over N (exactly what
@@ -15,7 +16,8 @@ after the same warmup bench.py performs:
   cached_s  — .count() on the SAME DataFrame object again (analysis/
               optimization cached by the Dataset's QueryExecution;
               execution + AQE only)
-  jobs/stages — delta of the status-store counters across rerun
+  stages_per_run — stages the reruns added to the status store, per
+              run (``telemetry.stage_snapshot`` diff)
 
 rerun_s - cached_s ≈ per-invocation plan overhead (Python build +
 analysis + optimize); cached_s ≈ pure execution.  Both matter at 100 TB
@@ -32,32 +34,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def _counts(spark):
-    try:
-        store = spark.sparkContext._jsc.sc().statusStore()
-        empty = spark.sparkContext._jvm.java.util.ArrayList()
-        sl = store.stageList(
-            empty,
-            *[getattr(store, f"stageList$default${i}")() for i in range(2, 6)],
-        )
-        return sl.size()
-    except Exception:
-        return -1
-
-
-def _py4j_counter(spark) -> list[int]:
-    """Count every py4j command from here on; read ``n[0]``."""
-    client = spark.sparkContext._gateway._gateway_client
-    send = client.send_command
-    n = [0]
-
-    def counting_send(*args, **kwargs):
-        n[0] += 1
-        return send(*args, **kwargs)
-
-    client.send_command = counting_send
-    return n
+from akvorado_spark import telemetry  # noqa: E402
+from bench import warm_up  # noqa: E402
 
 
 def main() -> None:
@@ -66,89 +44,73 @@ def main() -> None:
     from akvorado_spark.session import get_spark
 
     spark = get_spark("profile")
-    # same warmup discipline as bench.py
-    entrymod.entry(spark).count()
-    spark.range(64).repartition(32).mapInPandas(lambda it: it, "id long").count()
-    warm_dir = "/root/testdata/sf0.001"
     only = {
         q for q in os.environ.get("SPARK_GRAFT_BENCH_QUERIES", "").split(",") if q
     }
-    for name, fn in entrymod.queries().items():
-        if only and name not in only:
-            continue
-        try:
-            fn(spark, warm_dir).count()
-        except Exception:
-            pass
-    # same warmup-junk purge as bench.py (the session fact state is
-    # disk-backed since r14, so no keep-set is needed)
-    try:
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
-    except Exception:
-        pass
-    entrymod.queries()["flt_dsl_suite"](spark, sf_dir).count()
-    from akvorado_spark.oracle.rollup_queries import get_store
-
-    get_store(spark, sf_dir)
+    # the warmup bench.py performs, over the profiled queries only
+    warm_up(spark, sf_dir, {}, only)
 
     repeat = int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "3"))
-    py4j = _py4j_counter(spark)
     rows = []
-    for name, fn in entrymod.queries().items():
-        if only and name not in only:
-            continue
-        spark.sparkContext.setJobDescription(f"profile:{name}")
-        try:
-            t0, c0 = time.time(), py4j[0]
-            df = fn(spark, sf_dir)
-            build_s, build_py4j = time.time() - t0, py4j[0] - c0
-            t0 = time.time()
-            df.count()
-            first_s = time.time() - t0
-            cached = None
-            for _ in range(2):
+    with telemetry.py4j_commands(spark) as py4j:
+        for name, fn in entrymod.queries().items():
+            if only and name not in only:
+                continue
+            spark.sparkContext.setJobDescription(f"profile:{name}")
+            try:
+                t0, c0 = time.time(), py4j[0]
+                df = fn(spark, sf_dir)
+                build_s, build_py4j = time.time() - t0, py4j[0] - c0
                 t0 = time.time()
                 df.count()
-                dt = time.time() - t0
-                cached = dt if cached is None else min(cached, dt)
-            rerun = None
-            st0 = _counts(spark)
-            rebuild_py4j = None
-            for _ in range(repeat):
-                t0, c0 = time.time(), py4j[0]
-                rdf = fn(spark, sf_dir)
-                if rebuild_py4j is None:
-                    rebuild_py4j = py4j[0] - c0
-                rdf.count()
-                dt = time.time() - t0
-                rerun = dt if rerun is None else min(rerun, dt)
-            stages = (_counts(spark) - st0) // repeat if st0 >= 0 else -1
-        except Exception as exc:  # noqa: BLE001
-            print(f"{name}: ERROR {type(exc).__name__}: {exc}", file=sys.stderr)
-            continue
-        finally:
-            try:
-                jmap = spark.sparkContext._jsc.getPersistentRDDs()
-                for rid in list(jmap.keys()):
-                    jmap[rid].unpersist()
-            except Exception:
-                pass
-        rows.append(
-            {
-                "name": name,
-                "build": round(build_s, 3),
-                "build_py4j": build_py4j,
-                "rebuild_py4j": rebuild_py4j,
-                "first": round(first_s, 3),
-                "cached": round(cached, 3),
-                "rerun": round(rerun, 3),
-                "overhead": round(max(rerun - cached, 0.0), 3),
-                "stages_per_run": stages,
-            }
-        )
-        print(json.dumps(rows[-1]), flush=True)
+                first_s = time.time() - t0
+                cached = None
+                for _ in range(2):
+                    t0 = time.time()
+                    df.count()
+                    dt = time.time() - t0
+                    cached = dt if cached is None else min(cached, dt)
+                rerun = None
+                st0 = telemetry.stage_snapshot(spark)
+                rebuild_py4j = None
+                for _ in range(repeat):
+                    t0, c0 = time.time(), py4j[0]
+                    rdf = fn(spark, sf_dir)
+                    if rebuild_py4j is None:
+                        rebuild_py4j = py4j[0] - c0
+                    rdf.count()
+                    dt = time.time() - t0
+                    rerun = dt if rerun is None else min(rerun, dt)
+                st1 = telemetry.stage_snapshot(spark, st0)
+                stages = (
+                    len(telemetry.new_stages(st0, st1)) // repeat
+                    if st0 is not None and st1 is not None
+                    else -1
+                )
+            except Exception as exc:  # noqa: BLE001
+                print(f"{name}: ERROR {type(exc).__name__}: {exc}", file=sys.stderr)
+                continue
+            finally:
+                try:
+                    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+                    for rid in list(jmap.keys()):
+                        jmap[rid].unpersist()
+                except Exception:
+                    pass
+            rows.append(
+                {
+                    "name": name,
+                    "build": round(build_s, 3),
+                    "build_py4j": build_py4j,
+                    "rebuild_py4j": rebuild_py4j,
+                    "first": round(first_s, 3),
+                    "cached": round(cached, 3),
+                    "rerun": round(rerun, 3),
+                    "overhead": round(max(rerun - cached, 0.0), 3),
+                    "stages_per_run": stages,
+                }
+            )
+            print(json.dumps(rows[-1]), flush=True)
 
     rows.sort(key=lambda r: -r["rerun"])
     print("\n== sorted by rerun (bench-equivalent) ==")

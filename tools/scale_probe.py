@@ -1,10 +1,11 @@
 """Measured plan-shape evidence for SCALE.md.
 
-Runs the headline queries with the Spark UI's status store enabled and
-pulls per-stage executor metrics (shuffle read/write bytes, input
-bytes, memory/disk spill) over the REST API, attributing stages to
-queries via job groups.  The point: SCALE.md's shuffle-inventory
-claims stop being prose — this prints the observed numbers.
+Runs the headline queries in the engine's own session (``get_spark``)
+and reads per-stage executor metrics (shuffle read/write bytes, input
+bytes, disk spill, tasks) from Spark's status store, attributing stages
+to a query by diffing ``telemetry.stage_snapshot`` across its two runs.
+The point: SCALE.md's shuffle-inventory claims stop being prose — this
+prints the observed numbers.
 
 Usage: python tools/scale_probe.py [sf_dir] [query ...]
 Writes a markdown table to stdout (and optionally SCALE_METRICS.md
@@ -13,12 +14,13 @@ with --write).
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import urllib.request
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from akvorado_spark import telemetry  # noqa: E402
 
 HEADLINE = [
     "graph_line_suite",
@@ -51,11 +53,6 @@ HEADLINE = [
 ]
 
 
-def _get(url: str):
-    with urllib.request.urlopen(url, timeout=10) as r:
-        return json.load(r)
-
-
 def fmt_bytes(n: float) -> str:
     for unit in ("B", "KB", "MB", "GB"):
         if n < 1024 or unit == "GB":
@@ -69,55 +66,25 @@ def main() -> int:
     write = "--write" in sys.argv
     only = [a for a in sys.argv[2:] if not a.startswith("-")]
 
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
-    from pyspark.sql import SparkSession
-
-    # a dedicated session with the status store's REST endpoint on
-    SparkSession.builder.config("spark.ui.enabled", "true")
     from akvorado_spark.session import get_spark
 
-    # get_spark sets ui.enabled=false; override AFTER via a fresh builder
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ['SPARK_GRAFT_CPUS']}]")
-        .appName("scale_probe")
-        .config("spark.sql.shuffle.partitions", os.environ["SPARK_GRAFT_CPUS"])
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", "4099")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
+    spark = get_spark("scale_probe")
 
     import __spark_entry__ as entrymod
 
     queries = entrymod.queries()
     names = only or [n for n in HEADLINE if n in queries]
 
-    base = "http://localhost:4099/api/v1/applications"
-    app_id = _get(base)[0]["id"]
-
-    def stages():
-        out = {}
-        for st in _get(f"{base}/{app_id}/stages?status=COMPLETE"):
-            out[(st["stageId"], st["attemptId"])] = st
-        return out
-
     # warmup (not attributed)
     spark.range(64).repartition(32).mapInPandas(lambda it: it, "id long").count()
     queries["flt_dsl_suite"](spark, sf_dir).count()
 
-    import time
-
+    seen = telemetry.stage_snapshot(spark)
+    if seen is None:
+        print("# the status store cannot be read on this Spark", file=sys.stderr)
+        return 1
     rows = []
-    seen = set(stages())
     for name in names:
-        sc = spark.sparkContext
-        sc.setJobGroup(name, name)
         t0 = time.time()
         try:
             queries[name](spark, sf_dir).count()
@@ -129,21 +96,22 @@ def main() -> int:
             print(f"# {name}: ERROR {exc}", file=sys.stderr)
             continue
         finally:
-            sc.setJobGroup(None, None)
-        cur = stages()
-        new = [st for k, st in cur.items() if k not in seen]
-        seen = set(cur)
-        n_exch = sum(1 for st in new if st.get("shuffleWriteBytes", 0) > 0)
+            cur = telemetry.stage_snapshot(spark, seen) or seen
+            new = telemetry.new_stages(seen, cur)
+            seen = cur
+        # a stage that ran no task was skipped: its shuffle output was
+        # reused from an earlier job of the same query
+        ran = [st for st in new if st["tasks"]]
         rows.append(
             {
                 "query": name,
-                "stages": len(new),
-                "shuffle_stages": n_exch,
-                "input": sum(st.get("inputBytes", 0) for st in new),
-                "sh_write": sum(st.get("shuffleWriteBytes", 0) for st in new),
-                "sh_read": sum(st.get("shuffleReadBytes", 0) for st in new),
-                "spill": sum(st.get("diskBytesSpilled", 0) for st in new),
-                "tasks": sum(st.get("numCompleteTasks", 0) for st in new),
+                "stages": len(ran),
+                "shuffle_stages": sum(1 for st in ran if st["shuffle_write_bytes"]),
+                "input": sum(st["input_bytes"] for st in ran),
+                "sh_write": sum(st["shuffle_write_bytes"] for st in ran),
+                "sh_read": sum(st["shuffle_read_bytes"] for st in ran),
+                "spill": sum(st["spill_disk_bytes"] for st in ran),
+                "tasks": sum(st["tasks"] for st in ran),
                 "sec": round(dt, 2),
             }
         )
@@ -167,10 +135,10 @@ def main() -> int:
                 f"# SCALE_METRICS — measured per-query execution metrics (sf_dir={sf_dir})\n\n"
                 "Produced by `python tools/scale_probe.py <sf_dir> --write`: per-stage\n"
                 "executor metrics from Spark's status store, attributed to queries by\n"
-                "job group.  Evidence for the shuffle-inventory claims in SCALE.md —\n"
-                "shuffle volumes should track the *derived* frames (aggregates,\n"
-                "candidate sets), never the input scan volume, and spill should be 0\n"
-                "at this scale.\n\n" + table + "\n"
+                "status-store snapshot diff.  Evidence for the shuffle-inventory\n"
+                "claims in SCALE.md — shuffle volumes should track the *derived*\n"
+                "frames (aggregates, candidate sets), never the input scan volume, and\n"
+                "spill should be 0 at this scale.\n\n" + table + "\n"
             )
     return 0
 
