@@ -56,6 +56,20 @@ def get_spark(app_name: str = "akvorado_spark", cpus: int | None = None) -> Spar
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
             os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP", "64m"),
         )
+        # Compile each generated class once per session.  The console
+        # re-sends the same requests and ingest re-runs one plan per
+        # micro-batch, but with Spark's defaults every repeat compiled
+        # again: a 12-request perfbench console round recompiled 327
+        # classes its identical warm-up had compiled (0 with these two
+        # lines), an ingest round 115 (15).  Two causes, one line each.
+        # AQE renumbers a plan's codegenStageId between runs, and the
+        # id is part of the generated source, so an exact repeat missed
+        # the cache; and the 100-entry cache is below every measured
+        # working set (~250 classes for the console, 1 186 for the
+        # 50-query registry), so the LRU evicted each class before its
+        # repeat.
+        .config("spark.sql.codegen.useIdInClassName", "false")
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

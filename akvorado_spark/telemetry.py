@@ -1,17 +1,21 @@
 """Query-cost reads shared by ``bench.py`` and the profiling tools.
 
-Three measurements, each read without launching a Spark job:
+Four measurements, each read without launching a Spark job:
 
 - ``py4j_commands``: the py4j commands the driver sends while a block
   runs — the cost of building a query in Python;
+- ``codegen_compiles``: the classes Spark's code generator compiled
+  while a block ran (whole stages, projections, predicates), and the
+  ms spent compiling them;
 - ``stage_snapshot``: per-stage executor counters from Spark's status
   store, diffed across a query to attribute its stages and bytes;
 - ``plan_structure_hash``: a fingerprint of the physical plan's
   operator tree, stable across runs of the same code.
 
-The status store and the gateway client are reached through private
-py4j handles, so every read here is best effort: a Spark release that
-moves them degrades a measurement to ``None``, never into the caller.
+The status store, the codegen counters and the gateway client are
+reached through private py4j handles, so every read here is best
+effort: a Spark release that moves them degrades a measurement to
+``None``, never into the caller.
 """
 
 from __future__ import annotations
@@ -51,6 +55,43 @@ def py4j_commands(spark):
         yield n
     finally:
         client.send_command = send
+
+
+def _codegen_totals(spark) -> tuple[int, int] | None:
+    """(classes compiled, compile ns) since the JVM started, or None."""
+    try:
+        jvm = spark.sparkContext._jvm
+        metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+        generator = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+        return (
+            int(metrics.METRIC_COMPILATION_TIME().getCount()),
+            int(generator.compileTime()),
+        )
+    except Exception:  # noqa: BLE001 — reflection drift must not sink the caller
+        return None
+
+
+@contextmanager
+def codegen_compiles(spark):
+    """Count the generated classes Spark compiles while the block runs;
+    read ``c[0]`` from the yielded list after the block:
+    ``{"compiles": int, "compile_ms": float}``.  A class served from
+    Spark's codegen cache is not compiled, so on a repeated plan this
+    reads 0.  The counters are JVM-wide: compiles of another thread's
+    queries in the same window are counted too.  ``c[0]`` stays None
+    when the counters cannot be read (a Spark release that moved
+    them), as ``stage_snapshot`` does."""
+    box = [None]
+    start = _codegen_totals(spark)
+    try:
+        yield box
+    finally:
+        end = _codegen_totals(spark) if start is not None else None
+        if end is not None:
+            box[0] = {
+                "compiles": end[0] - start[0],
+                "compile_ms": round((end[1] - start[1]) / 1e6, 3),
+            }
 
 
 def stage_snapshot(spark, known: dict | None = None) -> dict | None:

@@ -114,6 +114,7 @@ def write_plan_sidecar(
     path: str,
     loadavg: float,
     query_load: dict | None = None,
+    query_compiles: dict | None = None,
 ) -> None:
     """Persist per-query plan fingerprints ({stages, shuffle_bytes} at
     the warmup SF) to a sidecar file so tools/bench_diff.py can still
@@ -125,7 +126,12 @@ def write_plan_sidecar(
     adjudication had only run-level loadavg to work with while external
     contention waves inflated individual queries 3-9x mid-run — the
     per-query sample lets bench_diff tag exactly WHICH samples were
-    contaminated (VERDICT r13 item 2)."""
+    contaminated (VERDICT r13 item 2).
+
+    ``query_compiles`` records, per query, the generated classes Spark
+    compiled during its last timed repeat (``telemetry.codegen_compiles``):
+    a warmed query reads ~0, so a non-zero count says the repeat paid
+    for compiling, not only for its data."""
     payload = {
         "plan": fingerprints,
         "warm_sf": 0.001,
@@ -133,6 +139,8 @@ def write_plan_sidecar(
     }
     if query_load:
         payload["query_load"] = query_load
+    if query_compiles:
+        payload["query_compiles"] = query_compiles
     with open(path, "w") as fh:
         json.dump(payload, fh, indent=1, sort_keys=True)
 
@@ -274,6 +282,7 @@ def main() -> None:
     # sampled right after each query's repeats rides the plan sidecar
     # so a contaminated sample explains itself mechanically
     query_load: dict[str, float] = {}
+    query_compiles: dict[str, dict] = {}
     for name, fn in entrymod.queries().items():
         if only and name not in only:
             continue
@@ -281,10 +290,12 @@ def main() -> None:
         n = 0
         try:
             for _ in range(repeat):
-                t0 = time.time()
-                df = fn(spark, sf_dir)
-                n = df.count()
-                dt = time.time() - t0
+                # the counter reads sit outside the timed span
+                with telemetry.codegen_compiles(spark) as compiles:
+                    t0 = time.time()
+                    df = fn(spark, sf_dir)
+                    n = df.count()
+                    dt = time.time() - t0
                 best = dt if best is None else min(best, dt)
         except Exception as exc:  # one broken query must not sink the run
             errors[name] = f"{type(exc).__name__}: {str(exc)[:200]}"
@@ -292,6 +303,8 @@ def main() -> None:
             continue
         timings[name] = round(best, 3)
         query_load[name] = round(os.getloadavg()[0], 2)
+        if compiles[0] is not None:
+            query_compiles[name] = compiles[0]
         print(
             f"# {name}: {best:.3f}s rows={n} load={query_load[name]}",
             file=sys.stderr,
@@ -324,7 +337,9 @@ def main() -> None:
             os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_PLAN.json"),
         )
         try:
-            write_plan_sidecar(fingerprints, plan_path, loadavg, query_load)
+            write_plan_sidecar(
+                fingerprints, plan_path, loadavg, query_load, query_compiles
+            )
             # ALSO an immutable per-run copy: BENCH_PLAN.json is
             # overwritten every run, so two rounds' artifacts would
             # otherwise resolve to the SAME fingerprints and bench_diff
@@ -341,7 +356,9 @@ def main() -> None:
             unique = os.path.join(
                 plans_dir, f"BENCH_PLAN_{stamp}_{os.getpid()}.json"
             )
-            write_plan_sidecar(fingerprints, unique, loadavg, query_load)
+            write_plan_sidecar(
+                fingerprints, unique, loadavg, query_load, query_compiles
+            )
             plan_file = os.path.join("benchplans", os.path.basename(unique))
             prune_stamped_sidecars(plans_dir)
             print(f"# plan fingerprints: {plan_path} + {plan_file}", file=sys.stderr)

@@ -134,6 +134,11 @@ def test_plan_sidecar_carries_per_query_load(tmp_path):
     # empty/omitted query_load keeps the pre-r14 payload shape
     bench.write_plan_sidecar(fp, str(side), 3.14, {})
     assert "query_load" not in json.loads(side.read_text())
+    assert "query_compiles" not in json.loads(side.read_text())
+    # per-query codegen compiles of the last timed repeat ride along
+    cg = {"q1": {"compiles": 0, "compile_ms": 0.0}}
+    bench.write_plan_sidecar(fp, str(side), 3.14, {"q1": 0.42}, cg)
+    assert json.loads(side.read_text())["query_compiles"] == cg
 
 
 def test_bench_diff_directory_fallback(tmp_path):

@@ -4,11 +4,14 @@ sankey/widget assembly must run clean in one pass."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 
 def test_demo_e2e_runs(spark, tmp_path, capsys):
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+    )
     import demo_e2e
 
     assert demo_e2e.main(str(tmp_path)) == 0

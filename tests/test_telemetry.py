@@ -17,6 +17,18 @@ def _drain_listener(spark) -> None:
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
 
 
+def _jobs_of(spark, group, action) -> int:
+    """Spark jobs ``action`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    _drain_listener(spark)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_stage_snapshot_degrades_to_none_on_reflection_drift():
     """A Spark upgrade that changes the Scala default-arg mangling must
     yield None (no fingerprint), never an exception into the loop."""
@@ -107,27 +119,47 @@ def test_py4j_counter_detaches_when_block_raises(spark):
 
 
 def test_measuring_a_count_adds_no_spark_jobs(spark):
-    sc = spark.sparkContext
     df = spark.range(5000).groupBy((F.col("id") % 7).alias("k")).count()
-
-    def jobs_of(group, action):
-        sc.setJobGroup(group, group)
-        try:
-            action()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        _drain_listener(spark)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
 
     def measured():
         before = telemetry.stage_snapshot(spark)
-        with telemetry.py4j_commands(spark) as n:
+        with telemetry.py4j_commands(spark) as n, telemetry.codegen_compiles(spark) as c:
             phash = telemetry.plan_structure_hash(df)
             df.count()
         after = telemetry.stage_snapshot(spark, before)
         assert before is not None and after is not None
-        assert phash and n[0] > 0
+        assert phash and n[0] > 0 and c[0] is not None
 
-    plain = jobs_of("telemetry-plain", df.count)
+    plain = _jobs_of(spark, "telemetry-plain", df.count)
     assert plain > 0
-    assert jobs_of("telemetry-measured", measured) == plain
+    assert _jobs_of(spark, "telemetry-measured", measured) == plain
+
+
+def test_codegen_counter_counts_compiles_and_runs_no_job(spark):
+    import random
+
+    # an inlined literal no other test uses: this plan's classes are new
+    k = random.getrandbits(40) + 1
+    fresh = lambda: spark.range(50).selectExpr(f"id * {k} + 1 AS x").agg({"x": "sum"})  # noqa: E731
+
+    def read_empty():
+        with telemetry.codegen_compiles(spark) as c:
+            pass
+        assert c[0] == {"compiles": 0, "compile_ms": 0.0}
+
+    assert _jobs_of(spark, "telemetry-codegen", read_empty) == 0
+    with telemetry.codegen_compiles(spark) as first:
+        fresh().collect()
+    with telemetry.codegen_compiles(spark) as again:
+        fresh().collect()
+    assert first[0]["compiles"] > 0 and first[0]["compile_ms"] > 0
+    assert again[0] == {"compiles": 0, "compile_ms": 0.0}
+
+
+def test_codegen_counter_degrades_to_none_on_reflection_drift():
+    class _FakeSpark:
+        sparkContext = None  # no ._jvm: the counters cannot be reached
+
+    with telemetry.codegen_compiles(_FakeSpark()) as c:
+        pass
+    assert c[0] is None

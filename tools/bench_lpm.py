@@ -18,6 +18,7 @@ Prints one JSON line per n on stdout.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
@@ -60,7 +61,7 @@ def main(sizes: list[int]) -> int:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from akvorado_spark.operators.lpm import lpm_join
 
     spark = (

@@ -1,6 +1,6 @@
 """Synthesize a 10x corpus from sf0.1 for scale-headroom measurement.
 
-Writes /root/repo/.scaledata/sf1/*.parquet (gitignored): each row-bearing
+Writes <checkout>/.scaledata/sf1/*.parquet (gitignored): each row-bearing
 table replicated 10x with key offsets so entities stay distinct, and
 content permuted per replica so the dedup/ANN workload keeps its organic
 structure instead of degenerating into 10-way exact-dup cliques:

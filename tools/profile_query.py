@@ -11,6 +11,11 @@ after the same warmup bench.py performs:
               excepted)
   first_s   — first .count() on that frame (analysis + optimization +
               execution, AQE replanning included)
+  build_compiles — classes Spark's code generator compiled over that
+              build and first count, and
+  rebuild_compiles — over the first rerun (``telemetry.codegen_compiles``;
+              the warmup already ran the query, so both read ~0 unless
+              the codegen cache missed)
   rerun_s   — a fresh fn() + .count(), min over N (exactly what
               bench.py times per repeat)
   cached_s  — .count() on the SAME DataFrame object again (analysis/
@@ -58,12 +63,13 @@ def main() -> None:
                 continue
             spark.sparkContext.setJobDescription(f"profile:{name}")
             try:
-                t0, c0 = time.time(), py4j[0]
-                df = fn(spark, sf_dir)
-                build_s, build_py4j = time.time() - t0, py4j[0] - c0
-                t0 = time.time()
-                df.count()
-                first_s = time.time() - t0
+                with telemetry.codegen_compiles(spark) as build_compiles:
+                    t0, c0 = time.time(), py4j[0]
+                    df = fn(spark, sf_dir)
+                    build_s, build_py4j = time.time() - t0, py4j[0] - c0
+                    t0 = time.time()
+                    df.count()
+                    first_s = time.time() - t0
                 cached = None
                 for _ in range(2):
                     t0 = time.time()
@@ -72,14 +78,17 @@ def main() -> None:
                     cached = dt if cached is None else min(cached, dt)
                 rerun = None
                 st0 = telemetry.stage_snapshot(spark)
-                rebuild_py4j = None
+                rebuild_py4j = rebuild_compiles = None
                 for _ in range(repeat):
-                    t0, c0 = time.time(), py4j[0]
-                    rdf = fn(spark, sf_dir)
-                    if rebuild_py4j is None:
-                        rebuild_py4j = py4j[0] - c0
-                    rdf.count()
-                    dt = time.time() - t0
+                    with telemetry.codegen_compiles(spark) as compiles:
+                        t0, c0 = time.time(), py4j[0]
+                        rdf = fn(spark, sf_dir)
+                        if rebuild_py4j is None:
+                            rebuild_py4j = py4j[0] - c0
+                        rdf.count()
+                        dt = time.time() - t0
+                    if rerun is None:
+                        rebuild_compiles = compiles[0]
                     rerun = dt if rerun is None else min(rerun, dt)
                 st1 = telemetry.stage_snapshot(spark, st0)
                 stages = (
@@ -103,6 +112,8 @@ def main() -> None:
                     "build": round(build_s, 3),
                     "build_py4j": build_py4j,
                     "rebuild_py4j": rebuild_py4j,
+                    "build_compiles": (build_compiles[0] or {}).get("compiles"),
+                    "rebuild_compiles": (rebuild_compiles or {}).get("compiles"),
                     "first": round(first_s, 3),
                     "cached": round(cached, 3),
                     "rerun": round(rerun, 3),
@@ -122,6 +133,7 @@ def main() -> None:
             f"{r['name']:28s} rerun={r['rerun']:7.3f} cached={r['cached']:7.3f} "
             f"overhead={r['overhead']:7.3f} build={r['build']:6.3f} stages={r['stages_per_run']}"
             f" py4j={r['build_py4j']}/{r['rebuild_py4j']}"
+            f" compiles={r['build_compiles']}/{r['rebuild_compiles']}"
         )
     print(f"{'TOTAL':28s} rerun={tot_r:7.3f} cached={tot_c:7.3f} overhead={tot_o:7.3f}")
 
