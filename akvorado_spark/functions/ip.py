@@ -3,8 +3,8 @@
 The engine stores every IP as a 16-byte binary column, IPv4 as the
 v4-mapped form ``::ffff:a.b.c.d`` — mirroring the reference's IPv6
 columns (reference: common/schema/clickhouse.go:226-244 and
-definition.go:274-281).  All operations here are **pure Spark SQL
-expressions** (whole-stage-codegen'd, no Python UDFs):
+definition.go:274-281).  Every operation but display is **Spark SQL
+text** (whole-stage-codegen'd, no Python UDFs):
 
 - comparisons / BETWEEN work natively: Spark compares BinaryType
   lexicographically byte-wise (unsigned), which on fixed 16-byte
@@ -15,7 +15,8 @@ expressions** (whole-stage-codegen'd, no Python UDFs):
   generated nibble-mask CASE chain, then ``unhex`` back.
 - display (reference ``IPv6NumToString``, console/query/column.go:208)
   renders v4-mapped as dotted quad and v6 in RFC 5952 compressed form
-  via string ops + a longest-zero-run regexp cascade.
+  through a pandas UDF over the few post-aggregation rows; SQL text
+  calls it as ``akvorado_ip_display`` (:func:`register_sql_functions`).
 
 Plan-time literals (prefix → lo/hi bounds) use Python's ``ipaddress``
 on the driver — they never touch executor rows.
@@ -24,6 +25,7 @@ on the driver — they never touch executor rows.
 from __future__ import annotations
 
 import ipaddress
+import weakref
 
 import pandas as pd
 from pyspark.sql import Column
@@ -62,34 +64,24 @@ def prefix_mapped_len(cidr: str) -> int:
 
 
 # ---------------------------------------------------------------------------
-# Column expressions
+# SQL text expressions
 # ---------------------------------------------------------------------------
 
 
-def ip_hex(ip: Column) -> Column:
-    """Lower-case 32-char hex form of a 16-byte address."""
-    return F.lower(F.hex(ip))
-
-
-def is_v4mapped(ip: Column) -> Column:
-    return ip_hex(ip).startswith(V4MAPPED_HEX_PREFIX)
-
-
-def _mask_nibble(c: Column, keep_bits: int) -> Column:
-    """Mask one hex nibble column (single char) keeping its top bits."""
+def _mask_nibble_sql(c: str, keep_bits: int) -> str:
+    """Mask one hex nibble (a 1-char SQL string) keeping its top bits."""
     if keep_bits <= 0:
-        return F.lit("0")
+        return "'0'"
     if keep_bits >= 4:
         return c
     mask = (0xF << (4 - keep_bits)) & 0xF
-    expr = F.lit("0")
-    for v in range(1, 16):
-        expr = F.when(c == format(v, "x"), format(v & mask, "x")).otherwise(expr)
-    return expr
+    whens = " ".join(f"WHEN '{v:x}' THEN '{v & mask:x}'" for v in range(1, 16))
+    return f"CASE {c} {whens} ELSE '0' END"
 
 
-def ip_truncate(ip: Column, bits: int) -> Column:
-    """Zero out all but the top ``bits`` bits (128-bit space).
+def ip_truncate(ip: str, bits: int) -> str:
+    """SQL text zeroing all but the top ``bits`` bits (128-bit space)
+    of the 16-byte address column ``ip``.
 
     Equivalent of the reference's ``IPv6CIDRToRange(addr, bits).1``
     dimension truncation (console/graph.go:44-48).  ``bits`` is a
@@ -99,33 +91,27 @@ def ip_truncate(ip: Column, bits: int) -> Column:
     bits = int(bits)
     if bits >= 128:
         return ip
-    h = ip_hex(ip)
+    h = f"lower(hex({ip}))"
     full_nibbles = bits // 4
     rem = bits % 4
-    parts = [F.substring(h, 1, full_nibbles)] if full_nibbles else []
+    parts = [f"substring({h}, 1, {full_nibbles})"] if full_nibbles else []
     pad = 32 - full_nibbles
     if rem:
-        parts.append(_mask_nibble(F.substring(h, full_nibbles + 1, 1), rem))
+        parts.append(_mask_nibble_sql(f"substring({h}, {full_nibbles + 1}, 1)", rem))
         pad -= 1
-    parts.append(F.lit("0" * pad))
-    return F.unhex(F.concat(*parts))
+    parts.append(f"'{'0' * pad}'")
+    return f"unhex(concat({', '.join(parts)}))"
 
 
-def ip_truncate_family(ip: Column, v4_bits: int, v6_bits: int) -> Column:
-    """Family-dependent truncation: v4-mapped addresses use the v4
-    prefix length (offset by 96), v6 the v6 length
+def ip_truncate_family(ip: str, v4_bits: int, v6_bits: int) -> str:
+    """Family-dependent truncation as SQL text: v4-mapped addresses use
+    the v4 prefix length (offset by 96), v6 the v6 length
     (reference console/graph.go:52-88)."""
-    return F.when(
-        is_v4mapped(ip), ip_truncate(ip, 96 + int(v4_bits))
-    ).otherwise(ip_truncate(ip, int(v6_bits)))
-
-
-def _v4_display(ip: Column) -> Column:
-    h = ip_hex(ip)
-    octets = [
-        F.conv(F.substring(h, 25 + 2 * i, 2), 16, 10) for i in range(4)
-    ]
-    return F.concat_ws(".", *octets)
+    return (
+        f"CASE WHEN startswith(lower(hex({ip})), '{V4MAPPED_HEX_PREFIX}')"
+        f" THEN {ip_truncate(ip, 96 + int(v4_bits))}"
+        f" ELSE {ip_truncate(ip, int(v6_bits))} END"
+    )
 
 
 # Display rendering is a *post-aggregation* concern in this engine: queries
@@ -194,8 +180,19 @@ def _net_prefix_udf():
     return _UDF_CACHE["net_prefix"]
 
 
-def ip_net_prefix(ip: Column, mask: Column, etype: Column) -> Column:
-    """Render 'addr/mask' of the network an address belongs to — the
-    SrcNetPrefix/DstNetPrefix ALIAS columns (reference
-    common/schema/definition.go:288-299).  Rows with mask=0 render ''."""
-    return _net_prefix_udf()(ip, mask, etype)
+_SQL_SESSIONS: weakref.WeakSet = weakref.WeakSet()
+
+
+def register_sql_functions(spark) -> None:
+    """Make the two display UDFs callable from SQL text, once per
+    session:
+
+    - ``akvorado_ip_display(ip)`` is :func:`ip_display`;
+    - ``akvorado_net_prefix(ip, mask, etype)`` renders 'addr/mask' of
+      the network an address belongs to — the SrcNetPrefix/DstNetPrefix
+      ALIAS columns (reference common/schema/definition.go:288-299).
+      Rows with mask=0 render ''."""
+    if spark not in _SQL_SESSIONS:
+        spark.udf.register("akvorado_ip_display", _display_udf())
+        spark.udf.register("akvorado_net_prefix", _net_prefix_udf())
+        _SQL_SESSIONS.add(spark)

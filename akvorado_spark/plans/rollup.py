@@ -37,8 +37,19 @@ from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from akvorado_spark.schema.definition import FlowSchema, flows_schema
+
+
+def path_exists(spark: SparkSession, p: str) -> bool:
+    """Whether ``p`` exists.  Local paths use ``os`` directly; URI-style
+    roots (hdfs://, s3a://, file://) go through Hadoop's FileSystem API
+    — an ``os`` check there is always False."""
+    if "://" not in p:
+        return os.path.exists(p)
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(p)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath)
 
 
 @dataclass(frozen=True)
@@ -101,19 +112,14 @@ class FlowStore:
 
     def _partition_dirs(self, p: str) -> list[str] | None:
         """Names of ``part_date=*`` children of a table dir, or ``None``
-        when the dir itself is absent.  Local paths use ``os`` directly;
-        URI-style roots (hdfs://, s3a://, file://) go through Hadoop's
-        FileSystem API — an ``os`` check there is always False and would
-        make an existing remote table silently read as empty."""
-        if "://" not in p:
-            if not os.path.isdir(p):
-                return None
-            return [d for d in os.listdir(p) if d.startswith("part_date=")]
-        jvm = self.spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(p)
-        fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        if not fs.exists(jpath):
+        when the dir itself is absent (see :func:`path_exists`: an
+        existing remote table must not read as empty)."""
+        if not path_exists(self.spark, p):
             return None
+        if "://" not in p:
+            return [d for d in os.listdir(p) if d.startswith("part_date=")]
+        jpath = self.spark._jvm.org.apache.hadoop.fs.Path(p)
+        fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
         return [
             st.getPath().getName()
             for st in fs.listStatus(jpath)
@@ -123,7 +129,8 @@ class FlowStore:
     # --- write paths ------------------------------------------------------
 
     def write_main(self, df: DataFrame, mode: str = "append") -> None:
-        """Append enriched flows to the main table.
+        """Append enriched flows to the main table: the columns of its
+        declared schema (:meth:`table_schema`), in its order and types.
 
         Partition by UTC date; sort within partitions on the sorting
         keys (time bucket first) so parquet min/max stats skip
@@ -139,7 +146,8 @@ class FlowStore:
         # and the in-partition sort keeps parquet min/max stats tight
         # (analog of the main table ORDER BY, migrations_helpers.go:443-449).
         out = (
-            df.withColumn("part_date", F.to_date("TimeReceived"))
+            self._declared(df, self.resolutions[0])
+            .withColumn("part_date", F.to_date("TimeReceived"))
             .repartitionByRange("part_date", *sort_keys)
             .sortWithinPartitions("part_date", *sort_keys)
         )
@@ -156,6 +164,16 @@ class FlowStore:
             for c in blooms:
                 writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
         writer.parquet(self.path(self.resolutions[0]))
+
+    def _declared(self, df: DataFrame, res: Resolution) -> DataFrame:
+        """``df``'s columns of the table's declared schema, in its order
+        and types: what :meth:`read` reads back."""
+        present = set(df.columns)
+        return df.selectExpr(*[
+            f"CAST(`{f.name}` AS {f.dataType.simpleString()}) AS `{f.name}`"
+            for f in self.table_schema(res).fields
+            if f.name in present
+        ])
 
     def rollup_frame(self, df: DataFrame, interval_s: int) -> DataFrame:
         """The rollup aggregation: SummingMergeTree semantics."""
@@ -192,7 +210,9 @@ class FlowStore:
         if since is not None:
             main = main.filter(F.col("part_date") >= F.lit(since.date()))
         for res in self.resolutions[1:]:
-            rolled = self.rollup_frame(main.drop("part_date"), res.interval_s)
+            rolled = self._declared(
+                self.rollup_frame(main.drop("part_date"), res.interval_s), res
+            )
             out = rolled.withColumn("part_date", F.to_date("TimeReceived"))
             keys = [k for k in self.schema.rollup_keys() if k != "TimeReceived"]
             out = out.repartitionByRange(
@@ -206,24 +226,25 @@ class FlowStore:
 
     # --- read / route -----------------------------------------------------
 
-    def read(self, res: Resolution) -> DataFrame:
-        """Read a table; an empty/absent table (nothing ingested yet, or
-        TTL dropped every partition) reads as a zero-row frame with the
-        declared schema instead of failing schema inference — queries
-        over an empty store must compose, not crash."""
-        p = self.path(res)
-        if self._partition_dirs(p):
-            return self.spark.read.parquet(p)
-        import pyspark.sql.types as T
-
-        schema = self.schema.struct_type(main=res.interval_s == 0)
+    def table_schema(self, res: Resolution) -> T.StructType:
+        """The declared schema of a table, ``part_date`` last: the
+        stored columns, plus ``Flows`` on a rollup.  The writers store
+        columns in this order, so a read with this schema returns them
+        as a read that infers the schema would."""
+        fields = list(self.schema.struct_type(main=res.interval_s == 0).fields)
         if res.interval_s != 0:
-            schema = T.StructType(
-                list(schema.fields) + [T.StructField("Flows", T.LongType())]
-            )
-        schema = T.StructType(
-            list(schema.fields) + [T.StructField("part_date", T.DateType())]
-        )
+            fields.append(T.StructField("Flows", T.LongType()))
+        return T.StructType(fields + [T.StructField("part_date", T.DateType())])
+
+    def read(self, res: Resolution) -> DataFrame:
+        """Read a table with its declared schema, so no read runs a
+        schema-inference job; an empty/absent table (nothing ingested
+        yet, or TTL dropped every partition) reads as a zero-row frame
+        with the same schema — queries over an empty store must
+        compose, not crash."""
+        schema = self.table_schema(res)
+        if self._partition_dirs(self.path(res)):
+            return self.spark.read.schema(schema).parquet(self.path(res))
         return self.spark.createDataFrame([], schema)
 
     def oldest(self, res: Resolution) -> datetime | None:

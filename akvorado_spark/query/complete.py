@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from akvorado_spark.functions.arrays import sql_literal
+from akvorado_spark.query.sql import run, with_ctes
 from akvorado_spark.sources.dictionaries import ASNS, TCP_PORTS, UDP_PORTS
 
 
@@ -31,6 +33,11 @@ def _match_pos(col, prefix: str):
     """positionCaseInsensitive: 1-based position of the prefix, 0 = no
     match (reference console/filter.go:34-41)."""
     return F.locate(prefix.lower(), F.lower(col))
+
+
+def _match_pos_sql(col: str, prefix: str) -> str:
+    """:func:`_match_pos` as SQL text."""
+    return f"locate({sql_literal(prefix.lower())}, lower({col}))"
 
 
 def _top_with_ord(df: DataFrame, order_exprs, limit: int) -> DataFrame:
@@ -47,17 +54,30 @@ def _top_with_ord(df: DataFrame, order_exprs, limit: int) -> DataFrame:
     return top.withColumn("ord", F.row_number().over(Window.orderBy(*order_exprs)))
 
 
-def _ranked_union(flows: DataFrame, dico: DataFrame, limit: int) -> DataFrame:
-    """UNION DISTINCT + GROUP BY (label, detail) ORDER BY MIN(rank),
-    MIN(ord) LIMIT — the reference's merge shape."""
-    u = flows.unionAll(dico)
+def _top_sql(relation: str, order: str, limit: int) -> str:
+    """:func:`_top_with_ord` as SQL text over ``relation``."""
     return (
-        u.groupBy("label", "detail")
-        .agg(F.min("rank").alias("__r"), F.min("ord").alias("__o"))
-        .orderBy("__r", "__o", "label")
-        .limit(limit)
-        .select("label", "detail")
+        f"SELECT *, CAST(row_number() OVER (ORDER BY {order}) AS BIGINT) AS ord"
+        f" FROM (SELECT * FROM {relation} ORDER BY {order} LIMIT {limit})"
     )
+
+
+def _ranked_union_sql(ctes: dict[str, str], seen: str, from_dict: str, limit: int) -> str:
+    """UNION DISTINCT + GROUP BY (label, detail) ORDER BY MIN(rank),
+    MIN(ord) LIMIT — the reference's merge shape — over the two
+    branches' SELECTs of (label, detail, rank, ord)."""
+    return with_ctes(
+        ctes,
+        f"SELECT label, detail FROM (SELECT label, detail, min(rank) AS __r, min(ord) AS __o"
+        f" FROM ({seen} UNION ALL {from_dict}) GROUP BY label, detail)"
+        f" ORDER BY __r, __o, label LIMIT {limit}",
+    )
+
+
+def _values(rows, names: str) -> str:
+    """Literal rows as a relation with columns ``names``."""
+    vals = ", ".join(f"({', '.join(sql_literal(v) for v in r)})" for r in rows)
+    return f"SELECT * FROM VALUES {vals} AS __v({names})"
 
 
 def complete_cached(cache, handler, flows: DataFrame, prefix: str = "", **kw) -> list:
@@ -87,38 +107,26 @@ def complete_asn(
 ) -> DataFrame:
     """AS-number completion (reference console/filter.go:285-340):
     label 'AS<n>', detail = AS name; flows seen recently first."""
-    names = asns or ASNS
-    spark = flows.sparkSession
-    from akvorado_spark.sources.tables import local_df
-
-    dico = local_df(spark, names, "asn long, name string")
-
+    pos = _match_pos_sql("name", prefix)
+    ctes = {
+        "__dico": f"SELECT CAST(asn AS BIGINT) AS asn, name FROM ({_values(asns or ASNS, 'asn, name')})",
+        "__seen": (
+            f"SELECT /*+ BROADCAST(d) */ f.`{column}`, d.name, count(1) AS __c FROM {{flows}} f"
+            f" LEFT JOIN __dico d ON f.`{column}` = d.asn"
+            f" WHERE d.name IS NOT NULL AND {_match_pos_sql('d.name', prefix)} > 0"
+            f" GROUP BY f.`{column}`, d.name"
+        ),
+    }
     seen = (
-        flows.join(F.broadcast(dico), flows[column] == dico["asn"], "left")
-        .filter(F.col("name").isNotNull() & (_match_pos(F.col("name"), prefix) > 0))
-        .groupBy(column, "name")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .transform(lambda d: _top_with_ord(d, [F.col("__c").desc(), column], limit))
-        .select(
-            F.concat(F.lit("AS"), F.col(column).cast("string")).alias("label"),
-            F.col("name").alias("detail"),
-            F.lit(1).alias("rank"),
-            F.col("ord").cast("long").alias("ord"),
-        )
+        f"SELECT concat('AS', CAST(`{column}` AS STRING)) AS label, name AS detail, 1 AS rank, ord"
+        f" FROM ({_top_sql('__seen', f'__c DESC, `{column}`', limit)})"
     )
     from_dict = (
-        dico.filter(_match_pos(F.col("name"), prefix) > 0)
-        .transform(
-            lambda d: _top_with_ord(d, [_match_pos(F.col("name"), prefix), F.col("asn")], limit)
-        )
-        .select(
-            F.concat(F.lit("AS"), F.col("asn").cast("string")).alias("label"),
-            F.col("name").alias("detail"),
-            F.lit(2).alias("rank"),
-            F.col("ord").cast("long").alias("ord"),
-        )
+        "SELECT concat('AS', CAST(asn AS STRING)) AS label, name AS detail, 2 AS rank, ord"
+        f" FROM ({_top_sql(f'(SELECT * FROM __dico WHERE {pos} > 0)', f'{pos}, asn', limit)})"
     )
-    return _ranked_union(seen, from_dict, limit)
+    text = _ranked_union_sql(ctes, seen, from_dict, limit)
+    return run(flows.sparkSession, text, flows=flows)
 
 
 def complete_exporter(
@@ -155,49 +163,31 @@ def complete_port(
     """Port completion (reference console/filter.go:341-420): ports of
     recent TCP/UDP flows named by their service, then the rest of the
     dictionaries."""
-    spark = flows.sparkSession
-    from akvorado_spark.sources.tables import local_df
-
-    tcp = local_df(spark, TCP_PORTS, "port long, name string")
-    udp = local_df(spark, UDP_PORTS, "port long, name string")
-
-    fl = flows.filter(F.col("Proto").isin(6, 17))
-    both = tcp.select("port", "name", F.lit(6).alias("dproto")).unionAll(
-        udp.select("port", "name", F.lit(17).alias("dproto"))
-    )
+    pos = _match_pos_sql("name", prefix)
+    both = [(p, n, 6) for p, n in TCP_PORTS] + [(p, n, 17) for p, n in UDP_PORTS]
+    ctes = {
+        "__both": (
+            f"SELECT CAST(port AS BIGINT) AS port, name, dproto"
+            f" FROM ({_values(both, 'port, name, dproto')})"
+        ),
+        "__named": (
+            f"SELECT /*+ BROADCAST(d) */ f.`{column}`, f.Proto, d.name, count(1) AS __c"
+            f" FROM {{flows}} f LEFT JOIN __both d ON f.`{column}` = d.port AND f.Proto = d.dproto"
+            f" WHERE f.Proto IN (6, 17) AND d.name IS NOT NULL AND {_match_pos_sql('d.name', prefix)} > 0"
+            f" GROUP BY f.`{column}`, f.Proto, d.name"
+        ),
+    }
     named = (
-        fl.join(
-            F.broadcast(both),
-            (fl[column] == both["port"]) & (fl["Proto"] == both["dproto"]),
-            "left",
-        )
-        .filter(F.col("name").isNotNull() & (_match_pos(F.col("name"), prefix) > 0))
-        .groupBy(column, "Proto", "name")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .transform(
-            lambda d: _top_with_ord(d, [F.col("__c").desc(), F.col(column), F.col("Proto")], limit)
-        )
-        .select(
-            F.col(column).cast("string").alias("label"),
-            F.col("name").alias("detail"),
-            F.lit(1).alias("rank"),
-            F.col("ord").cast("long").alias("ord"),
-        )
+        f"SELECT CAST(`{column}` AS STRING) AS label, name AS detail, 1 AS rank, ord"
+        f" FROM ({_top_sql('__named', f'__c DESC, `{column}`, Proto', limit)})"
     )
-    known = tcp.unionAll(udp).distinct()
+    known = f"(SELECT DISTINCT port, name FROM __both WHERE {pos} > 0)"
     from_dict = (
-        known.filter(_match_pos(F.col("name"), prefix) > 0)
-        .transform(
-            lambda d: _top_with_ord(d, [_match_pos(F.col("name"), prefix), F.col("port")], limit)
-        )
-        .select(
-            F.col("port").cast("string").alias("label"),
-            F.col("name").alias("detail"),
-            F.lit(2).alias("rank"),
-            F.col("ord").cast("long").alias("ord"),
-        )
+        "SELECT CAST(port AS STRING) AS label, name AS detail, 2 AS rank, ord"
+        f" FROM ({_top_sql(known, f'{pos}, port', limit)})"
     )
-    return _ranked_union(named, from_dict, limit)
+    text = _ranked_union_sql(ctes, named, from_dict, limit)
+    return run(flows.sparkSession, text, flows=flows)
 
 
 # ---------------------------------------------------------------------------

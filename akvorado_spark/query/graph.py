@@ -5,10 +5,14 @@ Pipeline (reference console/line.go:218-258):
 1. parse+compile the filter twice (direct + reversed);
 2. route to the best rollup table (or main if any MainOnly column is
    referenced by the filter or the dimensions);
-3. per axis, build a LineRequest on the routed frame with the range
-   filter applied *before* bucketing (partition pruning + parquet
+3. per axis, render a LineRequest over the routed table with the
+   range filter applied *before* bucketing (partition pruning + parquet
    pushdown handle the scan);
 4. union the axes with an ``axis`` literal column.
+
+Like the reference's one ClickHouse query per request (console/query,
+common/sqlbuilder), a request is one Spark SQL statement with CTEs over
+a known-schema read of the routed table: Catalyst sees every axis.
 
 Previous-period axes shift the scan range back, then shift bucket
 timestamps forward to overlay the main time axis
@@ -17,22 +21,18 @@ timestamps forward to overlay the main time axis
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from akvorado_spark.filtering import compile_filter, flow_filter_schema
-from akvorado_spark.functions.ip import ip_display, ip_truncate_family
-from akvorado_spark.plans.rollup import FlowStore
-from akvorado_spark.query.line import LineRequest, compile_line, top_rows_frame
-from akvorado_spark.query.sankey import (
-    SankeyRequest,
-    compile_sankey,
-    data_range,
-    top_rows,
-)
+from akvorado_spark.functions.ip import ip_truncate_family, register_sql_functions
+from akvorado_spark.plans.rollup import FlowStore, Resolution
+from akvorado_spark.query.line import LineRequest, line_sql, top_rows_sql
+from akvorado_spark.query.sankey import SankeyRequest, range_sql, sankey_sql
+from akvorado_spark.query.sankey import top_rows_sql as sankey_rows_sql
+from akvorado_spark.query.sql import bigint, run, with_ctes
 from akvorado_spark.query.units import UNITS
 
 # only the percentage-of-interface units are directional
@@ -85,8 +85,6 @@ def _us(dt: datetime) -> int:
     return int(dt.timestamp() * 1_000_000)
 
 
-
-
 def align_range(
     start: datetime, end: datetime, table_interval_s: int, interval_s: int
 ) -> tuple[datetime, datetime]:
@@ -110,71 +108,116 @@ def align_range(
     return datetime.fromtimestamp(s, tz=tz), datetime.fromtimestamp(e, tz=tz)
 
 
-def graph_line(store: FlowStore, req: GraphRequest) -> DataFrame:
+def _axis_source(
+    store: FlowStore,
+    res: Resolution,
+    req: GraphRequest,
+    filt,
+    start: datetime,
+    end: datetime,
+    dims: tuple[str, ...],
+    base_cols: tuple[str, ...],
+) -> str:
+    """One axis's rows of ``{src}`` (the routed table) as SQL: the
+    range, then the alias columns the filter and the axis read, then
+    the user filter, then the IP truncation of the dimensions."""
+    # part_date predicate first: prunes whole partitions before the
+    # row-level TimeReceived filter (pushed to parquet) applies.
+    ranged = (
+        f"(SELECT * FROM {{src}} WHERE part_date >= DATE '{start.date()}'"
+        f" AND part_date <= DATE '{end.date()}'"
+        f" AND TimeReceived >= timestamp_micros({_us(start)})"
+        f" AND TimeReceived < timestamp_micros({_us(end)}))"
+    )
+    # alias (computed-on-read) columns must exist BEFORE the user
+    # filter runs — PacketSize/NetPrefix etc. are filterable but not
+    # stored; stored-column predicates still push through the
+    # projection
+    present = set(store.table_schema(res).names)
+    viewed = store.schema.view_sql(ranged, present, {*filt.columns_used, *dims, *base_cols})
+    # IP dimension truncation (P12, reference console/graph.go:44-88)
+    truncating = req.truncate_v4 < 32 or req.truncate_v6 < 128
+    items = []
+    for c in dict.fromkeys(("TimeReceived", *base_cols, *dims)):
+        spec = store.schema.by_name.get(c)
+        if truncating and c in dims and spec is not None and spec.truncatable_ip:
+            items.append(f"{ip_truncate_family(f'`{c}`', req.truncate_v4, req.truncate_v6)} AS `{c}`")
+        else:
+            items.append(f"`{c}`")
+    return f"SELECT {', '.join(items)} FROM ({viewed}) WHERE {filt.spark_sql}"
+
+
+def _string_dims(store: FlowStore, dims) -> set[str]:
+    return {
+        d for d in dims
+        if store.schema.by_name[d].dtype.simpleString() in ("string", "binary")
+    }
+
+
+def _shown(store: FlowStore, actual: str, name: str) -> str:
+    """A folded dimension as the chart shows it, named ``name``.
+    Binary IP dimensions render to display strings *after* the
+    aggregation (P11): grouping stayed on cheap binary keys; only the
+    few surviving rows pay the render.  The 'Other' fold literal
+    arrives as the 5-byte b'Other' (no 16-byte collision)."""
+    if store.schema.by_name[actual].ip_addr:
+        return (
+            f"CASE WHEN `{actual}` = X'{b'Other'.hex()}' THEN 'Other'"
+            f" ELSE akvorado_ip_display(`{actual}`) END AS `{name}`"
+        )
+    return f"`{actual}` AS `{name}`"
+
+
+def _unit(units: str, res: Resolution) -> tuple[str, tuple[str, ...], str]:
+    """(aggregate SQL, columns it reads, value type) of a unit."""
+    unit = UNITS[units]
+    if units == "fps" and res.interval_s > 0:
+        return "SUM(Flows)", ("Flows",), unit.value_type  # exact through the rollup merge
+    return unit.agg_sql, unit.base_cols, unit.value_type
+
+
+def _route(store: FlowStore, req: GraphRequest, points: int):
+    """(filter schema, direct filter, table, interval, aligned start,
+    aligned end) of a request charted on ``points`` points."""
     sch = flow_filter_schema()
     direct = compile_filter(req.filter, sch)
-    reverse = direct.reverse()
-
-    # --- main-table analysis over filter + dimensions (P10) ---------------
+    # main-table analysis over filter + dimensions (P10)
     main_only = store.schema.main_only_names()
     require_main = direct.requires_main_table or any(d in main_only for d in req.dimensions)
-    truncating = req.truncate_v4 < 32 or req.truncate_v6 < 128
-
-    target = max(int((req.end - req.start).total_seconds() // req.points), 1)
+    target = max(int((req.end - req.start).total_seconds() // points), 1)
     res, interval_s = store.best_table(req.start, req.end, target, require_main)
-    frame = store.read(res)
     # one aligned range shared by every axis (shifted axes keep its
     # length, so all axes draw the same number of points)
-    a_start, a_end = align_range(req.start, req.end, res.interval_s, interval_s)
+    return (sch, direct, res, interval_s,
+            *align_range(req.start, req.end, res.interval_s, interval_s))
 
-    axes: list[DataFrame] = []
 
-    # axes 2-4 fold against axis 1's top set (the reference shares the
-    # rows CTE across axes via skipWithClause, console/line.go:169-216)
-    shared_rows: dict[str, DataFrame] = {}
+def graph_line(store: FlowStore, req: GraphRequest) -> DataFrame:
+    """Every axis of a /graph/line request as ONE SQL statement over
+    the routed table: one ``line_sql`` subquery per axis, unioned."""
+    sch, direct, res, interval_s, a_start, a_end = _route(store, req, req.points)
+    reverse = direct.reverse()
+    rdims = tuple(sch.reverse_name(d) for d in req.dimensions)
+    axes = [(1, direct, req.dimensions, None)]
+    if req.bidirectional:
+        axes.append((2, reverse, rdims, None))
+    if req.previous_period:
+        shift = _shift_back(req)
+        axes.append((3, direct, req.dimensions, shift))
+        if req.bidirectional:
+            axes.append((4, reverse, rdims, shift))
 
-    def one_axis(
-        axis_no: int,
-        filt,
-        dims: tuple[str, ...],
-        shift: timedelta | None = None,
-        reversed_axis: bool = False,
-    ) -> DataFrame:
+    ctes: dict[str, str] = {}
+    selects = []
+    for axis_no, filt, dims, shift in axes:
         start, end = a_start, a_end
         if shift is not None:
             start, end = start - shift, end - shift
-        # part_date predicate first: prunes whole partitions before the
-        # row-level TimeReceived filter (pushed to parquet) applies.
-        df = frame.filter(
-            (F.col("part_date") >= F.lit(start.date()))
-            & (F.col("part_date") <= F.lit(end.date()))
-        ).drop("part_date")
-        df = df.filter(
-            (F.col("TimeReceived") >= F.lit(start)) & (F.col("TimeReceived") < F.lit(end))
-        )
-        # alias (computed-on-read) columns must exist BEFORE the user
-        # filter runs — PacketSize/NetPrefix etc. are filterable but
-        # not stored; stored-column predicates still push through the
-        # projection
-        df = store.schema.view(df).filter(filt.column())
-        # IP dimension truncation (P12, reference console/graph.go:44-88)
-        if truncating:
-            truncs = {
-                d: ip_truncate_family(F.col(d), req.truncate_v4, req.truncate_v6)
-                for d in dims
-                if (spec := store.schema.by_name.get(d)) is not None
-                and spec.truncatable_ip
-            }
-            if truncs:
-                df = df.withColumns(truncs)
         # a reversed axis measures the opposite traffic direction, so
         # direction-asymmetric units swap (reference reverseUnits,
         # console/graph.go:30-40, applied at console/line.go:120-123)
-        units = REVERSE_UNITS.get(req.units, req.units) if reversed_axis else req.units
-        unit = UNITS[units]
-        agg_sql = unit.agg_sql
-        if units == "fps" and res.interval_s > 0:
-            agg_sql = "SUM(Flows)"  # exact flow count through the rollup merge
+        units = REVERSE_UNITS.get(req.units, req.units) if axis_no % 2 == 0 else req.units
+        agg_sql, base_cols, value_type = _unit(units, res)
         # the previous-period axes chart ONE total series: the reference
         # strips dimensions when shifting (console/line.go:81-86,
         # "dimensions are stripped"), so axes 3/4 aggregate over the
@@ -189,86 +232,44 @@ def graph_line(store: FlowStore, req: GraphRequest) -> DataFrame:
             limit=req.limit,
             limit_type=req.limit_type,
             agg_sql=agg_sql,
-            base_cols=unit.base_cols if agg_sql == unit.agg_sql else ("Flows",),
-            value_type=unit.value_type,
+            base_cols=base_cols,
+            value_type=value_type,
             start_us=_us(start),
             end_us=_us(end),
         )
-        if not axis_dims:
-            line = compile_line(df, lreq)
-        else:
-            if axis_no == 1:
-                rows = top_rows_frame(df, lreq)
-                shared_rows["rows"] = rows
-            else:
-                # rename atomically: sequential withColumnRenamed breaks
-                # when the dimension list contains a reverse pair
-                # (SrcAS,DstAS → DstAS,SrcAS would collide mid-loop)
-                rows = shared_rows["rows"].select(
-                    *[
-                        F.col(orig).alias(actual)
-                        for orig, actual in zip(req.dimensions, dims)
-                    ]
-                )
-            line = compile_line(df, lreq, rows=rows)
-        if not axis_dims:
-            line = line.select(
-                "bucket",
-                *[F.lit("").alias(d) for d in req.dimensions],
-                "sum_w",
-                "xps",
-            )
-        if shift is not None:
-            shift_us = int(shift.total_seconds() * 1_000_000)
-            line = line.withColumn("bucket", F.col("bucket") + F.lit(shift_us))
-        # Render binary IP dimensions to display strings *after* the
-        # aggregation (P11): grouping stayed on cheap binary keys; only
-        # the few surviving rows pay the render.  The 'Other' fold
-        # literal arrives as the 5-byte b'Other' (no 16-byte collision).
-        # One withColumns call: each chained withColumn costs a plan
-        # analysis round (r13 construction batching).
-        renders = {
-            d: F.when(F.col(d) == F.lit(b"Other"), F.lit("Other")).otherwise(
-                ip_display(F.col(d))
-            )
-            for d in axis_dims
-            if (spec := store.schema.by_name.get(d)) is not None and spec.ip_addr
-        }
-        if renders:
-            line = line.withColumns(renders)
-        # normalize dimension column names across axes (reverse swaps
-        # them); atomic select so a reversed pair can't collide mid-rename
+        src = f"__src{axis_no}"
+        ctes[src] = _axis_source(store, res, req, filt, start, end, axis_dims, base_cols)
+        rows = None
         if axis_dims:
-            line = line.select(
-                "bucket",
-                *[
-                    F.col(actual).alias(orig)
-                    for orig, actual in zip(req.dimensions, axis_dims)
-                ],
-                "sum_w",
-                "xps",
-            )
-        return line.select(F.lit(axis_no).alias("axis"), "*")
-
-    axes.append(one_axis(1, direct, req.dimensions))
-    if req.bidirectional:
-        rdims = tuple(sch.reverse_name(d) for d in req.dimensions)
-        axes.append(one_axis(2, reverse, rdims, reversed_axis=True))
-    if req.previous_period:
-        shift = _shift_back(req)
-        axes.append(one_axis(3, direct, req.dimensions, shift))
-        if req.bidirectional:
-            rdims = tuple(sch.reverse_name(d) for d in req.dimensions)
-            axes.append(one_axis(4, reverse, rdims, shift, reversed_axis=True))
-
-    out = axes[0]
-    for a in axes[1:]:
-        out = out.unionAll(a)
-    return out
+            # axes 2-4 fold against axis 1's top set (the reference
+            # shares the rows CTE across axes via skipWithClause,
+            # console/line.go:169-216); renamed positionally, so a
+            # reverse pair (SrcAS,DstAS → DstAS,SrcAS) cannot collide
+            if axis_no == 1:
+                ctes["__rows1"] = top_rows_sql(lreq, src)
+            rows = "(SELECT {} FROM __rows1)".format(", ".join(
+                f"`{orig}` AS `{actual}`" for orig, actual in zip(req.dimensions, dims)
+            ))
+        line = line_sql(lreq, src, _string_dims(store, axis_dims), rows=rows)
+        if axis_dims:
+            # normalize dimension names across axes (reverse swaps them)
+            shown = [_shown(store, a, o) for o, a in zip(req.dimensions, axis_dims)]
+        else:
+            shown = [f"'' AS `{d}`" for d in req.dimensions]
+        bucket = "bucket" if shift is None else (
+            f"bucket + {bigint(int(shift.total_seconds() * 1_000_000))} AS bucket"
+        )
+        selects.append(
+            f"SELECT {axis_no} AS axis, {', '.join([bucket, *shown, 'sum_w', 'xps'])} FROM (\n{line}\n)"
+        )
+    register_sql_functions(store.spark)
+    text = with_ctes(ctes, "\nUNION ALL\n".join(selects))
+    return run(store.spark, text, src=store.read(res))
 
 
 def graph_sankey(store: FlowStore, req: GraphRequest) -> DataFrame:
-    """Flows-native /graph/sankey equivalent (SURVEY §3.2).
+    """Flows-native /graph/sankey equivalent (SURVEY §3.2), both axes
+    one SQL statement.
 
     Differences from :func:`graph_line` mirroring the reference:
     no time axis (xps averages over the data span); table routing uses
@@ -276,47 +277,10 @@ def graph_sankey(store: FlowStore, req: GraphRequest) -> DataFrame:
     axis probes the *forward* top-N rows positionally
     (console/sankey.go:136-147).
     """
-    sch = flow_filter_schema()
-    direct = compile_filter(req.filter, sch)
-    reverse = direct.reverse()
-
-    main_only = store.schema.main_only_names()
-    require_main = direct.requires_main_table or any(d in main_only for d in req.dimensions)
-    truncating = req.truncate_v4 < 32 or req.truncate_v6 < 128
-
-    target = max(int((req.end - req.start).total_seconds() // 20), 1)
-    res, s_interval = store.best_table(req.start, req.end, target, require_main)
-    frame = store.read(res)
-    a_start, a_end = align_range(req.start, req.end, res.interval_s, s_interval)
-
-    def prep(filt, dims: tuple[str, ...]) -> DataFrame:
-        df = frame.filter(
-            (F.col("part_date") >= F.lit(a_start.date()))
-            & (F.col("part_date") <= F.lit(a_end.date()))
-        ).drop("part_date")
-        df = df.filter(
-            (F.col("TimeReceived") >= F.lit(a_start))
-            & (F.col("TimeReceived") < F.lit(a_end))
-        )
-        # view() before the user filter: alias columns are filterable
-        df = store.schema.view(df).filter(filt.column())
-        if truncating:
-            truncs = {
-                d: ip_truncate_family(F.col(d), req.truncate_v4, req.truncate_v6)
-                for d in dims
-                if (spec := store.schema.by_name.get(d)) is not None
-                and spec.truncatable_ip
-            }
-            if truncs:
-                df = df.withColumns(truncs)
-        return df
+    sch, direct, res, _, a_start, a_end = _route(store, req, 20)
 
     def unit_req(units: str, dims: tuple[str, ...]) -> SankeyRequest:
-        unit = UNITS[units]
-        agg_sql = unit.agg_sql
-        base_cols = unit.base_cols
-        if units == "fps" and res.interval_s > 0:
-            agg_sql, base_cols = "SUM(Flows)", ("Flows",)
+        agg_sql, base_cols, value_type = _unit(units, res)
         return SankeyRequest(
             time_col="TimeReceived",
             dimensions=dims,
@@ -324,44 +288,37 @@ def graph_sankey(store: FlowStore, req: GraphRequest) -> DataFrame:
             limit=req.limit,
             agg_sql=agg_sql,
             base_cols=base_cols,
-            value_type=unit.value_type,
+            value_type=value_type,
         )
 
-    def render(line: DataFrame, dims: tuple[str, ...]) -> DataFrame:
-        renders = {
-            d: F.when(F.col(d) == F.lit(b"Other"), F.lit("Other")).otherwise(
-                ip_display(F.col(d))
-            )
-            for d in dims
-            if (spec := store.schema.by_name.get(d)) is not None and spec.ip_addr
-        }
-        return line.withColumns(renders) if renders else line
-
-    fdf = prep(direct, req.dimensions)
     freq = unit_req(req.units, req.dimensions)
-    fwd_rows = top_rows(fdf, freq)
-    rng = data_range(fdf, "TimeReceived")
-    ax1 = render(
-        compile_sankey(fdf, freq, rows=fwd_rows, rows_cols=req.dimensions, rng=rng),
-        req.dimensions,
-    ).select(F.lit(1).alias("axis"), "*")
-    if not req.bidirectional:
-        return ax1
-
-    rdims = tuple(sch.reverse_name(d) for d in req.dimensions)
-    rdf = prep(reverse, rdims)
-    rreq = unit_req(REVERSE_UNITS.get(req.units, req.units), rdims)
-    ax2 = render(
-        compile_sankey(rdf, rreq, rows=fwd_rows, rows_cols=req.dimensions, rng=rng),
-        rdims,
-    )
-    # atomic rename (a reversed pair would collide in a sequential loop)
-    ax2 = ax2.select(
-        *[F.col(rev).alias(fwd) for rev, fwd in zip(rdims, req.dimensions)],
-        "sum_w",
-        "xps",
-    )
-    return ax1.unionAll(ax2.select(F.lit(2).alias("axis"), "*"))
+    ctes = {
+        "__src1": _axis_source(store, res, req, direct, a_start, a_end, req.dimensions, freq.base_cols),
+    }
+    ctes["__rows1"] = sankey_rows_sql(freq, "__src1")
+    ctes["__rng1"] = range_sql("__src1", "TimeReceived")
+    axes = [(1, freq)]
+    if req.bidirectional:
+        rdims = tuple(sch.reverse_name(d) for d in req.dimensions)
+        rreq = unit_req(REVERSE_UNITS.get(req.units, req.units), rdims)
+        ctes["__src2"] = _axis_source(
+            store, res, req, direct.reverse(), a_start, a_end, rdims, rreq.base_cols
+        )
+        axes.append((2, rreq))
+    selects = []
+    for axis_no, sreq in axes:
+        sankey = sankey_sql(
+            sreq, f"__src{axis_no}", _string_dims(store, sreq.dimensions),
+            rows="__rows1", rows_cols=req.dimensions, rng="__rng1",
+        )
+        # the reverse axis names its dimensions forward, positionally
+        shown = [_shown(store, a, o) for o, a in zip(req.dimensions, sreq.dimensions)]
+        selects.append(
+            f"SELECT {axis_no} AS axis, {', '.join([*shown, 'sum_w', 'xps'])} FROM (\n{sankey}\n)"
+        )
+    register_sql_functions(store.spark)
+    text = with_ctes(ctes, "\nUNION ALL\n".join(selects))
+    return run(store.spark, text, src=store.read(res))
 
 
 def _req_payload(req: GraphRequest) -> dict:

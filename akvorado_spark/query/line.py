@@ -17,25 +17,30 @@ Spark-first design decisions:
 - Time bucketing is integer arithmetic on ``unix_micros`` aligned to
   the range start (see functions/time.py) — stays inside
   whole-stage codegen.
-- Gap filling (``WITH FILL``) is a generated bucket spine
-  (``sequence`` + ``explode`` on a 1-row bounds frame) cross-joined
-  with the dimension set, then a left join of the aggregate — the
-  spine side is a few thousand rows at most, so the join broadcasts.
-- The main aggregation is a single ``groupBy(bucket, dims)`` —
+- Gap filling (``WITH FILL``) reads the aggregate once more, not the
+  data: one row per charted series holds its buckets as a map, and a
+  ``sequence`` over the bounds explodes it into the spine with a map
+  lookup per bucket (≤ points × (limit+1) rows).
+- The main aggregation is a single ``GROUP BY bucket, dims`` —
   partial aggregation map-side, one shuffle on (bucket, dims).
+- A request is one SQL statement (``line_sql``): Catalyst sees the
+  ranking, the fold and the fill at once, and building it costs one
+  ``spark.sql`` call instead of a py4j round trip per operator.
 
-At 100 TB the only full-data pass is the scan + partial agg; rows /
-bounds / spine are all tiny broadcast frames derived from it.  The
-scan should come from a rollup table via the resolution router
-(query/router.py) whenever the requested interval allows.
+At 100 TB the full-data passes are the scan + partial aggregations of
+the ranking and of the chart; rows / bounds / series are tiny frames
+derived from them.  The scan should come from a rollup table via the
+resolution router (``FlowStore.best_table``) whenever the requested
+interval allows.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+from akvorado_spark.query.sql import bigint, cols, epoch_us, run, string_dims, with_ctes
 
 OTHER = "Other"
 
@@ -67,35 +72,50 @@ class LineRequest:
     end_us: int | None = None
 
 
-def _agg_col(req: LineRequest, name: str = "sum_w") -> Column:
-    return F.expr(f"CAST(({req.agg_sql or 'sum(__w)'}) AS {req.value_type}) AS {name}")
+def _agg_sql(req: LineRequest) -> str:
+    return f"CAST(({req.agg_sql or 'sum(__w)'}) AS {req.value_type})"
 
 
-def _weight_col(req: LineRequest) -> Column:
-    return F.expr(f"CAST(({req.weight_sql}) AS BIGINT) AS __w")
-
-
-def _bucket_col(time_col: str, step_us: int) -> Column:
-    """The aligned-bucket expression, named ``__bucket``."""
-    return F.expr(
-        f"CAST(__start_us + floor((unix_micros(CAST({time_col} AS TIMESTAMP)) - __start_us)"
-        f" / {step_us}) * {step_us} AS BIGINT) AS __bucket"
+def _bucket_sql(time_col: str, step_us: int, start: str = "__start_us") -> str:
+    """The bucket of ``time_col``, aligned to ``start`` (epoch-µs)."""
+    return (
+        f"CAST({start} + floor(({epoch_us(time_col)} - {start})"
+        f" / {step_us}) * {step_us} AS BIGINT)"
     )
 
 
-def _bucket_spine(bounds: DataFrame, step_us: int) -> DataFrame:
-    """The WITH-FILL bucket spine off the 1-row bounds frame (O1)."""
-    return bounds.select(
-        F.expr(
-            "explode(sequence(CAST(0 AS BIGINT),"
-            f" CAST(floor((__max_us - __start_us) / {step_us}) AS BIGINT))) AS __i"
+def _last_bucket_sql(start: str, max_us: str, step_us: int) -> str:
+    return f"CAST({start} + floor(({max_us} - {start}) / {step_us}) * {step_us} AS BIGINT)"
+
+
+def _base_ctes(req: LineRequest, src: str) -> dict[str, str]:
+    """``__bounds`` (one row: ``__start_us``, ``__max_us``) and
+    ``__base`` (``__bucket``, the value columns, the dimensions) over
+    the relation ``src``.  An explicit range is literal: the bucket
+    inlines it, so ``__base`` is a projection of ``src``; data-derived
+    bounds are a 1-row aggregate broadcast into it (J9 shape)."""
+    step_us = req.interval_s * 1_000_000
+    vals = [cols(req.base_cols)] if req.agg_sql else [f"CAST(({req.weight_sql}) AS BIGINT) AS __w"]
+    sel = ", ".join(p for p in (*vals, cols(req.dimensions)) if p)
+    sel = f", {sel}" if sel else ""
+    if req.start_us is not None:
+        start = bigint(req.start_us)
+        return {
+            "__bounds": f"SELECT {start} AS __start_us, {bigint(req.end_us - 1)} AS __max_us",
+            "__base": f"SELECT {_bucket_sql(req.time_col, step_us, start)} AS __bucket{sel} FROM {src}",
+        }
+    ts = epoch_us(req.time_col)
+    return {
+        "__bounds": f"SELECT min({ts}) AS __start_us, max({ts}) AS __max_us FROM {src}",
+        "__base": (
+            f"SELECT /*+ BROADCAST(__bounds) */ {_bucket_sql(req.time_col, step_us)} AS __bucket{sel}"
+            f" FROM {src} JOIN __bounds"
         ),
-        "__start_us",
-    ).select(F.expr(f"CAST(__start_us + __i * {step_us} AS BIGINT) AS __bucket"))
+    }
 
 
-def _top_rows(base: DataFrame, req: LineRequest, bounds: DataFrame) -> DataFrame:
-    """Top-N dimension tuples.
+def _top_rows_sql(req: LineRequest) -> str:
+    """Top-N dimension tuples over ``__base``/``__bounds``.
 
     limit_type mirrors reference console/query.go:50-77:
       avg  — rank by total weight over the whole range
@@ -104,69 +124,166 @@ def _top_rows(base: DataFrame, req: LineRequest, bounds: DataFrame) -> DataFrame
     Ties are broken by the dimension values themselves so results are
     deterministic across engines.
     """
-    dims = list(req.dimensions)
+    dcols = cols(req.dimensions)
     step_us = req.interval_s * 1_000_000
     if req.limit_type == "max":
-        per_bucket = base.groupBy("__bucket", *dims).agg(_agg_col(req, "__bw"))
-        ranked = per_bucket.groupBy(*dims).agg(F.max("__bw").alias("__tw"))
-    elif req.limit_type == "last":
-        # the final bucket is arithmetic over the 1-row bounds frame —
-        # NOT a max() over base, which would cost a full data pass
-        last_bucket = bounds.select(
-            (
-                F.col("__start_us")
-                + F.floor((F.col("__max_us") - F.col("__start_us")) / step_us) * step_us
-            )
-            .cast("long")
-            .alias("__lb")
-        )
         ranked = (
-            base.join(F.broadcast(last_bucket), F.col("__bucket") == F.col("__lb"))
-            .groupBy(*dims)
-            .agg(_agg_col(req, "__tw"))
+            f"SELECT {dcols}, max(__bw) AS __tw FROM (SELECT __bucket, {dcols}, {_agg_sql(req)} AS __bw"
+            f" FROM __base GROUP BY __bucket, {dcols}) GROUP BY {dcols}"
         )
+    elif req.limit_type == "last":
+        # the final bucket is arithmetic over the bounds — NOT a max()
+        # over base, which would cost a full data pass
+        if req.start_us is not None:
+            last = _last_bucket_sql(bigint(req.start_us), bigint(req.end_us - 1), step_us)
+            ranked = (
+                f"SELECT {dcols}, {_agg_sql(req)} AS __tw FROM __base"
+                f" WHERE __bucket = {last} GROUP BY {dcols}"
+            )
+        else:
+            last = _last_bucket_sql("__start_us", "__max_us", step_us)
+            ranked = (
+                f"SELECT /*+ BROADCAST(__lb) */ {dcols}, {_agg_sql(req)} AS __tw FROM __base"
+                f" JOIN (SELECT {last} AS __lb FROM __bounds) __lb ON __bucket = __lb"
+                f" GROUP BY {dcols}"
+            )
     else:
-        ranked = base.groupBy(*dims).agg(_agg_col(req, "__tw"))
-    order = [F.col("__tw").desc()] + [F.col(d).asc() for d in dims]
-    return ranked.orderBy(*order).limit(req.limit).drop("__tw")
+        ranked = f"SELECT {dcols}, {_agg_sql(req)} AS __tw FROM __base GROUP BY {dcols}"
+    order = ", ".join(["__tw DESC"] + [f"`{d}` ASC" for d in req.dimensions])
+    return f"SELECT {dcols} FROM ({ranked}) ORDER BY {order} LIMIT {req.limit}"
 
 
-def _bounds_frame(df: DataFrame, req: LineRequest) -> DataFrame:
-    if req.start_us is not None:
-        # explicit range: a literal 1-row bounds frame (no data pass)
-        return df.sparkSession.range(1).select(
-            F.lit(req.start_us).cast("long").alias("__start_us"),
-            F.lit(req.end_us - 1).cast("long").alias("__max_us"),
-        )
-    ts_ltz = F.col(req.time_col).cast("timestamp")  # tolerate TIMESTAMP_NTZ
-    return df.agg(
-        F.min(F.unix_micros(ts_ltz)).alias("__start_us"),
-        F.max(F.unix_micros(ts_ltz)).alias("__max_us"),
-    )
-
-
-def top_rows_frame(df: DataFrame, req: LineRequest) -> DataFrame:
-    """The axis-1 ``rows`` CTE as a standalone frame: the top-N
-    dimension tuples of THIS request.
+def top_rows_sql(req: LineRequest, src: str) -> str:
+    """The axis-1 ``rows`` CTE as a standalone statement: the top-N
+    dimension tuples of THIS request over the relation ``src``.
 
     The reference emits the rows CTE once and every further axis
     (reverse direction, previous period) references it instead of
     ranking its own population (``skipWithClause``,
     console/line.go:169-216) — the chart's series set stays identical
-    across axes.  Compute this on the direct axis and pass it (with
-    dimension columns renamed to the other axis's names) as
-    ``compile_line(..., rows=...)``.
+    across axes.  Pass it (with dimension columns renamed to the other
+    axis's names) as ``line_sql(..., rows=...)``."""
+    return with_ctes(_base_ctes(req, src), _top_rows_sql(req))
+
+
+def line_sql(
+    req: LineRequest,
+    src: str,
+    passthrough: set[str],
+    rows: str | None = None,
+    ordered: bool = True,
+) -> str:
+    """One Spark SQL statement for a LineRequest over the relation
+    ``src`` (a CTE name or a ``{frame}`` reference).
+
+    Output columns: ``bucket`` (BIGINT epoch-µs), the dimension
+    columns (folded to 'Other' outside the top-N), ``sum_w`` (the
+    unit aggregate), ``xps`` (DOUBLE = sum_w / interval).
+
+    ``passthrough``: the dimensions that fold as they are (string and
+    binary); the others fold through their display string, as the
+    reference renders dimensions inside the fold.  Binary IPs fold to
+    b'Other' and render after aggregation.
+
+    ``rows``: optional relation of precomputed top tuples (columns =
+    this request's dimensions) — the shared-CTE multi-axis form (see
+    :func:`top_rows_sql`); when omitted the top set is ranked from this
+    request's own population.
+
+    ``ordered`` (default True, the public chart contract: rows sorted
+    by bucket then dimensions): union suites whose gate hash is
+    order-insensitive pass False to skip the per-member range-
+    partitioning sort exchange — same rows, no final Sort node.
     """
-    dims = list(req.dimensions)
+    dims = req.dimensions
+    dcols = cols(dims)
     step_us = req.interval_s * 1_000_000
-    bounds = _bounds_frame(df, req)
-    bucket_col = _bucket_col(req.time_col, step_us)
-    joined = df.join(F.broadcast(bounds))
-    if req.agg_sql:
-        base = joined.select(bucket_col, *req.base_cols, *dims)
+    ctes = _base_ctes(req, src)
+    if not dims:
+        # dimensionless request (total-traffic graph; also the
+        # previous-period axes, whose dimensions the reference strips —
+        # console/line.go:81-86): no ranking, no fold, one series
+        ctes["__agg"] = f"SELECT __bucket, {_agg_sql(req)} AS sum_w FROM __base GROUP BY __bucket"
     else:
-        base = joined.select(bucket_col, _weight_col(req), *dims)
-    return _top_rows(base, req, bounds)
+        shared_rows = rows is not None
+        if rows is None:
+            ctes["__rows"] = _top_rows_sql(req)
+            rows = "__rows"
+        # Fold non-top tuples into 'Other' via a broadcast left join (J7).
+        fold = ", ".join(
+            f"CASE WHEN __top IS NOT NULL THEN {f'`{d}`' if d in passthrough else f'CAST(`{d}` AS STRING)'}"
+            f" ELSE '{OTHER}' END AS `{d}`"
+            for d in dims
+        )
+        vals = cols(req.base_cols) if req.agg_sql else "__w"
+        ctes["__folded"] = (
+            f"SELECT /*+ BROADCAST(__m) */ __bucket, {vals + ', ' if vals else ''}{fold}"
+            f" FROM __base LEFT JOIN (SELECT {dcols}, 1 AS __top FROM {rows}) __m USING ({dcols})"
+        )
+        ctes["__agg"] = (
+            f"SELECT __bucket, {dcols}, {_agg_sql(req)} AS sum_w FROM __folded"
+            f" GROUP BY __bucket, {dcols}"
+        )
+    out = ", ".join(["__bucket AS bucket", *(f"`{d}`" for d in dims)])
+    if not req.fill:
+        body = f"SELECT {out}, sum_w, sum_w / {req.interval_s} AS xps FROM __agg"
+    else:
+        # Series: one row per charted tuple with its buckets as a map,
+        # off the aggregate itself.  Every top tuple appears in agg (it
+        # was ranked from the data), and an 'Other' row exists in agg
+        # exactly when some non-top tuple existed — so this is "top
+        # tuples + Other iff any" (≤ limit+1 rows) with no extra data
+        # pass, and the fill is a map lookup per spine bucket instead
+        # of a join back to agg.
+        entry = "CASE WHEN __bucket IS NOT NULL THEN struct(__bucket, sum_w) END"
+        if not dims:
+            ctes["__series"] = f"SELECT map_from_entries(collect_list({entry})) AS __m FROM __agg"
+        else:
+            entries = f"SELECT {dcols}, {entry} AS __e FROM __agg"
+            if shared_rows:
+                # a shared top tuple can be absent from THIS axis's
+                # population; it must still fill with zeros so every
+                # axis charts the same series; numeric dims take the
+                # display-string form the fold used
+                shown = ", ".join(
+                    f"`{d}`" if d in passthrough else f"CAST(`{d}` AS STRING) AS `{d}`"
+                    for d in dims
+                )
+                entries += f" UNION ALL SELECT {shown}, NULL FROM {rows}"
+            ctes["__series"] = (
+                f"SELECT {dcols}, map_from_entries(collect_list(__e)) AS __m"
+                f" FROM ({entries}) GROUP BY {dcols}"
+            )
+        # Bucket spine: a sequence per series row over the bounds (O1 /
+        # WITH FILL); literal bounds need no join.
+        if req.start_us is not None:
+            start, max_us, spine = bigint(req.start_us), bigint(req.end_us - 1), "__series"
+        else:
+            start, max_us = "__start_us", "__max_us"
+            spine = "(SELECT /*+ BROADCAST(__bounds) */ * FROM __series CROSS JOIN __bounds)"
+        ctes["__spine"] = (
+            f"SELECT *, CAST({start} + __i * {step_us} AS BIGINT) AS __bucket FROM {spine}"
+            f" LATERAL VIEW explode(sequence(CAST(0 AS BIGINT),"
+            f" CAST(floor(({max_us} - {start}) / {step_us}) AS BIGINT))) __s AS __i"
+        )
+        filled = f"CAST(coalesce(try_element_at(__m, __bucket), 0) AS {req.value_type})"
+        # the filled chart is ≤ buckets × (limit+1) rows: sorting it in
+        # one task skips the range-partitioning exchange and its
+        # sampling job
+        hint = "/*+ COALESCE(1) */ " if ordered else ""
+        body = (
+            f"SELECT {hint}{out}, {filled} AS sum_w,"
+            f" {filled} / {req.interval_s} AS xps FROM __spine"
+        )
+    if ordered:
+        body += f" ORDER BY {cols(['bucket', *dims])}"
+    return with_ctes(ctes, body)
+
+
+def top_rows_frame(df: DataFrame, req: LineRequest) -> DataFrame:
+    """:func:`top_rows_sql` over ``df``: the shared rows of
+    ``compile_line(..., rows=...)``."""
+    return run(df.sparkSession, top_rows_sql(req, "{src}"), src=df)
 
 
 def compile_line(
@@ -175,133 +292,13 @@ def compile_line(
     rows: DataFrame | None = None,
     ordered: bool = True,
 ) -> DataFrame:
-    """Compile a LineRequest into a DataFrame plan.
-
-    Output columns: ``bucket`` (BIGINT epoch-µs), the dimension
-    columns (folded to 'Other' outside the top-N), ``sum_w`` (the
-    unit aggregate), ``xps`` (DOUBLE = sum_w / interval).
-
-    ``rows``: optional precomputed top-tuple frame (columns = this
-    request's dimensions) — the shared-CTE multi-axis form (see
-    :func:`top_rows_frame`); when omitted the top set is ranked from
-    this request's own population.
-
-    ``ordered`` (default True, the public chart contract: rows sorted
-    by bucket then dimensions): union suites whose gate hash is
-    order-insensitive pass False to skip the per-member range-
-    partitioning sort exchange — same rows, no final Sort node.
-    """
-    dims = list(req.dimensions)
-    step_us = req.interval_s * 1_000_000
-
-    bounds = _bounds_frame(df, req)
-
-    # single select off the bounds join (one projection node instead of
-    # a withColumn chain — each chained op costs an analysis round and
-    # py4j round trips; ~870 calls per axis before r13)
-    bucket_col = _bucket_col(req.time_col, step_us)
-    joined = df.join(F.broadcast(bounds))  # 1-row scalar frame (J9 shape)
-    if req.agg_sql:
-        base = joined.select(bucket_col, *req.base_cols, *dims)
-    else:
-        base = joined.select(bucket_col, _weight_col(req), *dims)
-
-    if not dims:
-        # dimensionless request (total-traffic graph; also the
-        # previous-period axes, whose dimensions the reference strips —
-        # console/line.go:81-86): no ranking, no fold, one series
-        agg = base.groupBy("__bucket").agg(_agg_col(req))
-        if not req.fill:
-            out = agg.select(
-                F.col("__bucket").alias("bucket"),
-                "sum_w",
-                (F.col("sum_w") / F.lit(req.interval_s)).alias("xps"),
-            )
-            return out.orderBy("bucket") if ordered else out
-        buckets = _bucket_spine(bounds, step_us)
-        filled = F.coalesce(F.col("sum_w"), F.lit(0)).cast(req.value_type)
-        out = buckets.join(agg, on="__bucket", how="left").select(
-            F.col("__bucket").alias("bucket"),
-            filled.alias("sum_w"),
-            (filled / F.lit(req.interval_s)).alias("xps"),
-        )
-        return out.orderBy("bucket") if ordered else out
-
-    shared_rows = rows is not None
-    if rows is None:
-        rows = _top_rows(base, req, bounds)
-    else:
-        rows = rows.select(*dims)
-
-    # Fold non-top tuples into 'Other' via a broadcast left join (J7).
-    # Numeric dims fold through their display string (the reference
-    # renders dimensions inside the fold); string/binary pass through —
-    # binary IPs use b'Other' and render after aggregation.
-    marker = rows.withColumn("__top", F.lit(1))
-    folded = base.join(F.broadcast(marker), on=dims, how="left")
-    # dimension dtypes come from the input frame — analyzing `df` is
-    # cheaper than analyzing the derived `base` plan
-    dtypes = dict(df.dtypes)
-    passthrough = tuple(dtypes[d] in ("string", "binary") for d in dims)
-    fold_cols = [
-        F.expr(
-            f"CASE WHEN __top IS NOT NULL THEN {f'`{d}`' if p else f'CAST(`{d}` AS STRING)'}"
-            f" ELSE '{OTHER}' END AS `{d}`"
-        )
-        for d, p in zip(dims, passthrough)
-    ]
-    value_cols = list(req.base_cols) if req.agg_sql else ["__w"]
-    agg = (
-        folded.select("__bucket", *value_cols, *fold_cols)
-        .groupBy("__bucket", *dims)
-        .agg(_agg_col(req))
-    )
-
-    if not req.fill:
-        out = agg.select(
-            F.col("__bucket").alias("bucket"),
-            *dims,
-            "sum_w",
-            (F.col("sum_w") / F.lit(req.interval_s)).alias("xps"),
-        )
-        return out.orderBy("bucket", *dims) if ordered else out
-
-    # Bucket spine: sequence on the 1-row bounds frame (O1 / WITH FILL).
-    buckets = _bucket_spine(bounds, step_us)
-
-    # Dimension spine: the distinct folded tuples of the aggregate
-    # itself.  Every top tuple appears in agg (it was ranked from the
-    # data), and an 'Other' row exists in agg exactly when some
-    # non-top tuple existed — so this equals "top tuples + Other iff
-    # any", WITHOUT the extra full-data distinct pass; it's a tiny
-    # reuse of agg's shuffle output (≤ limit+1 tuples).
-    dim_spine = agg.select(*dims).distinct()
-    if shared_rows:
-        # a shared top tuple can be absent from THIS axis's population;
-        # it must still spine-fill with zeros so every axis charts the
-        # same series (with self-ranked rows every top tuple is in agg
-        # by construction, so this union would be a no-op there);
-        # numeric dims take the same display-string form the fold used
-        dim_spine = dim_spine.unionByName(
-            rows.select(
-                *[
-                    F.col(d)
-                    if dtypes[d] in ("string", "binary")
-                    else F.col(d).cast("string").alias(d)
-                    for d in dims
-                ]
-            )
-        ).distinct()
-
-    spine = buckets.crossJoin(F.broadcast(dim_spine))
-    filled = F.coalesce(F.col("sum_w"), F.lit(0)).cast(req.value_type)
-    out = spine.join(agg, on=["__bucket", *dims], how="left").select(
-        F.col("__bucket").alias("bucket"),
-        *dims,
-        filled.alias("sum_w"),
-        (filled / F.lit(req.interval_s)).alias("xps"),
-    )
-    return out.orderBy("bucket", *dims) if ordered else out
+    """Compile a LineRequest over ``df`` into one SQL statement
+    (:func:`line_sql`); ``rows`` is an optional precomputed top-tuple
+    frame (see :func:`top_rows_frame`)."""
+    frames = {"rows": rows} if rows is not None else {}
+    refs = {k: f"{{{k}}}" for k in frames}
+    text = line_sql(req, "{src}", string_dims(df, req.dimensions), ordered=ordered, **refs)
+    return run(df.sparkSession, text, src=df, **frames)
 
 
 # ---------------------------------------------------------------------------

@@ -37,7 +37,8 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from akvorado_spark.query.sql import cols, epoch_us, run, string_dims, with_ctes
 
 OTHER = "Other"
 
@@ -53,39 +54,99 @@ class SankeyRequest:
     value_type: str = "long"
 
 
-def _agg(req: SankeyRequest):
-    expr = F.expr(req.agg_sql) if req.agg_sql else F.sum("__w")
-    return expr.cast(req.value_type)
+def _agg_sql(req: SankeyRequest) -> str:
+    return f"CAST(({req.agg_sql or 'sum(__w)'}) AS {req.value_type})"
+
+
+def _base_sql(req: SankeyRequest, src: str) -> str:
+    vals = cols(req.base_cols) if req.agg_sql else f"CAST(({req.weight_sql}) AS BIGINT) AS __w"
+    return f"SELECT {vals + ', ' if vals else ''}{cols(req.dimensions)} FROM {src}"
+
+
+def top_rows_sql(req: SankeyRequest, src: str) -> str:
+    """The forward top-N tuples over the relation ``src`` (reference
+    console/query.go:48-90, avg type)."""
+    dcols = cols(req.dimensions)
+    order = ", ".join(["__tw DESC"] + [f"`{d}` ASC" for d in req.dimensions])
+    return (
+        f"SELECT {dcols} FROM (SELECT {dcols}, {_agg_sql(req)} AS __tw"
+        f" FROM ({_base_sql(req, src)}) GROUP BY {dcols}) ORDER BY {order} LIMIT {req.limit}"
+    )
+
+
+def range_sql(src: str, time_col: str) -> str:
+    """1-row span scalar ``__range_s``: MAX(t)-MIN(t) in whole seconds,
+    ≥1 (J9 shape; reference console/sankey.go:110-118)."""
+    ts = epoch_us(time_col)
+    return (
+        f"SELECT greatest(CAST(1 AS BIGINT), CAST((max({ts}) - min({ts})) / 1000000 AS BIGINT))"
+        f" AS __range_s FROM {src}"
+    )
+
+
+def sankey_sql(
+    req: SankeyRequest,
+    src: str,
+    passthrough: set[str],
+    rows: str | None = None,
+    rows_cols: tuple[str, ...] | None = None,
+    rng: str | None = None,
+) -> str:
+    """One Spark SQL statement for a SankeyRequest over the relation
+    ``src``.
+
+    Output columns: the dimension columns (folded to 'Other'),
+    ``sum_w`` (unit total), ``xps`` (DOUBLE per-second rate over the
+    data span).  ``rows``/``rows_cols`` inject the forward top-N set
+    for the reverse axis (positional probe); ``rng`` injects the
+    forward axis's span scalar (the reference shares the range CTE
+    across axes).  ``passthrough`` as in ``line_sql``.
+    """
+    dims = req.dimensions
+    ctes = {"__base": _base_sql(req, src)}
+    if rng is None:
+        ctes["__rng"] = range_sql(src, req.time_col)
+        rng = "__rng"
+    if rows is None:
+        ctes["__rows"] = top_rows_sql(req, src)
+        rows, rows_cols = "__rows", dims
+    # Per-dimension fold against the positional projection of rows.
+    # The reference folds *rendered* dimensions (console/sankey.go:84-91),
+    # so numeric dims become display strings here; string/binary pass
+    # through (binary IPs are display-rendered by the caller after the
+    # aggregation, with b'Other' as the fold marker).
+    vals = cols(req.base_cols) if req.agg_sql else "__w"
+    folds, joins = [], []
+    for i, (d, rc) in enumerate(zip(dims, rows_cols)):
+        kept = f"b.`{d}`" if d in passthrough else f"CAST(b.`{d}` AS STRING)"
+        folds.append(f"CASE WHEN __v{i}.__v IS NOT NULL THEN {kept} ELSE '{OTHER}' END AS `{d}`")
+        joins.append(
+            f" LEFT JOIN (SELECT DISTINCT `{rc}` AS __v FROM {rows}) __v{i} ON b.`{d}` = __v{i}.__v"
+        )
+    hint = f"/*+ BROADCAST({', '.join(f'__v{i}' for i in range(len(dims)))}) */"
+    ctes["__folded"] = (
+        f"SELECT {hint} {vals + ', ' if vals else ''}{', '.join(folds)} FROM __base b{''.join(joins)}"
+    )
+    dcols = cols(dims)
+    ctes["__agg"] = f"SELECT {dcols}, {_agg_sql(req)} AS sum_w FROM __folded GROUP BY {dcols}"
+    # the folded aggregate is ≤ (limit+1)^dims rows: sorting it in one
+    # task skips the range-partitioning exchange and its sampling job
+    return with_ctes(
+        ctes,
+        f"SELECT /*+ BROADCAST(__r), COALESCE(1) */ {dcols}, sum_w,"
+        f" CAST(sum_w AS DOUBLE) / __range_s AS xps"
+        f" FROM __agg JOIN {rng} __r ORDER BY xps DESC, {dcols}",
+    )
 
 
 def top_rows(df: DataFrame, req: SankeyRequest) -> DataFrame:
-    """The forward top-N tuples (reference console/query.go:48-90, avg type)."""
-    dims = list(req.dimensions)
-    base = _base(df, req)
-    ranked = base.groupBy(*dims).agg(_agg(req).alias("__tw"))
-    order = [F.col("__tw").desc()] + [F.col(d).asc() for d in dims]
-    return ranked.orderBy(*order).limit(req.limit).drop("__tw")
-
-
-def _base(df: DataFrame, req: SankeyRequest) -> DataFrame:
-    dims = list(req.dimensions)
-    if req.agg_sql:
-        return df.select(*req.base_cols, *dims)
-    return df.withColumn("__w", F.expr(req.weight_sql).cast("long")).select("__w", *dims)
+    """:func:`top_rows_sql` over ``df``."""
+    return run(df.sparkSession, top_rows_sql(req, "{src}"), src=df)
 
 
 def data_range(df: DataFrame, time_col: str) -> DataFrame:
-    """1-row span scalar: MAX(t)-MIN(t) in whole seconds, ≥1 (J9 shape;
-    reference console/sankey.go:110-118)."""
-    ts = F.col(time_col).cast("timestamp")
-    return df.agg(
-        F.greatest(
-            F.lit(1).cast("long"),
-            ((F.max(F.unix_micros(ts)) - F.min(F.unix_micros(ts))) / 1_000_000).cast(
-                "long"
-            ),
-        ).alias("__range_s")
-    )
+    """:func:`range_sql` over ``df``."""
+    return run(df.sparkSession, range_sql("{src}", time_col), src=df)
 
 
 def compile_sankey(
@@ -95,49 +156,13 @@ def compile_sankey(
     rows_cols: tuple[str, ...] | None = None,
     rng: DataFrame | None = None,
 ) -> DataFrame:
-    """Compile a SankeyRequest into a DataFrame plan.
-
-    Output columns: the dimension columns (folded to 'Other'),
-    ``sum_w`` (unit total), ``xps`` (DOUBLE per-second rate over the
-    data span).  ``rows``/``rows_cols`` inject the forward top-N set
-    for the reverse axis (positional probe); ``rng`` injects the
-    forward axis's span scalar (the reference shares the range CTE
-    across axes).
-    """
-    dims = list(req.dimensions)
-    if rng is None:
-        rng = data_range(df, req.time_col)
-
-    base = _base(df, req)
-    if rows is None:
-        rows = top_rows(df, req)
-        rows_cols = req.dimensions
-
-    # Per-dimension fold against the positional projection of rows.
-    # The reference folds *rendered* dimensions (console/sankey.go:84-91),
-    # so numeric dims become display strings here; string/binary pass
-    # through (binary IPs are display-rendered by the caller after the
-    # aggregation, with b'Other' as the fold marker).
-    # dimension dtypes come from the input frame — analyzing `df` is
-    # cheaper than analyzing the derived `base` plan
-    dtypes = dict(df.dtypes)
-    folded = base
-    for d, rc in zip(dims, rows_cols):
-        vals = rows.select(F.col(rc).alias("__v")).distinct()
-        kept = F.col(d) if dtypes[d] in ("string", "binary") else F.col(d).cast("string")
-        folded = (
-            folded.join(F.broadcast(vals), folded[d] == vals["__v"], "left")
-            .withColumn(d, F.when(F.col("__v").isNotNull(), kept).otherwise(F.lit(OTHER)))
-            .drop("__v")
-        )
-
-    agg = folded.groupBy(*dims).agg(_agg(req).alias("sum_w"))
-    out = (
-        agg.join(F.broadcast(rng))
-        .withColumn("xps", F.col("sum_w").cast("double") / F.col("__range_s"))
-        .drop("__range_s")
-    )
-    return out.orderBy(F.col("xps").desc(), *dims)
+    """Compile a SankeyRequest over ``df`` into one SQL statement
+    (:func:`sankey_sql`); ``rows``/``rows_cols``/``rng`` are frames
+    of the forward axis, as there."""
+    frames = {k: v for k, v in (("rows", rows), ("rng", rng)) if v is not None}
+    refs = {k: f"{{{k}}}" for k in frames}
+    text = sankey_sql(req, "{src}", string_dims(df, req.dimensions), rows_cols=rows_cols, **refs)
+    return run(df.sparkSession, text, src=df, **frames)
 
 
 # ---------------------------------------------------------------------------

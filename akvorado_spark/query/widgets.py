@@ -1,7 +1,7 @@
 """Dashboard widgets (SURVEY §2.4 A10/A11, §2.6 O5, §2.3 J9;
 reference console/widgets.go).
 
-Each widget is a small DataFrame plan over the flows frame:
+Each widget is one small SQL statement over the flows frame:
 
 - ``flow_rate``     — COUNT(*)/window over the trailing window
   (reference console/widgets.go:95 — ``COUNT(*)/300`` last 5 min).
@@ -20,7 +20,9 @@ exact integers so the resulting doubles are engine-stable.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from akvorado_spark.query.line import LineRequest, line_sql
+from akvorado_spark.query.sql import cols, epoch_us, run, with_ctes
 
 
 def flow_rate(
@@ -32,17 +34,13 @@ def flow_rate(
     The reference anchors at the wall clock; against a static corpus
     the data max is the deterministic equivalent.
     """
-    ts = F.col(time_col).cast("timestamp")
-    bounds = df.agg(F.max(F.unix_micros(ts)).alias("__max_us"))
-    n = (
-        df.join(F.broadcast(bounds))
-        .filter(F.unix_micros(ts) > F.col("__max_us") - window_s * 1_000_000)
-        .agg(F.count(F.lit(1)).alias("__n"))
+    text = (
+        f"SELECT /*+ BROADCAST(__b) */ CAST(count(1) AS DOUBLE) / {window_s} AS rate,"
+        f" 'second' AS period FROM {{src}}"
+        f" JOIN (SELECT max({epoch_us(time_col)}) AS __max_us FROM {{src}}) __b"
+        f" WHERE {epoch_us(time_col)} > __max_us - {window_s * 1_000_000}"
     )
-    return n.select(
-        (F.col("__n").cast("double") / F.lit(window_s)).alias("rate"),
-        F.lit("second").alias("period"),
-    )
+    return run(df.sparkSession, text, src=df)
 
 
 def top_percent(
@@ -57,26 +55,20 @@ def top_percent(
     The caller applies the boundary filter (the reference filters
     ``InIfBoundary = 'external'`` for src-* widgets) before calling.
     """
-    w = F.expr(weight_sql).cast("long")
-    sel = F.coalesce(F.col(selector).cast("string"), F.lit(""))
-    base = df.select(
-        F.when(sel == "", F.lit("Unknown")).otherwise(sel).alias("Name"),
-        w.alias("__w"),
+    sel = f"coalesce(CAST(`{selector}` AS STRING), '')"
+    base = (
+        f"SELECT CASE WHEN {sel} = '' THEN 'Unknown' ELSE {sel} END AS Name,"
+        f" CAST(({weight_sql}) AS BIGINT) AS __w FROM {{src}}"
     )
-    total = base.agg(F.sum("__w").alias("__total"))
-    return (
-        base.groupBy("Name")
-        .agg(F.sum("__w").alias("__g"))
-        .join(F.broadcast(total))
-        .select(
-            "Name",
-            (F.col("__g").cast("double") * 100 / F.col("__total").cast("double")).alias(
-                "Percent"
-            ),
-        )
-        .orderBy(F.col("Percent").desc(), "Name")
-        .limit(limit)
+    text = with_ctes(
+        {"__base": base},
+        "SELECT /*+ BROADCAST(__t) */ Name,"
+        " CAST(__g AS DOUBLE) * 100 / CAST(__total AS DOUBLE) AS Percent"
+        " FROM (SELECT Name, sum(__w) AS __g FROM __base GROUP BY Name)"
+        " JOIN (SELECT sum(__w) AS __total FROM __base) __t"
+        f" ORDER BY Percent DESC, Name LIMIT {limit}",
     )
+    return run(df.sparkSession, text, src=df)
 
 
 def widget_graph(
@@ -95,43 +87,19 @@ def widget_graph(
     ``InIfBoundary = 'external'``, reference console/config.go:110).
 
     Scale: one scan + one partial-aggregated shuffle on the bucket;
-    bounds and the fill spine are 1-row/‌tiny frames broadcast in.
+    it is the dimensionless line statement (``line_sql``), whose
+    bounds and fill spine are 1-row/tiny frames broadcast in.
     """
-    step_us = interval_s * 1_000_000
-    ts = F.unix_micros(F.col(time_col).cast("timestamp"))
-    bounds = df.agg(
-        F.min(ts).alias("__start_us"), F.max(ts).alias("__max_us")
+    line = LineRequest(
+        time_col=time_col,
+        dimensions=(),
+        weight_sql=weight_sql,
+        interval_s=interval_s,
+        limit=0,
     )
-    base = df.join(F.broadcast(bounds)).select(
-        (
-            F.col("__start_us")
-            + F.floor((ts - F.col("__start_us")) / step_us) * step_us
-        )
-        .cast("long")
-        .alias("bucket"),
-        F.expr(weight_sql).cast("long").alias("__bits"),
-    )
-    agg = base.groupBy("bucket").agg(F.sum("__bits").alias("__bits"))
-    spine = bounds.select(
-        F.explode(
-            F.sequence(
-                F.lit(0).cast("long"),
-                F.floor((F.col("__max_us") - F.col("__start_us")) / step_us).cast("long"),
-            )
-        ).alias("__i"),
-        "__start_us",
-    ).select((F.col("__start_us") + F.col("__i") * step_us).cast("long").alias("bucket"))
-    return (
-        spine.join(agg, "bucket", "left")
-        .select(
-            "bucket",
-            (
-                F.coalesce(F.col("__bits"), F.lit(0)).cast("double")
-                / F.lit(float(interval_s) * 1e9)
-            ).alias("gbps"),
-        )
-        .orderBy("bucket")
-    )
+    gbps = f"CAST(sum_w AS DOUBLE) / CAST({float(interval_s) * 1e9!r} AS DOUBLE)"
+    text = f"SELECT bucket, {gbps} AS gbps FROM ({line_sql(line, '{src}', set())})"
+    return run(df.sparkSession, text, src=df)
 
 
 def last_flow(
@@ -145,12 +113,10 @@ def last_flow(
     flows share the max timestamp (the reference's bare LIMIT 1 is
     engine-order-dependent).
     """
-    ts = F.col(time_col).cast("timestamp")
-    latest = df.agg(F.max(F.unix_micros(ts)).alias("__latest_us"))
-    out = (
-        df.join(F.broadcast(latest))
-        .filter(F.unix_micros(ts) == F.col("__latest_us"))
-        .drop("__latest_us")
+    order = f" ORDER BY {cols(tiebreak)}" if tiebreak else ""
+    text = (
+        f"SELECT /*+ BROADCAST(__l) */ __f.* FROM {{src}} __f"
+        f" JOIN (SELECT max({epoch_us(time_col)}) AS __latest_us FROM {{src}}) __l"
+        f" WHERE {epoch_us(time_col)} = __latest_us{order} LIMIT 1"
     )
-    order = [F.col(c).asc() for c in tiebreak]
-    return out.orderBy(*order).limit(1) if order else out.limit(1)
+    return run(df.sparkSession, text, src=df)

@@ -28,12 +28,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field, replace
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from akvorado_spark.functions.arrays import array_compact
-from akvorado_spark.functions.ip import ip_net_prefix
+from akvorado_spark.functions.ip import register_sql_functions
 
 
 @dataclass(frozen=True)
@@ -110,7 +110,7 @@ def _base_columns() -> list[FlowColumn]:
             "SrcNetPrefix",
             T.StringType(),
             main_only=True,
-            alias="__src_net_prefix__",  # materialized via ip_net_prefix()
+            alias="__src_net_prefix__",  # the akvorado_net_prefix UDF
         ),
         _lc("SrcNetName"),
         _lc("SrcNetRole"),
@@ -309,24 +309,23 @@ class FlowSchema:
         "__dst_net_prefix__": {"DstAddr", "DstNetMask", "EType"},
     }
 
-    def _alias_expr(self, c: FlowColumn, present: set[str]):
-        """The Column for an alias, or None if its deps are absent."""
+    def _alias_refs(self, c: FlowColumn) -> set[str]:
+        """The schema columns an alias reads."""
         import re
 
         if c.alias in self._ALIAS_DEPS:
-            if not self._ALIAS_DEPS[c.alias] <= present:
-                return None
-            if c.alias == "__src_net_prefix__":
-                return ip_net_prefix(F.col("SrcAddr"), F.col("SrcNetMask"), F.col("EType"))
-            return ip_net_prefix(F.col("DstAddr"), F.col("DstNetMask"), F.col("EType"))
-        refs = {
-            w
-            for w in re.findall(r"[A-Za-z_][A-Za-z0-9_]*", c.alias)
-            if w in self.by_name
-        }
-        if not refs <= (present | {c.name}):
-            return None
-        return F.expr(c.alias).cast(c.dtype)
+            return self._ALIAS_DEPS[c.alias]
+        words = set(re.findall(r"[A-Za-z_][A-Za-z0-9_]*", c.alias))
+        return {w for w in words if w in self.by_name and w != c.name}
+
+    def _alias_sql(self, c: FlowColumn) -> str:
+        """The alias as SQL text; the prefix aliases call the UDF that
+        ``register_sql_functions`` registers."""
+        if c.alias == "__src_net_prefix__":
+            return "akvorado_net_prefix(SrcAddr, SrcNetMask, EType)"
+        if c.alias == "__dst_net_prefix__":
+            return "akvorado_net_prefix(DstAddr, DstNetMask, EType)"
+        return f"CAST(({c.alias}) AS {c.dtype.simpleString()})"
 
     def ingest(self, df: DataFrame) -> DataFrame:
         """Apply GenerateFrom columns — the raw→main transform of the
@@ -341,30 +340,72 @@ class FlowSchema:
         present = set(df.columns)
         for c in self.enabled():
             if c.materialized and c.alias is not None and c.name not in present:
-                expr = self._alias_expr(c, present)
-                if expr is not None:
-                    df = df.withColumn(c.name, expr)
+                if self._alias_refs(c) <= present:
+                    register_sql_functions(df.sparkSession)
+                    df = df.withColumn(c.name, F.expr(self._alias_sql(c)))
                     present.add(c.name)
         return df
 
-    def view(self, df: DataFrame) -> DataFrame:
-        """Apply Alias (computed-on-read) columns that the frame doesn't
-        already carry — the reference's ALIAS column semantics
-        (definition.go:288-299, types.go ClickHouseAlias).  Aliases whose
-        dependencies are absent (e.g. MainOnly inputs on a rollup frame)
-        are skipped — the rollup router guarantees queries touching them
-        run on the main table.  Materialized aliases are already stored
-        and skip naturally via the presence check."""
-        present = set(df.columns)
+    def view_layers(
+        self, present: set[str], needed: set[str] | None = None
+    ) -> list[list[str]]:
+        """The Alias (computed-on-read) columns a frame with columns
+        ``present`` lacks, as SQL select items in layers: an item reads
+        only ``present`` and the layers before its own.  Aliases whose
+        dependencies are absent (e.g. MainOnly inputs on a rollup
+        frame) are skipped — the rollup router guarantees queries
+        touching them run on the main table.  ``needed`` keeps only the
+        aliases it names and those they read."""
+        if needed is not None:
+            needed = set(needed)
+            grow = needed
+            while grow:
+                grow = {
+                    r
+                    for n in grow
+                    if (c := self.by_name.get(n)) is not None and c.alias is not None
+                    for r in self._alias_refs(c)
+                } - needed
+                needed |= grow
+        have = set(present)
+        layers: list[list[str]] = []
+        layer: set[str] = set()
         for c in self.enabled():
-            if c.alias is None or c.name in present:
+            if c.alias is None or c.name in have:
                 continue
-            expr = self._alias_expr(c, present)
-            if expr is None:
+            if needed is not None and c.name not in needed:
                 continue
-            df = df.withColumn(c.name, expr)
-            present.add(c.name)
+            refs = self._alias_refs(c)
+            if not refs <= have:
+                continue
+            if not layers or refs & layer:
+                layers.append([])
+                layer = set()
+            layers[-1].append(f"{self._alias_sql(c)} AS `{c.name}`")
+            layer.add(c.name)
+            have.add(c.name)
+        return layers
+
+    def view(self, df: DataFrame) -> DataFrame:
+        """Apply the Alias (computed-on-read) columns that the frame
+        doesn't already carry — the reference's ALIAS column semantics
+        (definition.go:288-299, types.go ClickHouseAlias).  Materialized
+        aliases are already stored and skip naturally."""
+        layers = self.view_layers(set(df.columns))
+        if layers:
+            register_sql_functions(df.sparkSession)
+        for items in layers:
+            df = df.selectExpr("*", *items)
         return df
+
+    def view_sql(self, relation: str, present: set[str], needed: set[str]) -> str:
+        """:meth:`view` as SQL text over ``relation`` (columns
+        ``present``), adding only the ``needed`` aliases.  The caller
+        registers the UDFs (``register_sql_functions``)."""
+        sql = f"SELECT * FROM {relation}"
+        for items in self.view_layers(present, needed):
+            sql = f"SELECT *, {', '.join(items)} FROM ({sql})"
+        return sql
 
     def main_only_names(self) -> set[str]:
         out = set()

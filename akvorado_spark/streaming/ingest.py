@@ -32,14 +32,13 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from datetime import datetime
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from akvorado_spark.operators.classify import ClassifierRule, classify
 from akvorado_spark.operators.lpm import lpm_prepare, lpm_probe  # noqa: F401
 from akvorado_spark.plans.exporters import exporters_frame, latest_exporters
-from akvorado_spark.plans.rollup import FlowStore
+from akvorado_spark.plans.rollup import FlowStore, path_exists
 
 
 def file_source(spark: SparkSession, path: str, schema, fmt: str = "parquet") -> DataFrame:
@@ -518,19 +517,23 @@ class FlowIngest:
             finally:
                 enriched.unpersist()
 
+    def _exporters_table(self, spark, schema) -> DataFrame | None:
+        """The stored exporters table read with ``schema``, or None
+        before the first batch has written it."""
+        if not path_exists(spark, self.exporters_path):
+            return None
+        return spark.read.schema(schema).parquet(self.exporters_path)
+
     def _refresh_exporters(self, batch: DataFrame) -> None:
         """T6: replacing-merge the batch's interfaces into the table."""
-        spark = batch.sparkSession
         fresh = exporters_frame(batch)
-        try:
-            existing = spark.read.parquet(self.exporters_path)
+        # the table holds latest_exporters' columns, known at plan time:
+        # reading it with them runs no schema-inference job
+        existing = self._exporters_table(
+            batch.sparkSession, latest_exporters(fresh, ttl=None).schema
+        )
+        if existing is not None:
             fresh = existing.unionByName(fresh, allowMissingColumns=True)
-        except AnalysisException as e:
-            # ONLY a genuinely absent table reads as "first batch"; any
-            # other read failure must propagate — swallowing it would
-            # overwrite the accumulated history with one batch's rows
-            if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-                raise
         # the merge reads the table it overwrites: checkpoint the merged
         # rows first, so the write no longer depends on the old files
         latest = latest_exporters(fresh, ttl=None)

@@ -1,12 +1,14 @@
 """Query-cost reads shared by ``bench.py`` and the profiling tools.
 
-Four measurements, each read without launching a Spark job:
+Five measurements, each read without launching a Spark job:
 
 - ``py4j_commands``: the py4j commands the driver sends while a block
   runs — the cost of building a query in Python;
 - ``codegen_compiles``: the classes Spark's code generator compiled
   while a block ran (whole stages, projections, predicates), and the
   ms spent compiling them;
+- ``spark_jobs``: the Spark jobs a block ran, counted through a job
+  group of its own;
 - ``stage_snapshot``: per-stage executor counters from Spark's status
   store, diffed across a query to attribute its stages and bytes;
 - ``plan_structure_hash``: a fingerprint of the physical plan's
@@ -22,6 +24,7 @@ from __future__ import annotations
 
 import hashlib
 import re
+import uuid
 from contextlib import contextmanager
 
 # status-store StageData accessor -> snapshot field
@@ -92,6 +95,42 @@ def codegen_compiles(spark):
                 "compiles": end[0] - start[0],
                 "compile_ms": round((end[1] - start[1]) / 1e6, 3),
             }
+
+
+# the local properties ``SparkContext.setJobGroup`` sets
+_JOB_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
+
+@contextmanager
+def spark_jobs(spark):
+    """Count the Spark jobs the block runs; read ``j[0]`` from the
+    yielded list after the block.  The block runs under a job group of
+    its own, and the thread's earlier job group is restored on exit.
+    Jobs other threads submit are not counted, except those a query
+    of this block starts on Spark's own threads (broadcasts, AQE
+    stages), which inherit the group.  ``j[0]`` stays None when the
+    status tracker cannot be read, as ``stage_snapshot`` does."""
+    box = [None]
+    group = f"telemetry-jobs-{uuid.uuid4().hex}"
+    try:
+        sc = spark.sparkContext
+        saved = [sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS]
+        sc.setJobGroup(group, group)
+    except Exception:  # noqa: BLE001 — reflection drift must not sink the caller
+        sc = None
+    try:
+        yield box
+    finally:
+        if sc is not None:
+            try:
+                for k, v in zip(_JOB_GROUP_PROPS, saved):
+                    sc.setLocalProperty(k, v)
+                # the tracker is fed by an asynchronous listener: let it
+                # see every event of the jobs that already returned
+                sc._jsc.sc().listenerBus().waitUntilEmpty()
+                box[0] = len(sc.statusTracker().getJobIdsForGroup(group))
+            except Exception:  # noqa: BLE001
+                box[0] = None
 
 
 def stage_snapshot(spark, known: dict | None = None) -> dict | None:

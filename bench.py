@@ -115,6 +115,7 @@ def write_plan_sidecar(
     loadavg: float,
     query_load: dict | None = None,
     query_compiles: dict | None = None,
+    query_jobs: dict | None = None,
 ) -> None:
     """Persist per-query plan fingerprints ({stages, shuffle_bytes} at
     the warmup SF) to a sidecar file so tools/bench_diff.py can still
@@ -131,7 +132,11 @@ def write_plan_sidecar(
     ``query_compiles`` records, per query, the generated classes Spark
     compiled during its last timed repeat (``telemetry.codegen_compiles``):
     a warmed query reads ~0, so a non-zero count says the repeat paid
-    for compiling, not only for its data."""
+    for compiling, not only for its data.
+
+    ``query_jobs`` records, per query, the Spark jobs its last timed
+    repeat ran (``telemetry.spark_jobs``): each job is a round of
+    driver-side scheduling, paid even when it moves no data."""
     payload = {
         "plan": fingerprints,
         "warm_sf": 0.001,
@@ -141,6 +146,8 @@ def write_plan_sidecar(
         payload["query_load"] = query_load
     if query_compiles:
         payload["query_compiles"] = query_compiles
+    if query_jobs:
+        payload["query_jobs"] = query_jobs
     with open(path, "w") as fh:
         json.dump(payload, fh, indent=1, sort_keys=True)
 
@@ -283,6 +290,7 @@ def main() -> None:
     # so a contaminated sample explains itself mechanically
     query_load: dict[str, float] = {}
     query_compiles: dict[str, dict] = {}
+    query_jobs: dict[str, int] = {}
     for name, fn in entrymod.queries().items():
         if only and name not in only:
             continue
@@ -291,7 +299,10 @@ def main() -> None:
         try:
             for _ in range(repeat):
                 # the counter reads sit outside the timed span
-                with telemetry.codegen_compiles(spark) as compiles:
+                with (
+                    telemetry.codegen_compiles(spark) as compiles,
+                    telemetry.spark_jobs(spark) as jobs,
+                ):
                     t0 = time.time()
                     df = fn(spark, sf_dir)
                     n = df.count()
@@ -305,6 +316,8 @@ def main() -> None:
         query_load[name] = round(os.getloadavg()[0], 2)
         if compiles[0] is not None:
             query_compiles[name] = compiles[0]
+        if jobs[0] is not None:
+            query_jobs[name] = jobs[0]
         print(
             f"# {name}: {best:.3f}s rows={n} load={query_load[name]}",
             file=sys.stderr,
@@ -338,7 +351,7 @@ def main() -> None:
         )
         try:
             write_plan_sidecar(
-                fingerprints, plan_path, loadavg, query_load, query_compiles
+                fingerprints, plan_path, loadavg, query_load, query_compiles, query_jobs
             )
             # ALSO an immutable per-run copy: BENCH_PLAN.json is
             # overwritten every run, so two rounds' artifacts would
@@ -357,7 +370,7 @@ def main() -> None:
                 plans_dir, f"BENCH_PLAN_{stamp}_{os.getpid()}.json"
             )
             write_plan_sidecar(
-                fingerprints, unique, loadavg, query_load, query_compiles
+                fingerprints, unique, loadavg, query_load, query_compiles, query_jobs
             )
             plan_file = os.path.join("benchplans", os.path.basename(unique))
             prune_stamped_sidecars(plans_dir)

@@ -139,6 +139,10 @@ def test_plan_sidecar_carries_per_query_load(tmp_path):
     cg = {"q1": {"compiles": 0, "compile_ms": 0.0}}
     bench.write_plan_sidecar(fp, str(side), 3.14, {"q1": 0.42}, cg)
     assert json.loads(side.read_text())["query_compiles"] == cg
+    assert "query_jobs" not in json.loads(side.read_text())
+    # and so do the Spark jobs of that repeat
+    bench.write_plan_sidecar(fp, str(side), 3.14, {"q1": 0.42}, cg, {"q1": 3})
+    assert json.loads(side.read_text())["query_jobs"] == {"q1": 3}
 
 
 def test_bench_diff_directory_fallback(tmp_path):

@@ -15,6 +15,7 @@ import itertools
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from akvorado_spark.telemetry import py4j_commands
 
@@ -115,7 +116,7 @@ def _builds():
     from akvorado_spark.operators.pq import _adc_table_expr, _assign_expr, _int_dot
     from akvorado_spark.operators.similarity import dot, norm
     from akvorado_spark.operators.text import fingerprint
-    from akvorado_spark.query.line import _bucket_col
+    from akvorado_spark.query.line import _bucket_sql
 
     k = next(_FRESH)
     book = [[k, k + 1], [k + 2, k + 3]]
@@ -129,7 +130,7 @@ def _builds():
         "_char_symbols": lambda: _char_symbols(_fresh("word")),
         "doc_bigrams_grams": lambda: _bigram_structs(_fresh("text"), lambda c: f"xxhash64({c})"),
         "fingerprint": lambda: fingerprint(_fresh("text")),
-        "line._bucket_col": lambda: _bucket_col(_fresh("ts"), 60_000_000 + k),
+        "line._bucket_sql": lambda: F.expr(_bucket_sql(_fresh("ts"), 60_000_000 + k)),
         "lpm_probe_cond": lambda: _probe_cond(_fresh("SrcAddr"), 4, k, _fresh("exp")),
     }
 

@@ -38,6 +38,22 @@ def store(spark, tmp_path_factory):
     return s
 
 
+def test_store_read_takes_the_declared_schema(spark, store):
+    """Every table reads with FlowStore's declared schema: no read runs
+    a schema-inference job, and the frame has the columns, order and
+    rows a read that infers the schema returns."""
+    from akvorado_spark import telemetry
+
+    for res in store.resolutions:
+        with telemetry.spark_jobs(spark) as jobs:
+            df = store.read(res)
+        assert jobs[0] == 0, res.table_name
+        inferred = spark.read.parquet(store.path(res))
+        assert df.dtypes == inferred.dtypes, res.table_name
+        assert df.count() == inferred.count() > 0
+        assert df.exceptAll(inferred).isEmpty() and inferred.exceptAll(df).isEmpty()
+
+
 def test_filter_and_projection_reach_parquet_scan(spark):
     df = (
         load_table(spark, "lineitem", SF_DIR)

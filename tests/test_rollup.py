@@ -285,6 +285,34 @@ def test_graph_line_axes_share_series(store):
     assert by_axis[3] == {""} and by_axis[4] == {""}
 
 
+def test_console_request_builds_as_one_statement(spark, store):
+    """A line or sankey request is one SQL statement over a known-schema
+    scan: building one sends a few py4j commands, where the DataFrame
+    chains sent 3 110 (4-axis line) and 910 (sankey), and the same
+    request built twice plans the same operator tree."""
+    from akvorado_spark import telemetry
+    from akvorado_spark.query.graph import graph_sankey
+
+    line = GraphRequest(
+        start=START, end=END, dimensions=("SrcAS",), filter="InIfBoundary = external",
+        points=24, limit=3, bidirectional=True, previous_period="hour",
+    )
+    sankey = GraphRequest(
+        start=START, end=END, dimensions=("SrcAS", "DstAS"), filter="Proto = 6",
+    )
+    for build, bound in (
+        (lambda: graph_line(store, line), 311),
+        (lambda: graph_sankey(store, sankey), 91),
+    ):
+        first = build()
+        with telemetry.py4j_commands(spark) as n:
+            again = build()
+        assert n[0] <= bound
+        assert telemetry.plan_structure_hash(first) == telemetry.plan_structure_hash(again)
+    # the frames passed to spark.sql leave no temp view behind
+    assert not [t for t in spark.catalog.listTables() if t.name.startswith("_pyspark_")]
+
+
 def test_graph_line_reversed_axis_swaps_pct_units(store):
     """A reversed axis measures the opposite direction: inl2% on the
     reverse axis must equal outl2% computed directly (reference

@@ -17,16 +17,10 @@ def _drain_listener(spark) -> None:
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
 
 
-def _jobs_of(spark, group, action) -> int:
-    """Spark jobs ``action`` runs, counted through a job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
+def _jobs_of(spark, action) -> int:
+    with telemetry.spark_jobs(spark) as jobs:
         action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    _drain_listener(spark)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return jobs[0]
 
 
 def test_stage_snapshot_degrades_to_none_on_reflection_drift():
@@ -130,9 +124,9 @@ def test_measuring_a_count_adds_no_spark_jobs(spark):
         assert before is not None and after is not None
         assert phash and n[0] > 0 and c[0] is not None
 
-    plain = _jobs_of(spark, "telemetry-plain", df.count)
+    plain = _jobs_of(spark, df.count)
     assert plain > 0
-    assert _jobs_of(spark, "telemetry-measured", measured) == plain
+    assert _jobs_of(spark, measured) == plain
 
 
 def test_codegen_counter_counts_compiles_and_runs_no_job(spark):
@@ -147,7 +141,7 @@ def test_codegen_counter_counts_compiles_and_runs_no_job(spark):
             pass
         assert c[0] == {"compiles": 0, "compile_ms": 0.0}
 
-    assert _jobs_of(spark, "telemetry-codegen", read_empty) == 0
+    assert _jobs_of(spark, read_empty) == 0
     with telemetry.codegen_compiles(spark) as first:
         fresh().collect()
     with telemetry.codegen_compiles(spark) as again:
@@ -163,3 +157,33 @@ def test_codegen_counter_degrades_to_none_on_reflection_drift():
     with telemetry.codegen_compiles(_FakeSpark()) as c:
         pass
     assert c[0] is None
+
+
+def test_job_counter_counts_a_block_and_restores_the_group(spark):
+    sc = spark.sparkContext
+    sc.setJobGroup("outer-group", "outer")
+    try:
+        with telemetry.spark_jobs(spark) as none:
+            pass
+        with telemetry.spark_jobs(spark) as one:
+            spark.range(10).collect()
+        with telemetry.spark_jobs(spark) as nested:
+            with telemetry.spark_jobs(spark) as inner:
+                spark.range(10).collect()
+            spark.range(10).collect()
+        assert sc.getLocalProperty("spark.jobGroup.id") == "outer-group"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert none[0] == 0 and one[0] == 1
+    # the inner block's job counts in its own group only
+    assert inner[0] == 1 and nested[0] == 1
+
+
+def test_job_counter_degrades_to_none_on_reflection_drift():
+    class _FakeSpark:
+        sparkContext = None  # no status tracker: the count cannot be read
+
+    with telemetry.spark_jobs(_FakeSpark()) as j:
+        pass
+    assert j[0] is None

@@ -29,7 +29,6 @@ def _interfaces(spark):
     )
 
 
-@pytest.mark.slow
 def test_datagrams_to_graph_query(spark, tmp_path):
     from akvorado_spark.plans.rollup import FlowStore
     from akvorado_spark.query.graph import GraphRequest, graph_line
@@ -101,8 +100,18 @@ def test_wire_bridge_types_match_schema(spark):
     assert row["FlowDirection"] == "undefined" and row["InIfName"] == "1"
 
 
+def test_streaming_protobuf_to_store_one_batch(spark, tmp_path):
+    """One micro-batch of the sweep below: the template, its data and
+    a v5 packet arrive together."""
+    _protobuf_stream_to_store(spark, tmp_path, batches=1)
+
+
 @pytest.mark.slow
 def test_streaming_protobuf_to_store(spark, tmp_path):
+    _protobuf_stream_to_store(spark, tmp_path, batches=2)
+
+
+def _protobuf_stream_to_store(spark, tmp_path, batches: int):
     """The reference pipeline end-to-end in streaming form: RawFlow
     protobuf blobs → transport decode → template-stateful NetFlow
     decode → wire bridge → FlowStore append + rollups, driven by
@@ -128,8 +137,11 @@ def test_streaming_protobuf_to_store(spark, tmp_path):
                                                   dst=b"\x0a\x00\x00\x06",
                                                   sp=123, dp=456, bytes=888, pkts=2)]),
                            source_address=EXP, decoder="netflow"),)]
-    spark.createDataFrame(b1, "value binary").coalesce(1).write.parquet(src + "/f1")
-    spark.createDataFrame(b2, "value binary").coalesce(1).write.parquet(src + "/f2")
+    if batches == 1:
+        spark.createDataFrame(b1 + b2, "value binary").coalesce(1).write.parquet(src + "/f1")
+    else:
+        spark.createDataFrame(b1, "value binary").coalesce(1).write.parquet(src + "/f1")
+        spark.createDataFrame(b2, "value binary").coalesce(1).write.parquet(src + "/f2")
 
     kafka_like = (
         spark.readStream.schema("value binary")
@@ -153,7 +165,7 @@ def test_streaming_protobuf_to_store(spark, tmp_path):
     q.awaitTermination(180)
 
     stored = store.read(store.resolutions[0]).collect()
-    assert len(stored) == 2  # the v9 record decoded via cross-batch state
+    assert len(stored) == 2  # the v9 record decoded (across batches: via state)
     by_bytes = {r["Bytes"]: r for r in stored}
     assert by_bytes[1500]["InIfName"] == "xe-1/0/0"  # metadata join applied
     assert by_bytes[888]["SamplingRate"] == 1

@@ -5,6 +5,8 @@ after the same warmup bench.py performs:
 
   build_s   — constructing the DataFrame (Python query-builder time:
               driver-side collects, codebook derivation)
+  build_jobs — Spark jobs that first build ran (``telemetry.spark_jobs``;
+              a build that only plans reads 0)
   build_py4j — py4j commands sent by that first build, and
   rebuild_py4j — by a warm rebuild (the first rerun's fn() call);
               counted by ``telemetry.py4j_commands`` (proxy deletes
@@ -64,9 +66,10 @@ def main() -> None:
             spark.sparkContext.setJobDescription(f"profile:{name}")
             try:
                 with telemetry.codegen_compiles(spark) as build_compiles:
-                    t0, c0 = time.time(), py4j[0]
-                    df = fn(spark, sf_dir)
-                    build_s, build_py4j = time.time() - t0, py4j[0] - c0
+                    with telemetry.spark_jobs(spark) as build_jobs:
+                        t0, c0 = time.time(), py4j[0]
+                        df = fn(spark, sf_dir)
+                        build_s, build_py4j = time.time() - t0, py4j[0] - c0
                     t0 = time.time()
                     df.count()
                     first_s = time.time() - t0
@@ -110,6 +113,7 @@ def main() -> None:
                 {
                     "name": name,
                     "build": round(build_s, 3),
+                    "build_jobs": build_jobs[0],
                     "build_py4j": build_py4j,
                     "rebuild_py4j": rebuild_py4j,
                     "build_compiles": (build_compiles[0] or {}).get("compiles"),
@@ -132,7 +136,7 @@ def main() -> None:
         print(
             f"{r['name']:28s} rerun={r['rerun']:7.3f} cached={r['cached']:7.3f} "
             f"overhead={r['overhead']:7.3f} build={r['build']:6.3f} stages={r['stages_per_run']}"
-            f" py4j={r['build_py4j']}/{r['rebuild_py4j']}"
+            f" py4j={r['build_py4j']}/{r['rebuild_py4j']} build_jobs={r['build_jobs']}"
             f" compiles={r['build_compiles']}/{r['rebuild_compiles']}"
         )
     print(f"{'TOTAL':28s} rerun={tot_r:7.3f} cached={tot_c:7.3f} overhead={tot_o:7.3f}")
