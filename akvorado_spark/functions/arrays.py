@@ -1,4 +1,4 @@
-"""Array helpers absent from pyspark.sql.functions.
+"""Array helpers absent from pyspark.sql.functions, as Spark SQL text.
 
 ``array_compact`` removes *consecutive* duplicates — ClickHouse
 ``arrayCompact``, used by the reference to derive Dst1st/2nd/3rdAS from
@@ -7,25 +7,20 @@ Implemented with built-in higher-order functions (filter + lag via
 element_at on the same array) so it stays JVM-side.
 
 ``sql_literal`` renders plan-time constants (codebooks, hyperplanes,
-corpus tokens) as Spark SQL literal text for the operators that build
-their folds as SQL.
+corpus tokens, user text) as Spark SQL literal text for the operators
+and query builders that build their expressions as SQL.
 """
 
 from __future__ import annotations
 
 import numbers
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
-
-def array_compact(arr: str) -> Column:
+def array_compact(arr: str) -> str:
     """Remove consecutive duplicate elements of the SQL operand ``arr``,
     keeping order — null-safe via a not-distinct comparison
     (``element_at`` is 1-based, so ``element_at(arr, i)`` is arr[i-1])."""
-    return F.expr(
-        f"filter({arr}, (x, i) -> i = 0 OR NOT (x <=> element_at({arr}, i)))"
-    )
+    return f"filter({arr}, (x, i) -> i = 0 OR NOT (x <=> element_at({arr}, i)))"
 
 
 def sql_literal(v) -> str:

@@ -11,10 +11,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from akvorado_spark.functions.arrays import array_compact
 from akvorado_spark.oracle.flows_view import oracle_view_sql, register_spark_view
 from akvorado_spark.oracle.registry import register
 from akvorado_spark.query.render import (
-    compact_path,
     icmp_render,
     render_asn,
     render_communities,
@@ -42,8 +42,8 @@ def _spark_proto_port(spark, sf_dir):
     df = spark.table("flows_v")
     return (
         df.groupBy(
-            render_proto(F.col("Proto")).alias("proto_name"),
-            render_port(F.col("DstPort"), F.col("Proto")).alias("dst_port"),
+            F.expr(render_proto("Proto")).alias("proto_name"),
+            F.expr(render_port("DstPort", "Proto")).alias("dst_port"),
         )
         .agg(F.sum("Bytes").alias("bytes"), F.count(F.lit(1)).alias("flows"))
         .orderBy("proto_name", "dst_port")
@@ -85,8 +85,8 @@ def _spark_asn_etype(spark, sf_dir):
     df = spark.table("flows_v")
     return (
         df.groupBy(
-            render_asn(F.col("SrcAS"), _AS_NAMES).alias("src_as"),
-            render_etype(F.col("EType")).alias("etype"),
+            F.expr(render_asn("SrcAS", _AS_NAMES)).alias("src_as"),
+            F.expr(render_etype("EType")).alias("etype"),
             F.col("InIfBoundary").alias("boundary"),
         )
         .agg(F.sum(F.col("Bytes") * F.col("SamplingRate")).alias("bytes"))
@@ -154,15 +154,15 @@ def _spark_flags_mac_path(spark, sf_dir):
     )
     return (
         df.groupBy(
-            render_tcp_flags(F.col("TCPFlags")).alias("flags"),
-            render_mac(F.col("SrcMAC")).alias("src_mac"),
-            render_as_path(compact_path("DstASPath")).alias("as_path"),
-            render_communities("SrcCommunities").alias("communities"),
-            render_large_communities("SrcLargeCommunities").alias("large_communities"),
-            render_communities_dim("SrcCommunities", "SrcLargeCommunities").alias(
+            F.expr(render_tcp_flags("TCPFlags")).alias("flags"),
+            F.expr(render_mac("SrcMAC")).alias("src_mac"),
+            F.expr(render_as_path(array_compact("DstASPath"))).alias("as_path"),
+            F.expr(render_communities("SrcCommunities")).alias("communities"),
+            F.expr(render_large_communities("SrcLargeCommunities")).alias("large_communities"),
+            F.expr(render_communities_dim("SrcCommunities", "SrcLargeCommunities")).alias(
                 "communities_dim"
             ),
-            icmp_render(F.col("Proto"), F.col("IcmpType"), F.lit(0)).alias("icmp_name"),
+            F.expr(icmp_render("Proto", "IcmpType", "0")).alias("icmp_name"),
         )
         .agg(F.count(F.lit(1)).alias("flows"))
         .orderBy("flags", "src_mac", "as_path", "communities", "large_communities", "communities_dim", "icmp_name")

@@ -23,6 +23,7 @@ from datetime import datetime
 from akvorado_spark.filtering import FilterSchema, compile_filter
 from akvorado_spark.filtering.parser import FilterError
 from akvorado_spark.plans.rollup import FlowStore
+from akvorado_spark.query.graph import route
 
 
 # -- /filter/validate ------------------------------------------------------
@@ -89,15 +90,10 @@ def table_interval(
     schema: FilterSchema | None = None,
 ) -> dict:
     """Which table would serve this query, at which interval —
-    the rollup router's decision surfaced as an endpoint."""
+    the rollup router's decision (the one ``graph_line`` takes)
+    surfaced as an endpoint."""
     validate_points(points)
-    target = max(int((end - start).total_seconds() // max(points, 1)), 1)
-    require_main = False
-    if filter_text and schema is not None:
-        require_main = compile_filter(filter_text, schema).requires_main_table
-    main_only = store.schema.main_only_names()
-    require_main = require_main or any(d in main_only for d in dimensions)
-    res, interval_s = store.best_table(start, end, target, require_main)
+    _, res, interval_s = route(store, start, end, points, filter_text, dimensions, schema)
     return {
         "table": res.table_name,
         "interval_s": interval_s,

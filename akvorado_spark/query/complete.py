@@ -14,62 +14,59 @@ per-branch ordering key (count-rank for flows, match position + key
 for dictionaries) and orders by ``(min rank, min ord, label)`` —
 same ranking, engine-deterministic.
 
-Scale: the flows branch is one groupBy over the recent window
-(partition-pruned scan); the dictionary branch is a tiny local frame;
-the merge is a union of two ≤limit-row frames.
+Each completion is one Spark SQL statement over its source frame; a
+dictionary is a ``VALUES`` relation, and the user's prefix reaches the
+text only as a literal (``sql_literal``), so no character of it can
+change the statement.  Scale: the flows branch is one aggregation over
+the recent window (partition-pruned scan); the dictionary branch is a
+tiny inline relation; the merge is a union of two ≤limit-row relations.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from akvorado_spark.functions.arrays import sql_literal
+from akvorado_spark.query.render import (
+    render_community_value,
+    render_large_community_value,
+    render_mac,
+)
 from akvorado_spark.query.sql import run, with_ctes
-from akvorado_spark.sources.dictionaries import ASNS, TCP_PORTS, UDP_PORTS
-
-
-def _match_pos(col, prefix: str):
-    """positionCaseInsensitive: 1-based position of the prefix, 0 = no
-    match (reference console/filter.go:34-41)."""
-    return F.locate(prefix.lower(), F.lower(col))
+from akvorado_spark.sources.dictionaries import ASNS, ICMP, PROTOCOLS, TCP_PORTS, UDP_PORTS
 
 
 def _match_pos_sql(col: str, prefix: str) -> str:
-    """:func:`_match_pos` as SQL text."""
+    """positionCaseInsensitive of the SQL operand ``col``: 1-based
+    position of the prefix, 0 = no match (reference
+    console/filter.go:34-41)."""
     return f"locate({sql_literal(prefix.lower())}, lower({col}))"
 
 
-def _top_with_ord(df: DataFrame, order_exprs, limit: int) -> DataFrame:
-    """Top-``limit`` rows of ``df`` under ``order_exprs`` with their
+def _top_sql(relation: str, order: str, limit: int) -> str:
+    """Top-``limit`` rows of ``relation`` under ``order`` with their
     1-based rank as ``ord``.
 
-    ``orderBy().limit()`` runs as TakeOrderedAndProject — each partition
+    ``ORDER BY … LIMIT`` runs as TakeOrderedAndProject — each partition
     keeps its local top-k and the driver merges k-sized heaps — so the
     candidate set is never globally sorted into one partition. The
-    row_number window then runs over the ≤limit-row survivor frame,
-    where a single-partition sort is a constant-size no-op.
+    row_number window then runs over the ≤limit-row survivors, where a
+    single-partition sort is a constant-size no-op.
     """
-    top = df.orderBy(*order_exprs).limit(limit)
-    return top.withColumn("ord", F.row_number().over(Window.orderBy(*order_exprs)))
-
-
-def _top_sql(relation: str, order: str, limit: int) -> str:
-    """:func:`_top_with_ord` as SQL text over ``relation``."""
     return (
         f"SELECT *, CAST(row_number() OVER (ORDER BY {order}) AS BIGINT) AS ord"
         f" FROM (SELECT * FROM {relation} ORDER BY {order} LIMIT {limit})"
     )
 
 
-def _ranked_union_sql(ctes: dict[str, str], seen: str, from_dict: str, limit: int) -> str:
+def _ranked_union_sql(ctes: dict[str, str], branches: list[str], limit: int) -> str:
     """UNION DISTINCT + GROUP BY (label, detail) ORDER BY MIN(rank),
-    MIN(ord) LIMIT — the reference's merge shape — over the two
-    branches' SELECTs of (label, detail, rank, ord)."""
+    MIN(ord) LIMIT — the reference's merge shape — over the branches'
+    SELECTs of (label, detail, rank, ord)."""
     return with_ctes(
         ctes,
         f"SELECT label, detail FROM (SELECT label, detail, min(rank) AS __r, min(ord) AS __o"
-        f" FROM ({seen} UNION ALL {from_dict}) GROUP BY label, detail)"
+        f" FROM ({' UNION ALL '.join(branches)}) GROUP BY label, detail)"
         f" ORDER BY __r, __o, label LIMIT {limit}",
     )
 
@@ -125,7 +122,7 @@ def complete_asn(
         "SELECT concat('AS', CAST(asn AS STRING)) AS label, name AS detail, 2 AS rank, ord"
         f" FROM ({_top_sql(f'(SELECT * FROM __dico WHERE {pos} > 0)', f'{pos}, asn', limit)})"
     )
-    text = _ranked_union_sql(ctes, seen, from_dict, limit)
+    text = _ranked_union_sql(ctes, [seen, from_dict], limit)
     return run(flows.sparkSession, text, flows=flows)
 
 
@@ -141,17 +138,13 @@ def complete_exporter(
     recently-seen exporters table, prefix-matched, ordered by match
     position then value — the single-branch flavor of O4 (no
     dictionary union)."""
-    base = (
-        exporters.select(F.col(column).alias("label"))
-        .filter(_match_pos(F.col("label"), prefix) > 0)
-        .groupBy("label")
-        .agg(F.min(_match_pos(F.col("label"), prefix)).alias("__pos"))
+    pos = _match_pos_sql("label", prefix)
+    text = (
+        f"SELECT label, {sql_literal(detail)} AS detail FROM (SELECT label, min({pos}) AS __pos"
+        f" FROM (SELECT `{column}` AS label FROM {{exporters}}) WHERE {pos} > 0 GROUP BY label)"
+        f" ORDER BY __pos, label LIMIT {limit}"
     )
-    return (
-        base.orderBy("__pos", "label")
-        .limit(limit)
-        .select("label", F.lit(detail).alias("detail"))
-    )
+    return run(exporters.sparkSession, text, exporters=exporters)
 
 
 def complete_port(
@@ -186,7 +179,7 @@ def complete_port(
         "SELECT CAST(port AS STRING) AS label, name AS detail, 2 AS rank, ord"
         f" FROM ({_top_sql(known, f'{pos}, port', limit)})"
     )
-    text = _ranked_union_sql(ctes, named, from_dict, limit)
+    text = _ranked_union_sql(ctes, [named, from_dict], limit)
     return run(flows.sparkSession, text, flows=flows)
 
 
@@ -261,8 +254,6 @@ def complete_static_value(column: str, prefix: str, fschema) -> list[dict]:
     elif spec.kind == "etype":
         vals = [(v, "ethernet type") for v in _ETYPE_VALUES]
     elif spec.kind == "proto":
-        from akvorado_spark.sources.dictionaries import PROTOCOLS
-
         vals = [(name, "protocol") for _, name in PROTOCOLS]
     else:
         return []
@@ -277,19 +268,13 @@ def complete_mac(
     """MAC-address completion (reference console/filter.go:218-243):
     rendered MACs seen in recent flows, most-used first, prefix matched
     on the rendered form."""
-    from akvorado_spark.query.render import render_mac
-
-    base = (
-        flows.select(render_mac(F.col(column)).alias("label"))
-        .filter(_match_pos(F.col("label"), prefix) > 0)
-        .groupBy("label")
-        .agg(F.count(F.lit(1)).alias("__n"))
+    text = (
+        f"SELECT label, 'MAC address' AS detail FROM (SELECT label, count(1) AS __n"
+        f" FROM (SELECT {render_mac(f'`{column}`')} AS label FROM {{flows}})"
+        f" WHERE {_match_pos_sql('label', prefix)} > 0 GROUP BY label)"
+        f" ORDER BY __n DESC, label LIMIT {limit}"
     )
-    return (
-        base.orderBy(F.desc("__n"), "label")
-        .limit(limit)
-        .select("label", F.lit("MAC address").alias("detail"))
-    )
+    return run(flows.sparkSession, text, flows=flows)
 
 
 def complete_communities(
@@ -301,45 +286,26 @@ def complete_communities(
     ("asn:value" / "asn:v1:v2"), most-used first per family, the two
     families unioned, prefix matched with ``startsWith`` like the
     reference."""
-    def unrolled(column: str, render, detail: str) -> DataFrame:
-        if column not in flows.columns:
-            return None
-        return (
-            flows.select(F.explode(F.col(column)).alias("__c"))
-            .groupBy("__c")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .select(
-                F.expr(f"{render('__c')} AS label"),
-                F.lit(detail).alias("detail"),
-                "__n",
-            )
-        )
-
-    from akvorado_spark.query.render import (
-        render_community_value,
-        render_large_community_value,
-    )
-
+    present = set(flows.columns)
     parts = [
-        unrolled(f"{side}Communities", render_community_value, "community"),
-        unrolled(f"{side}LargeCommunities", render_large_community_value, "large community"),
+        f"SELECT {render('__c')} AS label, '{detail}' AS detail, __n FROM (SELECT __c,"
+        f" count(1) AS __n FROM (SELECT explode(`{column}`) AS __c FROM {{flows}}) GROUP BY __c)"
+        for column, render, detail in (
+            (f"{side}Communities", render_community_value, "community"),
+            (f"{side}LargeCommunities", render_large_community_value, "large community"),
+        )
+        if column in present
     ]
-    parts = [p for p in parts if p is not None]
     if not parts:
         # neither community column exists on this frame (e.g. a rollup
         # table — both are MainOnly): empty completion, not a crash
-        return flows.sparkSession.createDataFrame(
-            [], "label string, detail string"
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return (
-        out.filter(F.col("label").startswith(prefix))
-        .orderBy(F.desc("__n"), "label")
-        .limit(limit)
-        .select("label", "detail")
+        return run(flows.sparkSession, "SELECT CAST(NULL AS STRING) AS label,"
+                   " CAST(NULL AS STRING) AS detail LIMIT 0")
+    text = (
+        f"SELECT label, detail FROM ({' UNION ALL '.join(parts)})"
+        f" WHERE startswith(label, {sql_literal(prefix)}) ORDER BY __n DESC, label LIMIT {limit}"
     )
+    return run(flows.sparkSession, text, flows=flows)
 
 
 def complete_network_attr(
@@ -349,15 +315,12 @@ def complete_network_attr(
     408-432): DISTINCT values of ``attribute`` (name/role/site/region/
     tenant) from the networks dimension table, prefix-matched
     case-insensitively, ordered by value."""
-    col = F.col(attribute).alias("label")
-    return (
-        networks.select(col)
-        .filter(_match_pos(F.col("label"), prefix) > 0)
-        .distinct()
-        .orderBy("label")
-        .limit(limit)
-        .select("label", F.lit("network name").alias("detail"))
+    text = (
+        f"SELECT label, 'network name' AS detail FROM (SELECT DISTINCT `{attribute}` AS label"
+        f" FROM {{networks}} WHERE {_match_pos_sql(f'`{attribute}`', prefix)} > 0)"
+        f" ORDER BY label LIMIT {limit}"
     )
+    return run(networks.sparkSession, text, networks=networks)
 
 
 def complete_icmp(
@@ -367,44 +330,27 @@ def complete_icmp(
     ICMP values seen in recent flows of the right protocol (rank 1,
     most-used first) unioned with the ICMP dictionary's names for that
     protocol (rank 2, prefix position then type/code order)."""
-    from akvorado_spark.sources.dictionaries import ICMP
-    from akvorado_spark.sources.tables import local_df
-
     proto = 58 if v6 else 1
     col = "ICMPv6" if v6 else "ICMPv4"
-    spark = flows.sparkSession
-
-    seen = None
+    pos = _match_pos_sql("label", prefix)
+    dico = _values([(name, t, c) for (p, t, c, name) in ICMP if p == proto], "label, t, c")
+    ctes = {"__dico": f"SELECT * FROM ({dico}) WHERE {pos} > 0"}
+    branches, frames = [], {}
     if col in flows.columns:
-        seen = (
-            flows.filter((F.col("Proto") == proto) & (F.col(col) != ""))
-            .select(F.col(col).alias("label"))
-            .filter(_match_pos(F.col("label"), prefix) > 0)
-            .groupBy("label")
-            .agg(F.count(F.lit(1)).alias("__n"))
+        ctes["__seen"] = (
+            f"SELECT label, count(1) AS __n FROM (SELECT `{col}` AS label FROM {{flows}}"
+            f" WHERE Proto = {proto} AND `{col}` != '') WHERE {pos} > 0 GROUP BY label"
         )
-        seen = _top_with_ord(
-            seen, [F.desc("__n"), F.asc("label")], limit
-        ).select("label", F.lit(1).alias("rank"), "ord")
-
-    dico_rows = [
-        (name, t, c) for (p, t, c, name) in ICMP if p == proto
-    ]
-    dico = local_df(spark, dico_rows, "label string, t int, c int").filter(
-        _match_pos(F.col("label"), prefix) > 0
+        branches.append(
+            "SELECT label, 'ICMP' AS detail, 1 AS rank, ord"
+            f" FROM ({_top_sql('__seen', '__n DESC, label', limit)})"
+        )
+        frames["flows"] = flows
+    branches.append(
+        "SELECT label, 'ICMP' AS detail, 2 AS rank, ord"
+        f" FROM ({_top_sql('__dico', f'{pos}, t, c', limit)})"
     )
-    dico = _top_with_ord(
-        dico, [_match_pos(F.col("label"), prefix).asc(), F.asc("t"), F.asc("c")], limit
-    ).select("label", F.lit(2).alias("rank"), "ord")
-
-    u = dico if seen is None else seen.unionByName(dico)
-    return (
-        u.groupBy("label")
-        .agg(F.min("rank").alias("__r"), F.min("ord").alias("__o"))
-        .orderBy("__r", "__o", "label")
-        .limit(limit)
-        .select("label", F.lit("ICMP").alias("detail"))
-    )
+    return run(flows.sparkSession, _ranked_union_sql(ctes, branches, limit), **frames)
 
 
 def complete_comparable_columns(
@@ -454,21 +400,16 @@ def complete_dimension_attribute(
     startsWith-matched, ordered, LIMIT 20.  Serves any generated
     custom-dict attribute column (sources/custom_dict.py) the schema
     exposes."""
-    df = flows
+    src = "{flows}"
     if recent is not None and time_col in flows.columns:
-        cutoff = F.max(F.col(time_col)) - F.expr(f"INTERVAL {recent}")
-        bound = flows.agg(cutoff.alias("__cut"))
-        df = flows.join(F.broadcast(bound)).filter(
-            F.col(time_col) > F.col("__cut")
+        src = (
+            f"(SELECT /*+ BROADCAST(b) */ f.* FROM {{flows}} f JOIN (SELECT max(`{time_col}`)"
+            f" - INTERVAL {recent} AS __cut FROM {{flows}}) b ON f.`{time_col}` > b.__cut)"
         )
-    return (
-        df.select(F.col(column).alias("label"))
-        .filter(
-            F.col("label").isNotNull()
-            & F.lower(F.col("label")).startswith(prefix.lower())
-        )
-        .distinct()
-        .orderBy("label")
-        .limit(limit)
-        .select("label", F.lit("attribute value").alias("detail"))
+    text = (
+        f"SELECT label, 'attribute value' AS detail FROM (SELECT DISTINCT `{column}` AS label"
+        f" FROM {src} WHERE `{column}` IS NOT NULL"
+        f" AND startswith(lower(`{column}`), {sql_literal(prefix.lower())}))"
+        f" ORDER BY label LIMIT {limit}"
     )
+    return run(flows.sparkSession, text, flows=flows)

@@ -25,14 +25,15 @@ from dataclasses import dataclass
 from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructField, StructType
 
-from akvorado_spark.filtering import compile_filter, flow_filter_schema
+from akvorado_spark.filtering import FilterSchema, compile_filter, flow_filter_schema
 from akvorado_spark.functions.ip import ip_truncate_family, register_sql_functions
 from akvorado_spark.plans.rollup import FlowStore, Resolution
 from akvorado_spark.query.line import LineRequest, line_sql, top_rows_sql
 from akvorado_spark.query.sankey import SankeyRequest, range_sql, sankey_sql
 from akvorado_spark.query.sankey import top_rows_sql as sankey_rows_sql
-from akvorado_spark.query.sql import bigint, run, with_ctes
+from akvorado_spark.query.sql import bigint, run, string_dims, with_ctes
 from akvorado_spark.query.units import UNITS
 
 # only the percentage-of-interface units are directional
@@ -147,11 +148,10 @@ def _axis_source(
     return f"SELECT {', '.join(items)} FROM ({viewed}) WHERE {filt.spark_sql}"
 
 
-def _string_dims(store: FlowStore, dims) -> set[str]:
-    return {
-        d for d in dims
-        if store.schema.by_name[d].dtype.simpleString() in ("string", "binary")
-    }
+def _view_schema(store: FlowStore) -> StructType:
+    """The columns an axis source can carry: the stored ones and the
+    aliases computed on read, with their declared types."""
+    return StructType([StructField(c.name, c.dtype) for c in store.schema.enabled()])
 
 
 def _shown(store: FlowStore, actual: str, name: str) -> str:
@@ -176,16 +176,35 @@ def _unit(units: str, res: Resolution) -> tuple[str, tuple[str, ...], str]:
     return unit.agg_sql, unit.base_cols, unit.value_type
 
 
+def route(
+    store: FlowStore,
+    start: datetime,
+    end: datetime,
+    points: int,
+    filter_text: str = "",
+    dimensions: tuple[str, ...] = (),
+    schema: FilterSchema | None = None,
+):
+    """The rollup router's decision for a query charted on ``points``
+    points: (the filter compiled with ``schema``, the flows filter
+    schema by default; the table; the snapped interval).  A MainOnly
+    column in the filter or the dimensions routes to the main table
+    (P10)."""
+    direct = compile_filter(filter_text, schema or flow_filter_schema())
+    main_only = store.schema.main_only_names()
+    require_main = direct.requires_main_table or any(d in main_only for d in dimensions)
+    target = max(int((end - start).total_seconds() // points), 1)
+    res, interval_s = store.best_table(start, end, target, require_main)
+    return direct, res, interval_s
+
+
 def _route(store: FlowStore, req: GraphRequest, points: int):
     """(filter schema, direct filter, table, interval, aligned start,
     aligned end) of a request charted on ``points`` points."""
     sch = flow_filter_schema()
-    direct = compile_filter(req.filter, sch)
-    # main-table analysis over filter + dimensions (P10)
-    main_only = store.schema.main_only_names()
-    require_main = direct.requires_main_table or any(d in main_only for d in req.dimensions)
-    target = max(int((req.end - req.start).total_seconds() // points), 1)
-    res, interval_s = store.best_table(req.start, req.end, target, require_main)
+    direct, res, interval_s = route(
+        store, req.start, req.end, points, req.filter, req.dimensions, sch
+    )
     # one aligned range shared by every axis (shifted axes keep its
     # length, so all axes draw the same number of points)
     return (sch, direct, res, interval_s,
@@ -250,7 +269,7 @@ def graph_line(store: FlowStore, req: GraphRequest) -> DataFrame:
             rows = "(SELECT {} FROM __rows1)".format(", ".join(
                 f"`{orig}` AS `{actual}`" for orig, actual in zip(req.dimensions, dims)
             ))
-        line = line_sql(lreq, src, _string_dims(store, axis_dims), rows=rows)
+        line = line_sql(lreq, src, string_dims(_view_schema(store), axis_dims), rows=rows)
         if axis_dims:
             # normalize dimension names across axes (reverse swaps them)
             shown = [_shown(store, a, o) for o, a in zip(req.dimensions, axis_dims)]
@@ -308,7 +327,7 @@ def graph_sankey(store: FlowStore, req: GraphRequest) -> DataFrame:
     selects = []
     for axis_no, sreq in axes:
         sankey = sankey_sql(
-            sreq, f"__src{axis_no}", _string_dims(store, sreq.dimensions),
+            sreq, f"__src{axis_no}", string_dims(_view_schema(store), sreq.dimensions),
             rows="__rows1", rows_cols=req.dimensions, rng="__rng1",
         )
         # the reverse axis names its dimensions forward, positionally

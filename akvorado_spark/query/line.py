@@ -297,7 +297,7 @@ def compile_line(
     frame (see :func:`top_rows_frame`)."""
     frames = {"rows": rows} if rows is not None else {}
     refs = {k: f"{{{k}}}" for k in frames}
-    text = line_sql(req, "{src}", string_dims(df, req.dimensions), ordered=ordered, **refs)
+    text = line_sql(req, "{src}", string_dims(df.schema, req.dimensions), ordered=ordered, **refs)
     return run(df.sparkSession, text, src=df, **frames)
 
 

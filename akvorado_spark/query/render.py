@@ -1,9 +1,9 @@
 """Dimension display rendering (SURVEY §2.2 P11;
 reference console/query/column.go:106-256).
 
-Every dimension type gets the reference's display form, as pure
-`pyspark.sql.functions` column expressions (codegen-resident, no
-Python UDFs):
+Every dimension type gets the reference's display form, as Spark SQL
+text over SQL operands (codegen-resident, no Python UDFs); callers
+splice it into a statement or wrap it in ``F.expr``:
 
 - AS numbers   → ``"<n>: <name>"`` with '???' fallback (dictionary)
 - EType        → 'IPv4' / 'IPv6' / '???'
@@ -19,10 +19,9 @@ Python UDFs):
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from akvorado_spark.sources.dictionaries import (
+    ASNS,
+    ICMP,
     PROTOCOLS,
     TCP_PORTS,
     UDP_PORTS,
@@ -37,83 +36,65 @@ ETYPE_IPV6 = 0x86DD
 TCP_FLAG_CHARS = ["F", "S", "R", "P", ".", "U", "E", "C", "N"]
 
 
-def render_asn(asn: Column, names: list[tuple[int, str]] | None = None) -> Column:
+def render_asn(asn: str, names: list[tuple[int, str]] | None = None) -> str:
     """``concat(toString(x), ': ', dictGetOrDefault(asns, name, x, '???'))``"""
-    from akvorado_spark.sources.dictionaries import ASNS
-
-    return F.concat(
-        asn.cast("string"), F.lit(": "), map_lookup(names or ASNS, asn, "???")
-    )
+    return f"concat(CAST({asn} AS STRING), ': ', {map_lookup(names or ASNS, asn, '???')})"
 
 
-def icmp_render(proto: Column, typ: Column, code: Column) -> Column:
+def icmp_render(proto: str, typ: str, code: str) -> str:
     """Composite-key ICMP name (J2; reference
     common/schema/definition.go:463-484): tuple(proto, type, code)
-    probed against the icmp dictionary, '' fallback."""
-    from akvorado_spark.sources.dictionaries import icmp_lookup
+    probed against the icmp dictionary as key proto*65536+type*256+code,
+    '' fallback."""
+    pairs = [(p * 65536 + t * 256 + c, name) for (p, t, c, name) in ICMP]
+    return map_lookup(pairs, f"({proto}) * 65536 + ({typ}) * 256 + ({code})", "")
 
-    return icmp_lookup(proto, typ, code, "")
 
-
-def render_etype(etype: Column) -> Column:
+def render_etype(etype: str) -> str:
     return (
-        F.when(etype == ETYPE_IPV4, F.lit("IPv4"))
-        .when(etype == ETYPE_IPV6, F.lit("IPv6"))
-        .otherwise(F.lit("???"))
+        f"CASE WHEN {etype} = {ETYPE_IPV4} THEN 'IPv4'"
+        f" WHEN {etype} = {ETYPE_IPV6} THEN 'IPv6' ELSE '???' END"
     )
 
 
-def render_proto(proto: Column) -> Column:
+def render_proto(proto: str) -> str:
     return map_lookup(PROTOCOLS, proto, "???")
 
 
-def render_port(port: Column, proto: Column) -> Column:
+def render_port(port: str, proto: str) -> str:
     """``multiIf(proto=6, '<p>/<tcp-name>', proto=17, '<p>/<udp-name>',
     toString(p))`` with the trailing slash stripped when unnamed
     (reference column.go:166-185)."""
-    named_tcp = F.concat(port.cast("string"), F.lit("/"), map_lookup(TCP_PORTS, port, ""))
-    named_udp = F.concat(port.cast("string"), F.lit("/"), map_lookup(UDP_PORTS, port, ""))
-    raw = (
-        F.when(proto == 6, named_tcp)
-        .when(proto == 17, named_udp)
-        .otherwise(port.cast("string"))
+    named_tcp = f"concat(CAST({port} AS STRING), '/', {map_lookup(TCP_PORTS, port, '')})"
+    named_udp = f"concat(CAST({port} AS STRING), '/', {map_lookup(UDP_PORTS, port, '')})"
+    return (
+        f"regexp_replace(CASE WHEN {proto} = 6 THEN {named_tcp}"
+        f" WHEN {proto} = 17 THEN {named_udp}"
+        f" ELSE CAST({port} AS STRING) END, '/$', '')"
     )
-    return F.regexp_replace(raw, "/$", "")
 
 
-def render_tcp_flags(flags: Column) -> Column:
+def render_tcp_flags(flags: str) -> str:
     """Bit-positional flag string: set bits contribute their char."""
     parts = [
-        F.when(flags.bitwiseAND(F.lit(1 << bit)) != 0, F.lit(ch)).otherwise(F.lit(""))
+        f"CASE WHEN ({flags} & {1 << bit}) != 0 THEN '{ch}' ELSE '' END"
         for bit, ch in enumerate(TCP_FLAG_CHARS)
     ]
-    return F.concat(*parts)
+    return f"concat({', '.join(parts)})"
 
 
-def render_mac(mac: Column) -> Column:
+def render_mac(mac: str) -> str:
     """MACNumToString: 48-bit int → 'aa:bb:cc:dd:ee:ff'."""
     octets = [
-        F.lpad(F.lower(F.hex(F.shiftright(mac, shift).bitwiseAND(F.lit(0xFF)))), 2, "0")
+        f"lpad(lower(hex(shiftright({mac}, {shift}) & 255)), 2, '0')"
         for shift in (40, 32, 24, 16, 8, 0)
     ]
-    return F.concat_ws(":", *octets)
+    return f"concat_ws(':', {', '.join(octets)})"
 
 
-def render_as_path(path: Column) -> Column:
+def render_as_path(path: str) -> str:
     """arrayStringConcat(path, ' ')"""
-    return F.array_join(path.cast("array<string>"), " ")
-
-
-def compact_path(path: str) -> Column:
-    """``arrayCompact`` over the SQL operand ``path``: drop *consecutive*
-    duplicates (reference raw→main MV,
-    orchestrator/clickhouse/migrations_helpers.go:380-384).  Pure SQL:
-    keep element i when i=1 or path[i] != path[i-1]."""
-    kept = (
-        f"filter(sequence(1, size({path})),"
-        f" i -> i = 1 OR element_at({path}, i) != element_at({path}, i - 1))"
-    )
-    return F.expr(f"transform({kept}, i -> element_at({path}, i))")
+    return f"array_join(CAST({path} AS ARRAY<STRING>), ' ')"
 
 
 def render_community_value(c: str) -> str:
@@ -132,24 +113,24 @@ def render_large_community_value(c: str) -> str:
     )
 
 
-def render_communities(comm: str) -> Column:
+def render_communities(comm: str) -> str:
     """``arrayMap(c -> concat(toString(shiftright(c,16)), ':',
     toString(bitAnd(c, 0xffff))), comm)`` → space-joined."""
-    return F.expr(f"array_join(transform({comm}, c -> {render_community_value('c')}), ' ')")
+    return f"array_join(transform({comm}, c -> {render_community_value('c')}), ' ')"
 
 
-def render_large_communities(comm: str) -> Column:
+def render_large_communities(comm: str) -> str:
     """Large communities → space-joined 'asn:l1:l2' strings."""
-    return F.expr(f"array_join(transform({comm}, c -> {render_large_community_value('c')}), ' ')")
+    return f"array_join(transform({comm}, c -> {render_large_community_value('c')}), ' ')"
 
 
-def render_communities_dim(comm: str, large: str) -> Column:
+def render_communities_dim(comm: str, large: str) -> str:
     """The ``Communities`` DIMENSION renders regular and large
     communities as ONE space-joined string — ``arrayStringConcat(
     arrayConcat(arrayMap(...,Communities), arrayMap(...,
     LargeCommunities)), ' ')`` (console/query/column_test.go:90-96) —
     so a flow's full community set groups as a single value."""
-    return F.expr(
+    return (
         f"array_join(concat(transform({comm}, c -> {render_community_value('c')}),"
         f" transform({large}, c -> {render_large_community_value('c')})), ' ')"
     )

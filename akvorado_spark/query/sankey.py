@@ -161,7 +161,7 @@ def compile_sankey(
     of the forward axis, as there."""
     frames = {k: v for k, v in (("rows", rows), ("rng", rng)) if v is not None}
     refs = {k: f"{{{k}}}" for k in frames}
-    text = sankey_sql(req, "{src}", string_dims(df, req.dimensions), rows_cols=rows_cols, **refs)
+    text = sankey_sql(req, "{src}", string_dims(df.schema, req.dimensions), rows_cols=rows_cols, **refs)
     return run(df.sparkSession, text, src=df, **frames)
 
 

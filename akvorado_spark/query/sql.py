@@ -9,6 +9,7 @@ py4j commands instead of one round trip per DataFrame operation.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 
 def bigint(n: int) -> str:
@@ -25,11 +26,10 @@ def cols(names) -> str:
     return ", ".join(f"`{n}`" for n in names)
 
 
-def string_dims(df: DataFrame, dims) -> set[str]:
-    """The dimensions of ``df`` that fold as they are (string and
-    binary); the others fold through their display string."""
-    dtypes = dict(df.dtypes) if dims else {}
-    return {d for d in dims if dtypes[d] in ("string", "binary")}
+def string_dims(schema: StructType, dims) -> set[str]:
+    """The dimensions that fold as they are in a source of ``schema``
+    (string and binary); the others fold through their display string."""
+    return {d for d in dims if schema[d].dataType.simpleString() in ("string", "binary")}
 
 
 def with_ctes(ctes: dict[str, str], body: str) -> str:

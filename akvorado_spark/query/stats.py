@@ -21,7 +21,8 @@ which is what ``compile_line(fill=True)`` produces.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from akvorado_spark.query.sql import cols, run
 
 
 def series_stats(
@@ -31,37 +32,25 @@ def series_stats(
     value_col: str = "sum_w",
     bucket_col: str = "bucket",
 ) -> DataFrame:
-    """Aggregate a filled line frame into one stats row per series."""
-    v = F.col(value_col)
-    last_excl = line.agg(F.max(bucket_col).alias("__maxb"))
-    base = line.join(F.broadcast(last_excl))
-
-    return (
-        base.groupBy(*dims)
-        .agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.sum(v).alias("__sum"),
-            F.coalesce(F.min(F.when(v > 0, v)), F.lit(0)).cast("long").alias("min_v"),
-            F.max(v).cast("long").alias("max_v"),
-            F.expr(
-                f"max_by({value_col}, CASE WHEN {bucket_col} < __maxb "
-                f"THEN {bucket_col} ELSE NULL END)"
-            )
-            .cast("long")
-            .alias("last_v"),
-            F.round(F.expr(f"percentile({value_col}, 0.95)")).cast("long").alias("p95"),
-        )
-        .select(
-            *dims,
-            F.floor(F.col("__sum") / F.col("__n")).cast("long").alias("average"),
-            (F.col("__sum") * interval_s).cast("long").alias("total"),
-            "min_v",
-            "max_v",
-            "last_v",
-            "p95",
-        )
-        .orderBy(*dims)
-    )
+    """Aggregate a filled line frame into one stats row per series, as
+    one statement."""
+    v, b = f"`{value_col}`", f"`{bucket_col}`"
+    lead = "".join(f"`{d}`, " for d in dims)
+    order = f" ORDER BY {cols(dims)}" if dims else ""
+    text = f"""
+SELECT {lead}CAST(floor(__sum / __n) AS BIGINT) AS average,
+       CAST(__sum * {int(interval_s)} AS BIGINT) AS total,
+       min_v, max_v, last_v, p95
+FROM (
+  SELECT /*+ BROADCAST(mx) */ {lead}count(1) AS __n, sum({v}) AS __sum,
+         CAST(coalesce(min(CASE WHEN {v} > 0 THEN {v} END), 0) AS BIGINT) AS min_v,
+         CAST(max({v}) AS BIGINT) AS max_v,
+         CAST(max_by({v}, CASE WHEN {b} < __maxb THEN {b} ELSE NULL END) AS BIGINT) AS last_v,
+         CAST(round(percentile({v}, 0.95)) AS BIGINT) AS p95
+  FROM {{line}} JOIN (SELECT max({b}) AS __maxb FROM {{line}}) mx
+  GROUP BY ALL
+){order}"""
+    return run(line.sparkSession, text, line=line)
 
 
 def oracle_series_stats_sql(

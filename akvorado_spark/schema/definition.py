@@ -163,7 +163,7 @@ def _base_columns() -> list[FlowColumn]:
         # --- optional L3/L4 + MPLS + VRF registry columns, disabled by
         # default (reference definition.go:453-537); the ICMP display
         # aliases use the type/code fallback form — dictionary-name
-        # rendering is the render layer's icmp_lookup (J2), where the
+        # rendering is the render layer's icmp_render (J2), where the
         # reference's dictGetOrDefault also lives ---
         FlowColumn("IPTTL", i32, disabled=True),
         FlowColumn("IPTos", i32, disabled=True),
@@ -332,7 +332,7 @@ class FlowSchema:
         reference's `_raw_consumer` MV (migrations_helpers.go:368-406):
         Dst1st/2nd/3rdAS from the consecutive-dedup'd AS path — plus
         any Materialized alias columns (root.go:38-52)."""
-        df = df.withColumn("__compacted_path__", array_compact("DstASPath"))
+        df = df.withColumn("__compacted_path__", F.expr(array_compact("DstASPath")))
         for c in self.enabled():
             if c.generated:
                 df = df.withColumn(c.name, F.expr(c.generated).cast(c.dtype))

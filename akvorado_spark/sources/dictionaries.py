@@ -7,7 +7,7 @@ generated query then calls ``dictGetOrDefault``.
 
 Spark-first: a hashed dictionary probe has two idiomatic forms —
 
-- **literal map** (``F.element_at(create_map(...), key)``) for the
+- **literal map** (``element_at(map(...), key)``) for the
   small built-in dictionaries (≤ a few hundred entries): the lookup
   compiles into the row expression, stays inside whole-stage codegen,
   and never touches the shuffle or broadcast machinery;
@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from akvorado_spark.functions.arrays import sql_literal
 
 # IANA protocol numbers (subset)
 PROTOCOLS: list[tuple[int, str]] = [
@@ -77,24 +79,12 @@ ASNS: list[tuple[int, str]] = [
 ]
 
 
-def _to_map(pairs: list[tuple]) -> Column:
-    lits: list[Column] = []
-    for k, v in pairs:
-        lits.append(F.lit(k))
-        lits.append(F.lit(v))
-    return F.create_map(*lits)
-
-
-def map_lookup(pairs: list[tuple], key: Column, fallback: str | Column) -> Column:
-    """dictGetOrDefault as a literal-map probe (codegen-resident)."""
-    fb = F.lit(fallback) if isinstance(fallback, str) else fallback
-    return F.coalesce(F.element_at(_to_map(pairs), key), fb)
-
-
-def icmp_lookup(proto: Column, typ: Column, code: Column, fallback: str = "") -> Column:
-    """Composite-key dictionary probe (J2): key = proto*65536+type*256+code."""
-    pairs = [(p * 65536 + t * 256 + c, name) for (p, t, c, name) in ICMP]
-    return map_lookup(pairs, proto * 65536 + typ * 256 + code, fallback)
+def map_lookup(pairs: list[tuple], key: str, fallback: str) -> str:
+    """dictGetOrDefault as a literal-map probe (codegen-resident): SQL
+    text probing one ``map(…)`` literal with the SQL operand ``key``,
+    the string ``fallback`` when the key is absent."""
+    entries = ", ".join(f"{sql_literal(k)}, {sql_literal(v)}" for k, v in pairs)
+    return f"coalesce(element_at(map({entries}), {key}), {sql_literal(fallback)})"
 
 
 def dict_df(spark: SparkSession, pairs: list[tuple], schema: str) -> DataFrame:

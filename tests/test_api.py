@@ -26,14 +26,20 @@ def test_validate_filter():
     assert not unknown.ok
 
 
-def test_table_interval_routing(spark, tmp_path):
+@pytest.fixture(scope="module")
+def rolled_store(spark, tmp_path_factory):
     from akvorado_spark.plans.rollup import FlowStore
     from akvorado_spark.schema.definition import flows_schema
     from akvorado_spark.sources.fixtures import flows_df
 
-    store = FlowStore(spark, str(tmp_path / "ti_store"))
+    store = FlowStore(spark, str(tmp_path_factory.mktemp("ti_store")))
     store.write_main(flows_schema().ingest(flows_df(spark, n=2000)))
     store.build_rollups()
+    return store
+
+
+def test_table_interval_routing(rolled_store):
+    store = rolled_store
     # start a clear resolution bucket after the data begins (reference
     # coverage rule: start > oldest + resolution)
     start = datetime(2024, 1, 2, tzinfo=timezone.utc)
@@ -55,6 +61,21 @@ def test_table_interval_routing(spark, tmp_path):
     # 2000 points → 43 s target → raw resolution required
     r = table_interval(store, start, end, points=2000)
     assert r["main_table"]
+
+
+def test_table_interval_filter_routes_like_graph_line(rolled_store):
+    """With no ``schema``, the filter still counts: it compiles with
+    the flows filter schema, as graph_line's does, so a MainOnly filter
+    reports the main table graph_line reads."""
+    from akvorado_spark.query.graph import GraphRequest, _route
+
+    start = datetime(2024, 1, 2, tzinfo=timezone.utc)
+    end = datetime(2024, 1, 3, tzinfo=timezone.utc)
+    r = table_interval(rolled_store, start, end, points=24, filter_text="SrcPort = 443")
+    assert r["main_table"]
+    req = GraphRequest(start=start, end=end, dimensions=(), filter="SrcPort = 443", points=24)
+    _, _, res, interval_s, *_ = _route(rolled_store, req, req.points)
+    assert (r["table"], r["interval_s"]) == (res.table_name, interval_s)
 
 
 def test_saved_filters_crud(tmp_path):

@@ -5,8 +5,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from akvorado_spark.functions.arrays import array_compact
 from akvorado_spark.query.render import (
-    compact_path,
     icmp_render,
     render_asn,
     render_communities,
@@ -20,45 +20,45 @@ from akvorado_spark.query.widgets import flow_rate, last_flow, top_percent
 from akvorado_spark.sources.dictionaries import asns_df, dict_join
 
 
-def _one(spark, expr):
-    return spark.range(1).select(expr.alias("v")).collect()[0]["v"]
+def _one(spark, sql):
+    return spark.range(1).select(F.expr(sql).alias("v")).collect()[0]["v"]
 
 
 def test_render_proto_and_port(spark):
-    assert _one(spark, render_proto(F.lit(6))) == "TCP"
-    assert _one(spark, render_proto(F.lit(255))) == "???"
-    assert _one(spark, render_port(F.lit(443), F.lit(6))) == "443/https"
-    assert _one(spark, render_port(F.lit(4444), F.lit(6))) == "4444"  # slash stripped
-    assert _one(spark, render_port(F.lit(53), F.lit(17))) == "53/domain"
-    assert _one(spark, render_port(F.lit(53), F.lit(1))) == "53"  # not TCP/UDP
+    assert _one(spark, render_proto("6")) == "TCP"
+    assert _one(spark, render_proto("255")) == "???"
+    assert _one(spark, render_port("443", "6")) == "443/https"
+    assert _one(spark, render_port("4444", "6")) == "4444"  # slash stripped
+    assert _one(spark, render_port("53", "17")) == "53/domain"
+    assert _one(spark, render_port("53", "1")) == "53"  # not TCP/UDP
 
 
 def test_render_tcp_flags_bit_positions(spark):
     # SYN+ACK = bits 1 and 4 → "S."
-    assert _one(spark, render_tcp_flags(F.lit(0b10010))) == "S."
-    assert _one(spark, render_tcp_flags(F.lit(0))) == ""
-    assert _one(spark, render_tcp_flags(F.lit(0b111111111))) == "FSRP.UECN"
+    assert _one(spark, render_tcp_flags(str(0b10010))) == "S."
+    assert _one(spark, render_tcp_flags("0")) == ""
+    assert _one(spark, render_tcp_flags(str(0b111111111))) == "FSRP.UECN"
 
 
 def test_render_mac(spark):
-    assert _one(spark, render_mac(F.lit(0x0000DEADBEEF00))) == "00:de:ad:be:ef:00"
+    assert _one(spark, render_mac(str(0x0000DEADBEEF00))) == "00:de:ad:be:ef:00"
 
 
 def test_compact_path_drops_consecutive_dups_only(spark):
-    out = _one(spark, render_as_path(compact_path("array(64512, 64512, 64513, 64512)")))
+    out = _one(spark, render_as_path(array_compact("array(64512, 64512, 64513, 64512)")))
     assert out == "64512 64513 64512"  # non-consecutive dup survives
 
 
 def test_render_communities_and_icmp(spark):
     comm = f"array(CAST({65000 * 65536 + 100} AS BIGINT))"
     assert _one(spark, render_communities(comm)) == "65000:100"
-    assert _one(spark, icmp_render(F.lit(1), F.lit(8), F.lit(0))) == "echo"
-    assert _one(spark, icmp_render(F.lit(1), F.lit(99), F.lit(0))) == ""
+    assert _one(spark, icmp_render("1", "8", "0")) == "echo"
+    assert _one(spark, icmp_render("1", "99", "0")) == ""
 
 
 def test_render_asn_fallback(spark):
-    assert _one(spark, render_asn(F.lit(15169))) == "15169: Google"
-    assert _one(spark, render_asn(F.lit(4))) == "4: ???"
+    assert _one(spark, render_asn("15169")) == "15169: Google"
+    assert _one(spark, render_asn("4")) == "4: ???"
 
 
 def test_dict_join_broadcast(spark):

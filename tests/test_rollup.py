@@ -471,6 +471,18 @@ def test_graph_line_filter_on_alias_column(store):
     assert out
 
 
+def test_graph_alias_dimension_folds_as_a_string(store):
+    """An alias (computed-on-read) dimension is not stored in any table;
+    its declared string type still lets it fold as it is."""
+    from akvorado_spark.query.graph import graph_sankey
+
+    req = GraphRequest(start=START, end=END, dimensions=("PacketSizeBucket",),
+                       units="l3bps", points=24, limit=2)
+    for out in (graph_line(store, req).collect(), graph_sankey(store, req).collect()):
+        assert out and all(isinstance(r["PacketSizeBucket"], str) for r in out)
+        assert "Other" in {r["PacketSizeBucket"] for r in out}
+
+
 def test_graph_line_previous_period_bool_derives_from_span(store):
     """previous_period=True is the reference API: the shift derives
     from the range span (a 6h range → nearest period = day)."""

@@ -33,7 +33,7 @@ def test_array_compact(spark):
     df = spark.createDataFrame(
         [([1, 1, 2, 2, 1, 3],), ([5],), ([],), ([7, 7, 7],)], "a array<long>"
     )
-    out = [r["c"] for r in df.select(array_compact("a").alias("c")).collect()]
+    out = [r["c"] for r in df.select(F.expr(array_compact("a")).alias("c")).collect()]
     assert out == [[1, 2, 1, 3], [5], [], [7]]
 
 
